@@ -15,6 +15,9 @@ confs to spark-submit; the job code is identical (the session is
 obtained via ``SparkSession.builder.getOrCreate`` so submit-time confs
 win).  The run is resumable: re-submitting with the same ``--output``
 skips completed buckets via the manifest (per-partition lineage).
+The printed JSON summary carries per-bucket counters and the
+``batches`` of buckets the run executed, one Spark job each; a resume
+must use the same ``--n-buckets``.
 """
 
 from __future__ import annotations
