@@ -1,1 +1,1 @@
-from . import assemble, preprocess, rasterize, recognize  # noqa: F401
+from . import assemble, preprocess, recognize  # noqa: F401

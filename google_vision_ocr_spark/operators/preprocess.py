@@ -6,25 +6,19 @@ Reference chain (``ocr_service.py:70-94``): grayscale
 preprocessing (:173-174) and keeps the source format when it is in
 {PNG, JPEG, BMP, TIFF}, else re-encodes to PNG (:177-179).
 
-All steps are scalar ``pandas_udf``s over Arrow batches — binary in,
-binary out — so the whole chain stays vectorized (input_hint: "no
-per-row Python").  The north-star extensions (Otsu binarization,
-deskew, DPI normalization) are real numpy implementations behind
-explicit opt-in flags, default **off** to preserve reference-identical
-bytes.
+The chain itself runs in the extraction kernel's recognize half
+(``plans/fused.make_recognize_item``): grayscale and PNG encode come
+from ``formats``; this module holds the north-star extensions (Otsu
+binarization, deskew, DPI normalization) — real numpy implementations
+behind explicit opt-in flags, default **off** to preserve
+reference-identical bytes.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
 
 from .. import formats
-
-# --- core numpy kernels (shared with the oracle via formats) ---------------
 
 
 def _otsu_threshold(gray: np.ndarray) -> int:
@@ -84,84 +78,3 @@ def dpi_normalize(gray: np.ndarray, target_width: int = formats.PAGE_WIDTH) -> n
     ys = np.minimum((np.arange(new_h) / scale).astype(np.int64), h - 1)
     xs = np.minimum((np.arange(target_width) / scale).astype(np.int64), w - 1)
     return gray[np.ix_(ys, xs)]
-
-
-# --- pandas UDFs ------------------------------------------------------------
-
-
-@F.pandas_udf(BinaryType())
-def grayscale_udf(images: pd.Series) -> pd.Series:
-    """SIMG RGB → SIMG gray (cv2-exact luma; ``ocr_service.py:61-63``)."""
-
-    def one(payload: bytes | None) -> bytes | None:
-        if payload is None:
-            return None
-        arr = formats.decode_simg(bytes(payload))
-        if arr.ndim == 2:
-            return bytes(payload)  # already gray
-        return formats.encode_simg(formats.rgb_to_gray(arr))
-
-    return images.map(one, na_action="ignore")
-
-
-@F.pandas_udf(BinaryType())
-def png_encode_udf(images: pd.Series) -> pd.Series:
-    """SIMG → PNG bytes (``ocr_service.py:83-86``)."""
-    return images.map(
-        lambda p: formats.encode_png(formats.decode_simg(bytes(p))), na_action="ignore"
-    )
-
-
-def make_enhance_udf(otsu: bool = False, do_deskew: bool = False, dpi: bool = False):
-    """Optional north-star chain over SIMG gray rasters (default off)."""
-
-    @F.pandas_udf(BinaryType())
-    def enhance_udf(images: pd.Series) -> pd.Series:
-        def one(payload: bytes) -> bytes:
-            arr = formats.decode_simg(bytes(payload))
-            if arr.ndim != 2:
-                arr = formats.rgb_to_gray(arr)
-            if dpi:
-                arr = dpi_normalize(arr)
-            if do_deskew:
-                arr = deskew(arr)
-            if otsu:
-                arr = otsu_binarize(arr)
-            return formats.encode_simg(arr)
-
-        return images.map(one, na_action="ignore")
-
-    return enhance_udf
-
-
-@F.pandas_udf(BinaryType())
-def normalize_image_format_udf(payloads: pd.Series) -> pd.Series:
-    """T3 keep-format-else-PNG rule for the no-preprocess image path
-    (``ocr_service.py:177-179``): PNG/JPEG/BMP/TIFF pass through, GIF
-    is re-encoded to PNG, anything else passes through to fail
-    downstream as error-as-data."""
-
-    def one(payload: bytes) -> bytes:
-        payload = bytes(payload)
-        fmt = formats.sniff_format(payload)
-        if fmt in ("PNG", "JPEG", "BMP", "TIFF"):
-            return payload
-        if fmt == "GIF":
-            return formats.encode_png(formats.decode_gif_gray(payload))
-        return payload
-
-    return payloads.map(one)
-
-
-def preprocess_chain(
-    df: DataFrame,
-    image_col: str = "image",
-    otsu: bool = False,
-    do_deskew: bool = False,
-    dpi: bool = False,
-) -> DataFrame:
-    """Apply grayscale [+ optional enhancements] + PNG encode."""
-    col: Column = grayscale_udf(F.col(image_col))
-    if otsu or do_deskew or dpi:
-        col = make_enhance_udf(otsu=otsu, do_deskew=do_deskew, dpi=dpi)(col)
-    return df.withColumn(image_col, png_encode_udf(col))

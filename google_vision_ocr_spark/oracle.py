@@ -70,7 +70,7 @@ def extract_pdf_text(url: str, payload: bytes, recognizer=None) -> ExtractResult
     try:
         page_texts = formats.decode_spdf(payload)
     except Exception:
-        # fault isolation mirror of the rasterizer (operators/rasterize.py)
+        # fault isolation mirror of the engine (plans/fused.explode)
         page_texts = None
     results: list[tuple[int, str, bool]] = []
     if page_texts is None:
@@ -108,7 +108,10 @@ def normalize_image_payload(payload: bytes) -> bytes:
     if fmt in KEEP_FORMATS:
         return payload
     if fmt == "GIF":
-        return formats.encode_png(formats.decode_gif_gray(payload))
+        try:
+            return formats.encode_png(formats.decode_gif_gray(payload))
+        except Exception:
+            pass  # undecodable GIF: passes through and fails in recognition
     return payload  # unknown formats pass through and fail in recognition
 
 

@@ -1,1 +1,1 @@
-from . import extract  # noqa: F401
+from . import fused  # noqa: F401

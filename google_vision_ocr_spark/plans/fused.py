@@ -1,42 +1,42 @@
-"""Scale-optimal fused extraction plan: ONE scan + TWO shuffles.
+"""Scale-optimal extraction plan: ONE scan + at most TWO shuffles, over
+ONE per-row kernel.
 
-The branched plan (``plans/extract.py``) is operator-per-stage and easy
-to test, but each of its five branches re-scans the input table — at
-10^12 rows that multiplies the most expensive I/O in the job (the
-``html`` payload column) by 5.  This fused plan restructures the same
-semantics into the minimal physical shape:
+The kernel has two halves:
+
+- :func:`explode` — classify an input row by magic bytes and yield its
+  page items ``(url, page, kind, image, text)``: decode + rasterize
+  SPDF pages (``image`` is the RGB raster), normalize GIF to PNG (T3),
+  strip HTML (T11), pass text through.
+- :func:`make_recognize_item` — per-task recognizer state plus the
+  per-item body: grayscale [+ optional dpi/deskew/otsu] + PNG for PDF
+  rasters only (the reference's folder path skips preprocessing,
+  ``ocr_service.py:173-174``), then recognition with rate limiting,
+  retries and error-as-data (``operators/recognize.make_recognize``).
 
 Default shape (``extract_fused``): ``process_items`` — ONE
-``mapInArrow`` stage fusing classify → rasterize → preprocess →
-recognize — followed by the ``groupBy(url)`` assembly: 1 scan,
+``mapInArrow`` stage composing both halves, the raster handed across
+in-process — followed by the ``groupBy(url)`` assembly: 1 scan,
 1 shuffle (of extracted text only).
 
 Staged shape (``page_level_salt=True``) for pathological page-count
-skew:
+skew: the same two halves split around a ``(url, page)`` exchange.
 
-1. ``scan_items``   — ``mapInArrow``: classify by magic bytes,
-   rasterize+explode PDF pages, normalize image formats (T3), strip
-   HTML (T11), pass text through → ``(url, page, kind, image, text)``.
-2. salted repartition on ``(url, page)`` — spreads one enormous
-   document's pages across the cluster (BASELINE.json north_star),
-   at the cost of shuffling raster bytes.
-3. ``recognize_items`` — grayscale+PNG (PDF pages only — the
-   reference's folder path skips preprocessing,
-   ``ocr_service.py:173-174``) then recognition with rate limiting,
-   retries and error-as-data.
-4. ``assemble_docs`` — one ``groupBy(url)``: per-kind finishing — PDF
-   docs get the ordered framed concat + byte spans
-   (``ocr_service.py:116,119-122``), single-item kinds pass their text
-   through.
+1. ``scan_items``   — ``mapInArrow`` over :func:`explode`; PDF rasters
+   cross the exchange as SIMG.
+2. repartition on ``(url, page)`` — spreads one enormous document's
+   pages across the cluster (BASELINE.json north_star), at the cost of
+   shuffling raster bytes.
+3. ``recognize_items`` — ``mapInArrow`` over the recognize half.
 
-Byte-identical to the oracle and to the branched plan (asserted in
-tests); the branched plan remains for per-operator testing and for
-pathological skew experiments.
+Both shapes end in ``assemble_docs`` — one ``groupBy(url)``: PDF docs
+get the ordered framed concat + byte spans (``ocr_service.py:116,
+119-122``), single-item kinds pass their text through.  Both are
+byte-identical to the oracle for every payload kind (asserted in tests).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -47,8 +47,7 @@ from ..functions.html import strip_html_bytes
 from ..operators.assemble import FRAMED_FROM_PS, SPANS_FROM_FRAMED, SPANS_TYPE
 from ..operators.preprocess import deskew as _deskew
 from ..operators.preprocess import dpi_normalize, otsu_binarize
-from ..operators.recognize import TokenBucket
-from ..recognizers import RecognitionError, get_recognizer
+from ..operators.recognize import make_recognize
 
 ITEM_SCHEMA = "url string, page int, kind string, image binary, text string"
 RECOGNIZED_SCHEMA = "url string, page int, kind string, text string, ocr_error boolean"
@@ -61,67 +60,133 @@ _RECOGNIZED_SCHEMA_PA = pa.schema([
     ("text", pa.string()), ("ocr_error", pa.bool_()),
 ])
 _CHUNK_ROWS = 256
+# keep-format rule (ocr_service.py:177): PNG/JPEG/BMP/TIFF pass through
+# unchanged; GIF re-encodes to PNG
+_IMAGE_FORMATS = ("PNG", "JPEG", "BMP", "TIFF", "GIF")
+
+
+# --- the kernel --------------------------------------------------------------
+
+
+def explode(url: str, payload: bytes | None, text: str | None) -> Iterator[tuple]:
+    """Explode half: classify one input row by magic bytes and yield its
+    page items ``(url, page, kind, image, text)``.  PDF pages are
+    rendered lazily, one raster in memory at a time."""
+    fmt = formats.sniff_format(payload)
+    if fmt == "SPDF":
+        try:
+            page_texts = formats.decode_spdf(payload)
+        except Exception:
+            # fault isolation (T10): a corrupt document must not fail the
+            # job — one imageless page becomes error-as-data downstream
+            yield url, 1, "pdf", None, None
+            return
+        if not page_texts:
+            # zero-page document: the reference writes an empty .txt
+            # (ocr_service.py:119 loop body never runs) — emit a marker
+            # row, never drop the url
+            yield url, 0, "pdf0", None, ""
+            return
+        for page_no, page_text in enumerate(page_texts, start=1):
+            yield url, page_no, "pdf", formats.render_page_rgb(page_text), None
+    elif fmt in _IMAGE_FORMATS:
+        if fmt == "GIF":
+            try:
+                payload = formats.encode_png(formats.decode_gif_gray(payload))
+            except Exception:
+                pass  # undecodable: recognition reports it as data
+        yield url, 1, "image", payload, None
+    elif fmt == "HTML":
+        yield url, 1, "html", None, strip_html_bytes(payload)
+    elif fmt == "none":
+        yield url, 1, "text", None, text if text is not None else ""
+    else:
+        yield url, 1, "unknown", None, None
+
+
+def make_recognize_item(
+    recognizer: str,
+    rate_limit_qps: float | None,
+    max_retries: int,
+    backoff_base_s: float,
+    otsu: bool,
+    do_deskew: bool,
+    dpi: bool,
+) -> Callable[[tuple], tuple]:
+    """Recognize half: per-task state plus ``recognize_item``, which maps
+    one page item to its recognized row
+    ``(url, page, kind, text, ocr_error)``."""
+    recognize = make_recognize(recognizer, rate_limit_qps, max_retries, backoff_base_s)
+
+    def recognize_item(item: tuple) -> tuple:
+        url, page, kind, image, text = item
+        if kind == "pdf":
+            if image is None:
+                return url, page, kind, f"OCR Error for ID {page}: corrupt document payload", True
+            gray = formats.rgb_to_gray(image)
+            if dpi:
+                gray = dpi_normalize(gray)
+            if do_deskew:
+                gray = _deskew(gray)
+            if otsu:
+                gray = otsu_binarize(gray)
+            return (url, page, kind, *recognize(formats.encode_png(gray), page))
+        if kind == "image":
+            return (url, page, kind, *recognize(image, url))  # NO preprocess
+        if kind == "unknown":
+            return url, page, kind, "", True
+        return url, page, kind, text, False  # html / text / pdf0: already extracted
+
+    return recognize_item
+
+
+# --- Arrow plumbing ------------------------------------------------------------
+
+
+def _rows(batches: Iterable[pa.RecordBatch]) -> Iterator[tuple]:
+    """Python rows of each record batch, in selected column order."""
+    for rb in batches:
+        yield from zip(*(col.to_pylist() for col in rb.columns))
+
+
+def _batched(rows: Iterable[tuple], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Record batches of at most ``_CHUNK_ROWS`` rows, so a
+    many-thousand-page document never grows one batch unbounded."""
+
+    def to_batch(buf: list[tuple]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [pa.array(col, type=field.type) for col, field in zip(zip(*buf), schema)],
+            schema=schema,
+        )
+
+    buf: list[tuple] = []
+    for row in rows:
+        buf.append(row)
+        if len(buf) >= _CHUNK_ROWS:
+            yield to_batch(buf)
+            buf = []
+    if buf:
+        yield to_batch(buf)
+
+
+# --- plans -------------------------------------------------------------------
 
 
 def scan_items(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Single-pass classify + rasterize + normalize + HTML strip."""
+    """The explode half as its own ``mapInArrow``: input rows → page
+    items, PDF rasters serialized as SIMG for the exchange that follows."""
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf: dict[str, list] = {"url": [], "page": [], "kind": [], "image": [], "text": []}
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def items() -> Iterator[tuple]:
+            for row in _rows(batches):
+                for url, page, kind, image, text in explode(*row):
+                    if kind == "pdf" and image is not None:
+                        image = formats.encode_simg(image)
+                    yield url, page, kind, image, text
 
-        def push(url, page, kind, image, text):
-            buf["url"].append(url)
-            buf["page"].append(page)
-            buf["kind"].append(kind)
-            buf["image"].append(image)
-            buf["text"].append(text)
+        yield from _batched(items(), _ITEM_SCHEMA_PA)
 
-        def flush():
-            out = pa.RecordBatch.from_pydict(buf, schema=_ITEM_SCHEMA_PA)
-            for k in buf:
-                buf[k] = []
-            return out
-
-        for rb in batches:
-            cols = {name: rb.column(i).to_pylist() for i, name in enumerate(rb.schema.names)}
-            for url, payload, text in zip(cols["url"], cols[payload_col], cols["text"]):
-                fmt = formats.sniff_format(payload)
-                if fmt == "SPDF":
-                    try:
-                        page_texts = formats.decode_spdf(payload)
-                    except Exception:
-                        push(url, 1, "pdf", None, None)  # error-as-data downstream
-                        continue
-                    if not page_texts:
-                        # zero-page document: the reference writes an
-                        # empty .txt (ocr_service.py:119 loop body never
-                        # runs) — emit a marker row, never drop the url
-                        push(url, 0, "pdf0", None, "")
-                        continue
-                    for page_no, page_text in enumerate(page_texts, start=1):
-                        push(url, page_no, "pdf",
-                             formats.encode_simg(formats.render_page_rgb(page_text)), None)
-                        if len(buf["url"]) >= _CHUNK_ROWS:
-                            yield flush()
-                elif fmt in ("PNG", "BMP", "GIF"):
-                    if fmt == "GIF":  # T3: re-encode unsupported formats to PNG
-                        try:
-                            payload = formats.encode_png(formats.decode_gif_gray(payload))
-                        except Exception:
-                            pass
-                    push(url, 1, "image", payload, None)
-                elif fmt == "HTML":
-                    push(url, 1, "html", None, strip_html_bytes(payload))
-                elif fmt == "none":
-                    push(url, 1, "text", None, text if text is not None else "")
-                else:
-                    push(url, 1, "unknown", None, None)
-                if len(buf["url"]) >= _CHUNK_ROWS:
-                    yield flush()
-        if buf["url"]:
-            yield flush()
-
-    return df.select("url", payload_col, "text").mapInArrow(gen, ITEM_SCHEMA)
+    return df.select("url", payload_col, "text").mapInArrow(run, ITEM_SCHEMA)
 
 
 def recognize_items(
@@ -134,68 +199,25 @@ def recognize_items(
     do_deskew: bool = False,
     dpi: bool = False,
 ) -> DataFrame:
-    """Preprocess (PDF pages only) + recognize; everything else passes."""
-    import time as _time
+    """The recognize half as its own ``mapInArrow``: page items (SIMG
+    rasters) → recognized rows."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        engine = get_recognizer(recognizer)
-        bucket = TokenBucket(rate_limit_qps) if rate_limit_qps else None
+        recognize_item = make_recognize_item(
+            recognizer, rate_limit_qps, max_retries, backoff_base_s, otsu, do_deskew, dpi,
+        )
 
-        def recognize_bytes(payload: bytes, item_id) -> tuple[str, bool]:
-            attempt = 0
-            while True:
-                if bucket is not None:
-                    bucket.acquire()
-                try:
-                    return engine.recognize(payload), False
-                except RecognitionError as exc:
-                    return f"OCR Error for ID {item_id}: {exc}", True
-                except Exception as exc:
-                    attempt += 1
-                    if attempt > max_retries:
-                        return f"OCR Error for ID {item_id}: {exc}", True
-                    _time.sleep(backoff_base_s * (2 ** (attempt - 1)))
+        def decoded() -> Iterator[tuple]:
+            for url, page, kind, image, text in _rows(batches):
+                if kind == "pdf" and image is not None:
+                    image = formats.decode_simg(image)
+                yield url, page, kind, image, text
 
-        for rb in batches:
-            cols = {name: rb.column(i).to_pylist() for i, name in enumerate(rb.schema.names)}
-            texts: list[str | None] = []
-            errors: list[bool] = []
-            for url, page, kind, image, text in zip(
-                cols["url"], cols["page"], cols["kind"], cols["image"], cols["text"]
-            ):
-                if kind == "pdf":
-                    if image is None:
-                        texts.append(f"OCR Error for ID {page}: corrupt document payload")
-                        errors.append(True)
-                        continue
-                    arr = formats.decode_simg(bytes(image))
-                    gray = formats.rgb_to_gray(arr) if arr.ndim == 3 else arr
-                    if dpi:
-                        gray = dpi_normalize(gray)
-                    if do_deskew:
-                        gray = _deskew(gray)
-                    if otsu:
-                        gray = otsu_binarize(gray)
-                    t, e = recognize_bytes(formats.encode_png(gray), int(page))
-                    texts.append(t)
-                    errors.append(e)
-                elif kind == "image":
-                    t, e = recognize_bytes(bytes(image), url)  # NO preprocess
-                    texts.append(t)
-                    errors.append(e)
-                elif kind == "unknown":
-                    texts.append("")
-                    errors.append(True)
-                else:  # html / text: already extracted
-                    texts.append(text)
-                    errors.append(False)
-            yield pa.RecordBatch.from_pydict(
-                {"url": cols["url"], "page": cols["page"], "kind": cols["kind"],
-                 "text": texts, "ocr_error": errors},
-                schema=_RECOGNIZED_SCHEMA_PA,
-            )
+        yield from _batched(map(recognize_item, decoded()), _RECOGNIZED_SCHEMA_PA)
 
-    return items.mapInArrow(run, RECOGNIZED_SCHEMA)
+    return items.select("url", "page", "kind", "image", "text").mapInArrow(
+        run, RECOGNIZED_SCHEMA
+    )
 
 
 def assemble_docs(recognized: DataFrame) -> DataFrame:
@@ -230,107 +252,6 @@ def assemble_docs(recognized: DataFrame) -> DataFrame:
     )
 
 
-def _make_row_processor(
-    recognizer: str,
-    rate_limit_qps: float | None,
-    max_retries: int,
-    backoff_base_s: float,
-    otsu: bool,
-    do_deskew: bool,
-    dpi: bool,
-):
-    """Per-task state + the per-row classify/rasterize/preprocess/
-    recognize body, shared by :func:`process_items` and
-    :func:`extract_documents_fused` so both stages run byte-identical
-    logic.  Returns ``(process_row, buf, flush)``; ``process_row``
-    appends recognized page rows to ``buf``."""
-    import time as _time
-
-    engine = get_recognizer(recognizer)
-    bucket = TokenBucket(rate_limit_qps) if rate_limit_qps else None
-
-    def recognize_bytes(payload: bytes, item_id) -> tuple[str, bool]:
-        attempt = 0
-        while True:
-            if bucket is not None:
-                bucket.acquire()
-            try:
-                return engine.recognize(payload), False
-            except RecognitionError as exc:
-                return f"OCR Error for ID {item_id}: {exc}", True
-            except Exception as exc:
-                attempt += 1
-                if attempt > max_retries:
-                    return f"OCR Error for ID {item_id}: {exc}", True
-                _time.sleep(backoff_base_s * (2 ** (attempt - 1)))
-
-    def recognize_pdf_page(page_text: str, page_no: int) -> tuple[str, bool]:
-        gray = formats.rgb_to_gray(formats.render_page_rgb(page_text))
-        if dpi:
-            gray = dpi_normalize(gray)
-        if do_deskew:
-            gray = _deskew(gray)
-        if otsu:
-            gray = otsu_binarize(gray)
-        return recognize_bytes(formats.encode_png(gray), page_no)
-
-    buf: dict[str, list] = {"url": [], "page": [], "kind": [], "text": [], "ocr_error": []}
-
-    def push(url, page, kind, text, err):
-        buf["url"].append(url)
-        buf["page"].append(page)
-        buf["kind"].append(kind)
-        buf["text"].append(text)
-        buf["ocr_error"].append(err)
-
-    def flush():
-        out = pa.RecordBatch.from_pydict(buf, schema=_RECOGNIZED_SCHEMA_PA)
-        for k in buf:
-            buf[k] = []
-        return out
-
-    def process_row(url, payload, text):
-        """Classify one input row by magic bytes and emit its page rows.
-        Generator: yields flushed record batches mid-document so a
-        many-thousand-page document never grows the buffer unbounded
-        (same ``_CHUNK_ROWS`` bound as the pre-r7 inline loop)."""
-        fmt = formats.sniff_format(payload)
-        if fmt == "SPDF":
-            try:
-                page_texts = formats.decode_spdf(payload)
-            except Exception:
-                push(url, 1, "pdf",
-                     "OCR Error for ID 1: corrupt document payload", True)
-                return
-            if not page_texts:
-                # zero-page doc: reference writes an empty .txt
-                push(url, 0, "pdf0", "", False)
-                return
-            for page_no, page_text in enumerate(page_texts, start=1):
-                t, e = recognize_pdf_page(page_text, page_no)
-                push(url, page_no, "pdf", t, e)
-                if len(buf["url"]) >= _CHUNK_ROWS:
-                    yield flush()
-        elif fmt in ("PNG", "JPEG", "BMP", "TIFF", "GIF"):
-            # keep-format rule (ocr_service.py:177): PNG/JPEG/BMP/
-            # TIFF pass through unchanged; GIF re-encodes to PNG
-            if fmt == "GIF":  # T3 normalize, then recognize as-is
-                try:
-                    payload = formats.encode_png(formats.decode_gif_gray(payload))
-                except Exception:
-                    pass
-            t, e = recognize_bytes(payload, url)
-            push(url, 1, "image", t, e)
-        elif fmt == "HTML":
-            push(url, 1, "html", strip_html_bytes(payload), False)
-        elif fmt == "none":
-            push(url, 1, "text", text if text is not None else "", False)
-        else:
-            push(url, 1, "unknown", "", True)
-
-    return process_row, buf, flush
-
-
 def process_items(
     df: DataFrame,
     payload_col: str = "html",
@@ -342,10 +263,10 @@ def process_items(
     do_deskew: bool = False,
     dpi: bool = False,
 ) -> DataFrame:
-    """Single Python stage: classify + rasterize + preprocess +
-    recognize, input row → recognized page items.
+    """Single Python stage: both kernel halves, input row → recognized
+    page items.
 
-    Fusing the two ``mapInPandas`` stages keeps the raster intermediate
+    Composing the halves in one stage keeps the raster intermediate
     (the largest byte stream in the job — decompressed page images)
     inside one Python worker instead of round-tripping it through the
     JVM and a shuffle.  Measured on this box: the staged variant
@@ -358,21 +279,12 @@ def process_items(
     input), so record batches are consumed directly.
     """
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        process_row, buf, flush = _make_row_processor(
-            recognizer, rate_limit_qps, max_retries, backoff_base_s,
-            otsu, do_deskew, dpi,
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        recognize_item = make_recognize_item(
+            recognizer, rate_limit_qps, max_retries, backoff_base_s, otsu, do_deskew, dpi,
         )
-        for rb in batches:
-            cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            for url, payload, text in zip(
-                cols["url"].to_pylist(), cols[payload_col].to_pylist(), cols["text"].to_pylist()
-            ):
-                yield from process_row(url, payload, text)
-                if len(buf["url"]) >= _CHUNK_ROWS:
-                    yield flush()
-        if buf["url"]:
-            yield flush()
+        items = (item for row in _rows(batches) for item in explode(*row))
+        yield from _batched(map(recognize_item, items), _RECOGNIZED_SCHEMA_PA)
 
     return df.select("url", payload_col, "text").mapInArrow(run, RECOGNIZED_SCHEMA)
 
@@ -389,20 +301,18 @@ def extract_documents_fused(
 ) -> DataFrame:
     """The flagship's end-to-end plan with payload synthesis fused into
     the recognition stage: ``documents`` → one Python stage (per-doc
-    SPDF payload build → classify → rasterize → preprocess → recognize)
-    → ``groupBy(url)`` assembly.
+    SPDF payload build → both kernel halves) → ``groupBy(url)``
+    assembly.
 
     Logically identical to ``documents_to_pages(df)`` piped through
     :func:`process_items` — the SPDF payload is still encoded per
-    document and classified by magic bytes through the SAME
-    ``process_row`` body (shared closure factory) — but the payload
-    bytes stay inside one Python worker instead of crossing
-    JVM→Python→JVM→Python across an ArrowEvalPython + MapInArrow pair
-    (guide §4.1: you can't remove the boundary cost, but you control
-    how many times it is paid).  r7: byte-identical output verified by
-    ``exceptAll`` both ways vs the staged path at sf0.1/sf1.0 and by
-    the DuckDB hash gate; the staged path remains the default for
-    every other consumer and for bench stage isolation."""
+    document and classified by magic bytes through the SAME kernel —
+    but the payload bytes stay inside one Python worker instead of
+    crossing JVM→Python→JVM→Python across an ArrowEvalPython +
+    MapInArrow pair (guide §4.1: you can't remove the boundary cost,
+    but you control how many times it is paid).  Byte-identical output
+    verified by ``exceptAll`` both ways vs the staged path at sf0.1/sf1.0
+    and by the DuckDB hash gate."""
     from ..fanout import fanout
     from ..sources.documents import chunk_text
 
@@ -412,21 +322,16 @@ def extract_documents_fused(
         F.col("text"),
     )
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        process_row, buf, flush = _make_row_processor(
-            recognizer, rate_limit_qps, max_retries, backoff_base_s,
-            otsu, do_deskew, dpi,
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        recognize_item = make_recognize_item(
+            recognizer, rate_limit_qps, max_retries, backoff_base_s, otsu, do_deskew, dpi,
         )
-        for rb in batches:
-            urls = rb.column(0).to_pylist()
-            texts = rb.column(1).to_pylist()
-            for url, text in zip(urls, texts):
-                payload = formats.encode_spdf(chunk_text(text))
-                yield from process_row(url, payload, None)
-                if len(buf["url"]) >= _CHUNK_ROWS:
-                    yield flush()
-        if buf["url"]:
-            yield flush()
+        items = (
+            item
+            for url, text in _rows(batches)
+            for item in explode(url, formats.encode_spdf(chunk_text(text)), None)
+        )
+        yield from _batched(map(recognize_item, items), _RECOGNIZED_SCHEMA_PA)
 
     recognized = src.mapInArrow(run, RECOGNIZED_SCHEMA)
     return assemble_docs(recognized)
@@ -448,33 +353,29 @@ def extract_fused(
     """The scale-default extraction plan: 1 scan + ≤2 shuffles.
 
     Default shape: [optional input-row repartition] → fused
-    classify/rasterize/preprocess/recognize Python stage →
-    ``groupBy(url)`` assembly.  The optional repartition salts on the
-    *compressed input payloads* (cheap) rather than on exploded rasters
-    (expensive); documents are the unit of work, which is the right
-    granularity while page counts are bounded (1-8 typical, hundreds
-    worst-case ⇒ sub-second per task).
+    explode/recognize Python stage → ``groupBy(url)`` assembly.  The
+    optional repartition salts on the *compressed input payloads*
+    (cheap) rather than on exploded rasters (expensive); documents are
+    the unit of work, which is the right granularity while page counts
+    are bounded (1-8 typical, hundreds worst-case ⇒ sub-second per
+    task).
 
-    ``page_level_salt=True`` switches to the staged variant
-    (scan-explode → per-(url,page) shuffle → recognize) for
+    ``page_level_salt=True`` splits the same kernel around a
+    per-(url, page) shuffle (explode → exchange → recognize) for
     pathological page-count skew — many-thousand-page documents whose
     *single-document* work would otherwise straggle one task.
     """
+    kernel = dict(
+        recognizer=recognizer, rate_limit_qps=rate_limit_qps,
+        max_retries=max_retries, backoff_base_s=backoff_base_s,
+        otsu=otsu, do_deskew=do_deskew, dpi=dpi,
+    )
     if page_level_salt:
         items = scan_items(df, payload_col)
         if salt_partitions:
             items = items.repartition(salt_partitions, "url", "page")
-        recognized = recognize_items(
-            items, recognizer=recognizer, rate_limit_qps=rate_limit_qps,
-            otsu=otsu, do_deskew=do_deskew, dpi=dpi,
-        )
-        return assemble_docs(recognized)
+        return assemble_docs(recognize_items(items, **kernel))
     src = df
     if salt_partitions:
         src = src.repartition(salt_partitions, "url")
-    recognized = process_items(
-        src, payload_col, recognizer=recognizer, rate_limit_qps=rate_limit_qps,
-        max_retries=max_retries, backoff_base_s=backoff_base_s,
-        otsu=otsu, do_deskew=do_deskew, dpi=dpi,
-    )
-    return assemble_docs(recognized)
+    return assemble_docs(process_items(src, payload_col, **kernel))

@@ -126,8 +126,8 @@ def purchases_with_recent_views(
 
 
 def streaming_extract_items(pages_stream: DataFrame) -> DataFrame:
-    """Stage 1 of the fused extraction plan over a stream — identical
-    code path (mapInPandas is streaming-compatible)."""
+    """The extraction kernel's explode half over a stream — identical
+    code path (mapInArrow is streaming-compatible)."""
     from ..plans.fused import scan_items
 
     return scan_items(pages_stream)

@@ -7,9 +7,7 @@ from pyspark.sql import functions as F
 
 from google_vision_ocr_spark import formats, oracle
 from google_vision_ocr_spark.operators.assemble import chapter_islands, tag_kind
-from google_vision_ocr_spark.operators.preprocess import preprocess_chain
-from google_vision_ocr_spark.operators.rasterize import rasterize_pdf_pages
-from google_vision_ocr_spark.operators.recognize import recognize_stage
+from google_vision_ocr_spark.plans.fused import recognize_items, scan_items
 
 
 def test_epub_assembly_matches_oracle(spark, fixture_dir):
@@ -25,11 +23,11 @@ def test_epub_assembly_matches_oracle(spark, fixture_dir):
     illust_df = spark.read.parquet(fixture_dir["illustrations"])
 
     # distributed path
-    pages = rasterize_pdf_pages(pdf_rows)
+    pages = scan_items(pdf_rows).drop("kind")
     tagged = tag_kind(pages, illust_df)
-    ocr_side = tagged.filter(F.col("kind") == "text").select("url", "page", "kind", "image")
-    ocr_side = preprocess_chain(ocr_side, "image")
-    recognized = recognize_stage(ocr_side, image_col="image", id_col="page")
+    # only the text side reaches recognition, as a pdf page item
+    ocr_side = tagged.filter(F.col("kind") == "text").withColumn("kind", F.lit("pdf"))
+    recognized = recognize_items(ocr_side).withColumn("kind", F.lit("text"))
     img_side = tagged.filter(F.col("kind") == "image").select(
         "url", "page", "kind", F.lit(None).cast("string").alias("text")
     )

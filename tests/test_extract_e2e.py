@@ -10,16 +10,16 @@ import pyarrow.parquet as pq
 import pytest
 
 from google_vision_ocr_spark import oracle
-from google_vision_ocr_spark.plans.extract import extract
+from google_vision_ocr_spark.plans.fused import extract_fused
+
+# the two shapes of the one extraction kernel
+SHAPES = {"fused": {}, "salted": {"page_level_salt": True}}
 
 
-@pytest.fixture(scope="module", params=["branched", "fused"])
+@pytest.fixture(scope="module", params=sorted(SHAPES))
 def results(request, spark, fixture_dir):
-    from google_vision_ocr_spark.plans.fused import extract_fused
-
     df = spark.read.parquet(fixture_dir["pages"])
-    plan = extract if request.param == "branched" else extract_fused
-    out = plan(df, salt_partitions=8).collect()
+    out = extract_fused(df, salt_partitions=8, **SHAPES[request.param]).collect()
     rows = pq.read_table(fixture_dir["pages"]).to_pylist()
     expected = {r.url: r for r in oracle.extract_table(rows)}
     return {r["url"]: r for r in out}, expected
@@ -77,9 +77,11 @@ def test_skewed_doc_extracted(results):
 
 def test_identity_stable_across_partitionings(spark, fixture_dir):
     df = spark.read.parquet(fixture_dir["pages"])
-    a = {r["url"]: r["text"] for r in extract(df.repartition(1)).collect()}
-    b = {r["url"]: r["text"] for r in extract(df.repartition(16), salt_partitions=16).collect()}
-    assert a == b
+    for shape, kw in SHAPES.items():
+        a = {r["url"]: r["text"] for r in extract_fused(df.repartition(1), **kw).collect()}
+        b = {r["url"]: r["text"]
+             for r in extract_fused(df.repartition(16), salt_partitions=16, **kw).collect()}
+        assert a == b, shape
 
 
 def test_corrupt_spdf_is_error_as_data(spark, tmp_path):
@@ -100,23 +102,23 @@ def test_corrupt_spdf_is_error_as_data(spark, tmp_path):
     })
     p = str(tmp_path / "bad.parquet")
     pq_.write_table(t, p)
-    got = extract(spark.read.parquet(p)).collect()
     exp = oracle.extract_row({"url": "u:trunc", "html": bad_payload, "text": None})
-    assert len(got) == 1
-    assert got[0]["text"] == exp.text
-    assert got[0]["n_errors"] == exp.n_errors == 1
+    for shape, kw in SHAPES.items():
+        got = extract_fused(spark.read.parquet(p), **kw).collect()
+        assert len(got) == 1, shape
+        assert got[0]["text"] == exp.text, shape
+        assert got[0]["n_errors"] == exp.n_errors == 1, shape
 
 
 def test_zero_page_document_survives(spark, tmp_path):
     """A zero-page SPDF yields an empty-text row (the reference writes
-    an empty .txt), never a dropped url — in BOTH plans."""
+    an empty .txt), never a dropped url — in BOTH shapes."""
     import datetime
 
     import pyarrow as pa
     import pyarrow.parquet as pq_
 
     from google_vision_ocr_spark import formats
-    from google_vision_ocr_spark.plans.fused import extract_fused
 
     payload = formats.encode_spdf([])
     t = pa.table({
@@ -130,12 +132,12 @@ def test_zero_page_document_survives(spark, tmp_path):
     pq_.write_table(t, p)
     exp = oracle.extract_row({"url": "u:empty", "html": payload, "text": None})
     assert exp.text == "" and exp.n_pages == 0 and exp.kind == "pdf"
-    for plan in (extract_fused, extract):
-        got = plan(spark.read.parquet(p)).collect()
-        assert len(got) == 1, plan.__name__
+    for shape, kw in SHAPES.items():
+        got = extract_fused(spark.read.parquet(p), **kw).collect()
+        assert len(got) == 1, shape
         r = got[0]
         assert (r["url"], r["kind"], r["text"], r["n_pages"], r["n_errors"]) == \
-               ("u:empty", "pdf", "", 0, 0), plan.__name__
+               ("u:empty", "pdf", "", 0, 0), shape
         assert list(r["spans"]) == []
 
 

@@ -60,15 +60,20 @@ def test_cosine_topk_broadcasts_query_side(spark):
 
 
 def test_fused_extract_has_single_source_scan(spark, fixture_dir):
-    from google_vision_ocr_spark.plans.extract import extract
+    import re
+
     from google_vision_ocr_spark.plans.fused import extract_fused
 
     df = spark.read.parquet(fixture_dir["pages"])
     fused_plan = _plan(extract_fused(df))
-    branched_plan = _plan(extract(df))
-    # the branched plan re-scans the payload per branch; fused must not
+    salted_plan = _plan(extract_fused(df, page_level_salt=True, salt_partitions=8))
     assert fused_plan.count("Scan parquet") == 1
-    assert branched_plan.count("Scan parquet") >= 4
+    # the salted shape is the same kernel split around the (url, page)
+    # exchange: still one scan, exactly two Arrow-native Python stages
+    assert salted_plan.count("Scan parquet") == 1
+    assert salted_plan.count("MapInArrow") == 2
+    assert re.search(r"Exchange hashpartitioning\(url#\d+, page#\d+", salted_plan), salted_plan
+    assert "MapInPandas" not in salted_plan and "ArrowEvalPython" not in salted_plan
 
 
 def test_fused_python_stage_is_arrow_native(spark, fixture_dir):
@@ -84,14 +89,13 @@ def test_fused_python_stage_is_arrow_native(spark, fixture_dir):
 
 
 def test_extract_on_empty_input(spark):
-    from google_vision_ocr_spark.plans.extract import extract
     from google_vision_ocr_spark.plans.fused import extract_fused
 
     empty = spark.createDataFrame(
         [], "url string, warc_ts timestamp, html binary, text string, lang string"
     )
     assert extract_fused(empty).count() == 0
-    assert extract(empty).count() == 0
+    assert extract_fused(empty, page_level_salt=True, salt_partitions=4).count() == 0
 
 
 def test_scan_side_queries_have_no_shuffle(spark):

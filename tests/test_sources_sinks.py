@@ -99,10 +99,10 @@ def test_epub_sink_structure(spark, tmp_path):
 def test_f5_f6_driver_guards(spark):
     """F5 credential gate / F6 empty-input guard: plan-time
     short-circuits (app_service.py:50-56, main_gui.py:279-281)."""
-    from google_vision_ocr_spark.plans.extract import classify_payload
+    from google_vision_ocr_spark.plans.fused import scan_items
 
     empty = spark.createDataFrame([], "url string, html binary, text string")
-    classified = classify_payload(empty)
-    needs_ocr = classified.filter(F.col("kind").isin("pdf", "image"))
+    items = scan_items(empty)
+    needs_ocr = items.filter(F.col("kind").isin("pdf", "image"))
     assert needs_ocr.limit(1).count() == 0  # → skip credential setup
     assert len(empty.head(1)) == 0          # → error to the user, no job
