@@ -1,7 +1,8 @@
-"""Session-scoped tracking of persisted intermediate frames.
+"""Session-scoped tracking of persisted intermediate frames, and lineage
+cuts.
 
 Operators that ``persist()`` a reused frame (MinHash/SimHash signature
-tables, the curate corpus, LSH code tables) register it here.  Spark
+tables, the packing ranges, LSH code tables) register it here.  Spark
 only unpersists cached data when the driver-side reference is garbage
 collected (ContextCleaner), which is nondeterministic — a long-lived
 session running many queries accumulates executor storage.  Callers
@@ -14,6 +15,13 @@ to storage (parquet/Iceberg) and read it back for the self-join, so it
 survives executor loss and never competes with shuffle memory — see
 ``docs/SCALE.md``.  ``persist()`` is the single-job optimization; this
 registry just keeps it honest across job boundaries.
+
+A lineage cut, ``localCheckpoint(eager=True)``, is the stronger form
+for a frame that later plans reuse (the curate and corpus-pipeline
+reuse points): it computes the frame once and later plans start from
+its stored blocks, where a persisted frame keeps and re-plans its whole
+cached lineage.  Its blocks are freed by :func:`release_cut`, not by
+:func:`release_all`.
 """
 
 from __future__ import annotations
@@ -27,6 +35,12 @@ def track(df: DataFrame) -> DataFrame:
     """Register a persisted frame for later release; returns it unchanged."""
     _TRACKED.append(df)
     return df
+
+
+def release_cut(df: DataFrame) -> None:
+    """Free the stored blocks of a ``localCheckpoint`` frame; reading
+    that frame afterwards fails."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def release_all() -> int:

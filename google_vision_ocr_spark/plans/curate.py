@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions.text import lang_id_series, quality_score
 from ..operators.dedup import exact_dedup, minhash_lsh_pairs
 from .fused import extract_fused
@@ -80,12 +81,17 @@ def curate(
     survived all gates plus per-gate booleans summed (survivors at each
     gate), so one pass yields the whole funnel.
 
-    ``materialize=True`` (default) persists + eagerly evaluates the
-    post-gate deduped corpus: it feeds THREE plan branches (the final
-    anti-join and both sides of the near-dup pair join), so without a
-    cache the extraction UDF stage runs ~3x per action.  The eager pass
-    also resolves the funnel counters.  Pass ``materialize=False`` for
-    a fully lazy plan (e.g. when composing into a larger job that does
+    ``materialize=True`` (default) cuts the lineage twice with
+    ``localCheckpoint(eager=True)``: once after the gates, where the
+    survivors feed both sides of the exact-dedup semi-join, so
+    extraction and the metrics UDF run once and the funnel counters
+    resolve on that action; and once on the returned corpus, so the
+    MinHash signature UDF runs inside that cut and later plans start
+    from its stored blocks instead of re-deriving it.  The first cut's
+    blocks are released once the second exists.  Cut blocks live in
+    executor storage: losing an executor fails the job instead of
+    recomputing (``docs/SCALE.md``).  Pass ``materialize=False`` for a
+    fully lazy plan (e.g. when composing into a larger job that does
     its own checkpointing).
     """
     docs = extract_fused(pages, **extract_kwargs)
@@ -115,6 +121,8 @@ def curate(
         F.sum((F.col("__q_ok") & F.col("__lang_ok")).cast("int")).alias("pass_lang"),
     )
     kept = gated.filter(F.col("__q_ok") & F.col("__lang_ok")).drop("__q_ok", "__lang_ok")
+    if materialize:
+        kept = kept.localCheckpoint(eager=True)
 
     # exact dedup: keep the lexicographically-min url per identical text
     keepers = (
@@ -124,11 +132,6 @@ def curate(
         .select("url")
     )
     deduped = kept.join(keepers, "url", "left_semi")
-    if materialize:
-        from .. import cache
-
-        deduped = cache.track(deduped.persist())
-        deduped.count()  # one extraction pass; later branches read cache
 
     # near-dup removal: drop the max-url side of each candidate pair
     pairs = minhash_lsh_pairs(deduped, id_col="url", text_col="text")
@@ -138,6 +141,9 @@ def curate(
         .dropDuplicates(["url"])
     )
     curated = deduped.join(losers, "url", "left_anti")
+    if materialize:
+        curated = curated.localCheckpoint(eager=True)
+        cache.release_cut(kept)
     return curated, obs
 
 

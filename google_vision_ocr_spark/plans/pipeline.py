@@ -17,14 +17,18 @@ from the operators this package already ships:
    report with every funnel counter;
 8. optionally (``chunk_size``): fixed-size token-window training
    sequences written as a parquet table alongside the corpus —
-   scan-side generate over the already-persisted corpus frame, no
-   extra shuffle.
+   scan-side generate over the corpus frame, no extra shuffle.
 
 Each stage is the scale-shape variant documented in ``docs/PLANS.md``;
-the pipeline adds no new shuffle beyond its stages' own.  The corpus
-frame is persisted once after the heavy curate+dedup prefix and reused
-by the LM-training pass, the packing pass, and the write (tracked via
-:mod:`..cache`).
+the pipeline adds no new shuffle beyond its stages' own.  The lineage
+is cut (``localCheckpoint(eager=True)``) at its three reuse points:
+curate's gate survivors and its curated corpus (see
+:func:`..plans.curate.curate`), and the corpus after paragraph dedup
+and redaction, which the LM-training pass, the packing pass, the
+writes and the report all read.
+Each Python stage therefore runs once per pipeline, and later actions
+plan from the cut instead of the whole lineage (``docs/SCALE.md``).
+The report counts the manifest and chunks from the files just written.
 """
 
 from __future__ import annotations
@@ -79,7 +83,9 @@ def run_corpus_pipeline(
         .drop("text_dedup")
         .filter(F.octet_length("text") > 0)
     )
-    corpus = cache.track(corpus.persist())
+    corpus = cut_corpus = corpus.localCheckpoint(eager=True)
+    if curate_kwargs.get("materialize", True):
+        cache.release_cut(curated)  # the corpus cut no longer reads it
 
     scored = unigram_logprob_scores(
         corpus, id_col="url", text_col="text", vocab_size=lm_vocab
@@ -101,7 +107,8 @@ def run_corpus_pipeline(
         tokens, budget=shard_token_budget, part_col="split",
         id_col="url", tokens_col="ws_tokens_final",
     )
-    manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
+    manifest_dir = os.path.join(out_dir, "manifest")
+    manifest.write.mode("overwrite").parquet(manifest_dir)
 
     from ..sources.jsonl import write_jsonl_corpus
 
@@ -112,7 +119,9 @@ def run_corpus_pipeline(
     )
     report = curation_report(corpus, obs)
     report["docs_written"] = n_written
-    report["n_shards"] = manifest.count()
+    # count what was written: recounting the frames would re-run them
+    spark = pages.sparkSession
+    report["n_shards"] = spark.read.schema(manifest.schema).parquet(manifest_dir).count()
     if chunk_size is not None:
         from ..operators.chunking import token_chunks
 
@@ -121,13 +130,14 @@ def run_corpus_pipeline(
             id_col="url", size=chunk_size, stride=chunk_stride,
             passthrough_cols=("split",),
         )
-        chunks.write.mode("overwrite").partitionBy("split").parquet(
-            os.path.join(out_dir, "chunks")
-        )
-        report["n_chunks"] = chunks.count()
+        chunks_dir = os.path.join(out_dir, "chunks")
+        chunks.write.mode("overwrite").partitionBy("split").parquet(chunks_dir)
+        report["n_chunks"] = spark.read.schema(chunks.schema).parquet(chunks_dir).count()
     with open(os.path.join(out_dir, "report.json"), "w") as f:
         json.dump(report, f, indent=2, sort_keys=True)
-    # every output is materialized by now; free the tracked persists so
-    # a long-lived session running many pipelines doesn't accumulate
+    # every output is materialized by now; free the cut and the tracked
+    # persists so a long-lived session running many pipelines doesn't
+    # accumulate
+    cache.release_cut(cut_corpus)
     cache.release_all()
     return report

@@ -6,19 +6,62 @@ import gzip
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+PIPELINE_KWARGS = dict(min_quality=0.1, min_tokens=2, shard_token_budget=500,
+                       chunk_size=32, chunk_stride=24)
+PYTHON_NODES = {"MapInArrow", "ArrowEvalPython"}
 
-def test_corpus_pipeline_end_to_end(spark, fixture_dir, tmp_path):
+
+def _last_execution_id(store) -> int:
+    rows = store.executionsList()
+    return max((rows.apply(i).executionId() for i in range(rows.size())), default=-1)
+
+
+def _plan_nodes_since(spark, store, after_id: int) -> dict[int, set[str]]:
+    """Plan node names of every SQL execution with an id above
+    ``after_id``, read from the session's SQL status store."""
+    # the status store is filled by an asynchronous listener
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    rows = store.executionsList()
+    out = {}
+    for i in range(rows.size()):
+        eid = rows.apply(i).executionId()
+        if eid > after_id:
+            nodes = store.planGraph(eid).allNodes()
+            out[eid] = {nodes.apply(k).name().strip() for k in range(nodes.size())}
+    return out
+
+
+def _run(spark, pages, out: str) -> dict:
     from google_vision_ocr_spark.plans.pipeline import run_corpus_pipeline
 
-    pages = spark.read.parquet(fixture_dir["pages"])
-    out = str(tmp_path / "corpus_out")
     os.makedirs(out, exist_ok=True)
-    report = run_corpus_pipeline(
-        pages, out, min_quality=0.1, min_tokens=2, shard_token_budget=500,
-        chunk_size=32, chunk_stride=24,
-    )
+    return run_corpus_pipeline(pages, out, **PIPELINE_KWARGS)
+
+
+def _corpus_lines(out: str) -> list[str]:
+    lines = []
+    for p in glob.glob(os.path.join(out, "corpus", "*.json.gz")):
+        with gzip.open(p, "rt") as f:
+            lines.extend(f)
+    return sorted(lines)
+
+
+@pytest.fixture(scope="module")
+def pipeline_run(spark, fixture_dir, tmp_path_factory):
+    """One pipeline run on the fixture: (out dir, report, plan node
+    names of each SQL execution it ran)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    mark = _last_execution_id(store)
+    out = str(tmp_path_factory.mktemp("pipeline") / "corpus_out")
+    report = _run(spark, spark.read.parquet(fixture_dir["pages"]), out)
+    return out, report, _plan_nodes_since(spark, store, mark)
+
+
+def test_corpus_pipeline_end_to_end(spark, pipeline_run):
+    out, report, _ = pipeline_run
     # report sanity: the funnel only narrows
     assert report["docs_in"] >= report["pass_quality"] >= report["pass_lang"]
     assert report["docs_out"] == report["docs_written"] > 0
@@ -27,10 +70,7 @@ def test_corpus_pipeline_end_to_end(spark, fixture_dir, tmp_path):
 
     # the written corpus is readable, has the contract columns, and
     # carries no un-redacted emails
-    rows = []
-    for p in glob.glob(os.path.join(out, "corpus", "*.json.gz")):
-        with gzip.open(p, "rt") as f:
-            rows.extend(json.loads(line) for line in f)
+    rows = [json.loads(line) for line in _corpus_lines(out)]
     assert len(rows) == report["docs_written"]
     assert set(rows[0]) == {"url", "lang_guess", "quality",
                             "avg_neg_logprob", "split", "text"}
@@ -54,3 +94,23 @@ def test_corpus_pipeline_end_to_end(spark, fixture_dir, tmp_path):
     assert {r.split for r in chunks.select("split").distinct().collect()} <= {
         "train", "val", "test"
     }
+
+
+def test_each_python_stage_runs_once(pipeline_run):
+    """Extraction runs in exactly one SQL execution, and every Python
+    stage (extraction, the metrics UDF, the MinHash signatures) runs
+    inside one of at most two: later actions start from the lineage
+    cuts instead of re-running or re-planning the Python stages."""
+    _, _, executions = pipeline_run
+    extraction = [e for e, names in executions.items() if "MapInArrow" in names]
+    python = [e for e, names in executions.items() if names & PYTHON_NODES]
+    assert len(extraction) == 1, executions
+    assert len(python) <= 2, executions
+
+
+def test_pipeline_partitioning_invariant(spark, fixture_dir, pipeline_run, tmp_path):
+    out, report, _ = pipeline_run
+    pages = spark.read.parquet(fixture_dir["pages"]).repartition(5)
+    out5 = str(tmp_path / "corpus_out")
+    assert _run(spark, pages, out5) == report
+    assert _corpus_lines(out5) == _corpus_lines(out)
