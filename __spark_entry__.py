@@ -592,15 +592,14 @@ def _minhash_pairs(spark, sf_dir):
     permutations a universal-hash family mod 2^31−1 with integer-hash
     parameters — every step replays in the DuckDB oracle, which states
     the declarative pair spec (∃ band with equal components) and so
-    independently proves the banding join lossless.  All JVM
-    expressions (the seeded numpy/blake2b family stays in the library
-    — operators/dedup.py:minhash_lsh_pairs — pytest + containment-twin
-    covered).  Same at-scale pattern: signatures materialized once so
-    the banded self-join reads the cache instead of hashing every
-    shingle once per side."""
-    from google_vision_ocr_spark.operators.replayable import (
-        minhash_lsh_pairs_replayable,
-        minhash_signatures_replayable,
+    independently proves the banding lossless.  All JVM expressions
+    (operators/dedup.py:minhash_lsh_pairs, the package's one MinHash).
+    Same at-scale pattern: signatures materialized once so banding and
+    both attaches read the cache instead of hashing every shingle once
+    per read."""
+    from google_vision_ocr_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
     )
 
     from google_vision_ocr_spark import cache
@@ -613,26 +612,21 @@ def _minhash_pairs(spark, sf_dir):
     # the old count() was a full extra pass over the table per build
     # (r7: one redundant job per bench iteration; at 100 TB a whole
     # extra read of the signature table).
-    sigs = cache.track(minhash_signatures_replayable(d).persist())
-    return minhash_lsh_pairs_replayable(d, signatures=sigs)
+    sigs = cache.track(minhash_signatures(d).persist())
+    return minhash_lsh_pairs(d, signatures=sigs)
 
 
 def _simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs at hamming ≤ 10 with REPLAYABLE
     randomness (r6): 60-bit md5-fold token hashes, majority-bit code,
-    the seeded family's pigeonhole-lossless banding (signatures=
-    path).  The oracle states the exact spec — every (a < b) pair
-    with bit_count(xor) ≤ 10 — over a cross join at gate scale, so a
-    lossy banding bug would hash-fail.  Seeded 64-bit family remains
-    at operators/dedup.py:simhash_candidates (pytest + containment
-    twin)."""
-    from google_vision_ocr_spark.operators.replayable import (
-        simhash_candidates_replayable,
-    )
+    pigeonhole-lossless banding (operators/dedup.py:
+    simhash_candidates, the package's one SimHash).  The oracle states
+    the exact spec — every (a < b) pair with bit_count(xor) ≤ 10 —
+    over a cross join at gate scale, so a lossy banding bug would
+    hash-fail."""
+    from google_vision_ocr_spark.operators.dedup import simhash_candidates
 
-    return simhash_candidates_replayable(
-        _t(spark, sf_dir, "documents"), max_hamming=10
-    )
+    return simhash_candidates(_t(spark, sf_dir, "documents"), max_hamming=10)
 
 
 def _lang_id(spark, sf_dir):
@@ -1584,9 +1578,8 @@ def _contamination_fraction(spark, sf_dir):
 
 def _lsh_bucket_histogram(spark, sf_dir):
     """Bucket-occupancy histogram over REPLAYABLE table-0 codes (r6)
-    — the balance check a deployment watches, now with a full DuckDB
-    oracle (seeded variant: similarity.lsh_bucket_histogram,
-    pytest-covered)."""
+    — the balance check a deployment watches, with a full DuckDB
+    oracle (the package's only bucket histogram)."""
     from google_vision_ocr_spark.operators.replayable import (
         lsh_bucket_histogram_replayable,
     )
@@ -1662,9 +1655,9 @@ def _minhash_containment(spark, sf_dir):
     """Recall-containment check for the MinHash family: every exact
     3-shingle-Jaccard pair >= 0.8 must appear in the banded-LSH
     candidate set.  The oracle is the exact-Jaccard SQL alone, so one
-    LSH recall miss drops a row and fails the driver's hash gate —
-    making the seeded-hash family falsifiable even though the
-    signatures themselves aren't ANSI-SQL-expressible."""
+    LSH recall miss drops a row and fails the contract's hash gate.
+    The pair set itself is gated by `dedup_minhash_lsh`; this entry
+    pins the family's recall against exact Jaccard."""
     from google_vision_ocr_spark.operators.dedup import (
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
@@ -1684,10 +1677,10 @@ def _simhash_containment(spark, sf_dir):
 
     Radius note: "Jaccard >= 0.8 implies hamming <= h" is statistical,
     not guaranteed — the radius must dominate the data's worst case.
-    Measured max hamming over exact pairs: 8 at sf0.001/0.01, 12 at
-    sf0.1 (two pairs beyond the old radius 10); 13 holds with margin at
-    every shipped SF, and the pigeonhole banding stays lossless at any
-    radius (n_bands = h+1)."""
+    Measured max hamming of the 60-bit replayable codes over the exact
+    pairs: 11 at sf0.001 (28 pairs), 9 at sf0.01 (25), 12 at sf0.1
+    (256; two pairs at 12); 13 holds at every shipped SF, and the
+    pigeonhole banding stays lossless at any radius (n_bands = h+1)."""
     from google_vision_ocr_spark.operators.dedup import (
         ngram_jaccard_pairs,
         simhash_candidates,
@@ -4046,7 +4039,8 @@ def _curate_oracle() -> str:
     """The whole curation funnel in SQL: extraction (framed 500-char
     chunks) → frame-strip → metrics → quality/token gates → exact dedup
     (min url per text) → near-dup removal.  Near-dups use exact shingle
-    Jaccard >= 0.8 where Spark uses the 64-perm MinHash estimate; on the
+    Jaccard >= 0.8 where Spark uses the 64-perm replayable MinHash
+    estimate (md5-fold shingle hashes, banded candidates); on the
     planted near-dups (true J ~ 0.97) the two are identical."""
     return f"""
             WITH pages AS (
@@ -7311,8 +7305,8 @@ def _oracle_sql_entries(frame: str) -> dict[str, str]:
         # re-derived their randomness from md5 folds + the integer-
         # hash sign trick, so the oracles replay every signature and
         # state each pair set's declarative spec (operators/
-        # replayable.py builds the SQL; the seeded numpy/blake2b
-        # families remain in the library under pytest + twins).
+        # replayable.py builds the SQL; only the hyperplane family
+        # keeps a seeded numpy twin, under pytest + ann_lsh_planted).
         "ann_lsh_cosine": _replayable.ann_lsh_oracle_sql(
             query_id=0, k=10, n_planes=12, n_tables=4,
             hamming_radius=3, dim=64,

@@ -71,24 +71,24 @@ def main() -> None:
         stages[name] = best_of(build)
     out["flagship_stages"] = stages
 
-    # -- replayable minhash stage isolation (the HEADLINE dedup path;
-    # bench.py's minhash_stages times the seeded pandas family instead)
-    from google_vision_ocr_spark.operators.replayable import (
-        minhash_lsh_pairs_replayable,
-        minhash_signatures_replayable,
+    # -- minhash stage isolation (the HEADLINE dedup path, which is
+    # also the family bench.py's minhash_stages times)
+    from google_vision_ocr_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
     )
 
     sc.setJobDescription("r7: replayable minhash stages")
     mh = {}
 
     def sigs_only():
-        return minhash_signatures_replayable(t("documents"))
+        return minhash_signatures(t("documents"))
 
     run_query(sigs_only())
     mh["signatures_expr"] = best_of(sigs_only)
 
     def pairs_cold():
-        return minhash_lsh_pairs_replayable(t("documents"))
+        return minhash_lsh_pairs(t("documents"))
 
     run_query(pairs_cold())
     mh["pairs_single_lineage"] = best_of(pairs_cold)
@@ -110,7 +110,7 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         def pairs_only():
-            return minhash_lsh_pairs_replayable(
+            return minhash_lsh_pairs(
                 t("documents"), signatures=sigs
             ).select("id_a", "id_b")
 

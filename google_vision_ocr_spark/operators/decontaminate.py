@@ -5,8 +5,9 @@ The standard pre-training step (GPT-3 §C / PaLM / Llama reports):
 a document is *contaminated* if it shares any word k-gram (k≈8–13)
 with any benchmark item.  Spark-first shape:
 
-- both sides shingle with the same hashed-k-gram UDF the dedup family
-  uses (64-bit keyed blake2b, injective at corpus scale);
+- both sides shingle with the same hashed-k-gram ids exact Jaccard
+  uses (:func:`dedup.shingle_ids`: 60-bit md5 folds, injective at
+  corpus scale, JVM expressions only);
 - the benchmark side is tiny (thousands of eval items vs 10^12 docs)
   → **broadcast semi-join on the shingle hash**: the corpus never
   shuffles, each task probes the broadcast hash set;
@@ -18,12 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import make_shingle_udf
+from .dedup import shingle_ids
 
 
 def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    sh = df.select(F.col(id_col), make_shingle_udf(k)(F.col(text_col)).alias("__sh"))
-    return sh.select(id_col, F.explode("__sh").alias("shingle"))
+    sh = shingle_ids(df, id_col, text_col, k)
+    return sh.select(id_col, F.explode("sh").alias("shingle"))
 
 
 def contaminated_ids(

@@ -6,34 +6,39 @@ these are the standard web-corpus dedup family, built Spark-first:
 - :func:`exact_dedup` — hash-groupBy on document content.  One shuffle
   on the 16-byte digest (never the full text); partial aggregation
   combines map-side.
-- :func:`minhash_lsh_pairs` — shingle → MinHash signature (vectorized
-  numpy per Arrow batch) → banded LSH → bucket self-join.  The join key
-  is ``(band, band_hash)`` so only same-bucket candidates shuffle;
-  at 100 TB this is the only join that matters and it is quadratic only
-  within buckets.
-- :func:`simhash_64` / :func:`simhash_candidates` — 64-bit SimHash with
-  banded hamming blocking (4×16-bit bands: any pair within hamming
-  distance 3 shares at least one exact band).
+- :func:`minhash_signatures` / :func:`minhash_lsh_pairs` — shingle →
+  MinHash signature (one scan-side fold) → banded LSH → bucket pair
+  expansion.  Bucket membership is keyed ``(band, band_key)`` so only
+  same-bucket candidates pair; at 100 TB this is the only pairing that
+  matters and it is quadratic only within buckets.
+- :func:`simhash_signatures` / :func:`simhash_candidates` — 60-bit
+  SimHash with banded hamming blocking (``max_hamming + 1`` bands: any
+  pair within the radius shares at least one exact band).
 - :func:`ngram_jaccard_pairs` — exact Jaccard over word shingles via
   explode + self-join, for verification of the approximate families.
 
-All hashing is keyed blake2b — deterministic across processes (no
-Python ``hash()``), identical on driver and executors.
+All hashing is the SQL-replayable family of :mod:`replayable` (md5
+folds and integer-hash permutations): JVM expressions only, no Python
+worker, deterministic across processes and engines, so the DuckDB
+oracles replay every signature.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
-from ..functions.text import _TOKEN_RE, shingles
+from .replayable import (
+    shingle_hashes_from_tokens_sql,
+    shingle_ids_from_tokens_sql,
+    signature_from_hashes_sql,
+    simhash_code_from_hashes_sql,
+    token_hashes_sql,
+    tokens_sql,
+)
 
-_MERSENNE = (1 << 61) - 1
+#: width of a SimHash code: the replayable md5 fold yields 15 hex digits
+_SIMHASH_BITS = 60
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -53,86 +58,43 @@ def drop_exact_dups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text
     return df.join(keepers, id_col, "left_semi")
 
 
-_TOKEN_HASH_CACHE: dict[str, int] = {}
-
-
-def _token_hash(tok: str) -> int:
-    h = _TOKEN_HASH_CACHE.get(tok)
-    if h is None:
-        h = int.from_bytes(hashlib.blake2b(tok.encode("utf-8"), digest_size=8).digest(), "big")
-        if len(_TOKEN_HASH_CACHE) < 1_000_000:
-            _TOKEN_HASH_CACHE[tok] = h
-    return h
-
-
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Distinct hashes of word k-shingles.
-
-    Hot path: one keyed digest per *distinct token* (cached across the
-    Arrow batch / executor lifetime), then a vectorized polynomial
-    combination over the token-hash array — equivalent uniqueness to
-    hashing each shingle string, ~k× fewer digest calls.
-    """
-    # RE2-whitespace tokenization (functions.text._TOKEN_RE): Python
-    # str.split() honors Unicode whitespace (NBSP, \x0b) that the
-    # RE2-replaying Jaccard/containment oracles treat as token content
-    toks = [t.lower() for t in _TOKEN_RE.findall(text)]
-    if not toks:
-        return np.array([0], dtype=np.uint64)
-    th = np.array([_token_hash(t) for t in toks], dtype=np.uint64)
-    if len(toks) < k:
-        h = np.uint64(1469598103934665603)
-        for v in th:
-            h = h * np.uint64(1000003) + v
-        return np.array([h], dtype=np.uint64)
-    n = len(toks) - k + 1
-    acc = np.full(n, 1469598103934665603, dtype=np.uint64)
-    for j in range(k):
-        acc = acc * np.uint64(1000003) + th[j : j + n]
-    return np.unique(acc)
-
-
-def _perm_params(n_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=n_perm, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, _MERSENNE, size=n_perm, dtype=np.int64).astype(np.uint64)
-    return a, b
-
-
-def make_minhash_udf(n_perm: int = 64, k: int = 3, seed: int = 42):
-    a, b = _perm_params(n_perm, seed)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_udf(texts: pd.Series) -> pd.Series:
-        def one(text: str) -> list[int]:
-            h = _shingle_hashes(text or "", k)
-            # (a*h + b) mod p, vectorized over perms × shingles
-            vals = (a[:, None] * (h[None, :] % _MERSENNE) + b[:, None]) % _MERSENNE
-            return vals.min(axis=1).astype(np.int64).tolist()
-
-        return texts.map(one)
-
-    return minhash_udf
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n_perm: int = 64,
     k: int = 3,
-    seed: int = 42,
 ) -> DataFrame:
-    """(id, minhash) via the seeded numpy pandas-UDF.  r7: the input
-    fans out to cluster parallelism first — the bench tables are
-    single-row-group parquet, so the whole UDF pass otherwise runs on
-    ONE task (same fix as the replayable twin; a no-op at scale where
-    the scan already has enough splits).  Per-row seeded hashing is
-    partition-invariant, so the signature set is unchanged."""
+    """(id, minhash, __ntok) signatures — zero-shuffle scan-side
+    expressions, no Python worker.  Docs with fewer than ``k`` tokens
+    get the all-``M`` sentinel signature (callers filter them via
+    ``__ntok`` — a sentinel-sentinel join would fabricate est_jaccard
+    = 1 pairs out of empty documents).
+
+    r7 shape: the input fans out to cluster parallelism first (the
+    bench's single-row-group scan otherwise runs the whole md5+fold
+    pass on one core), and tokenization materializes as its own
+    projection so the regex ``split`` runs ONCE per row — the previous
+    single-expression form textually inlined the token array and paid
+    4 splits per row (CollapseProject keeps the boundary here because
+    ``__toks`` is referenced 4×, the same multi-reference guard the
+    simhash code documents)."""
     from ..fanout import fanout
 
-    udf = make_minhash_udf(n_perm=n_perm, k=k, seed=seed)
-    return fanout(df, id_col).select(F.col(id_col), udf(F.col(text_col)).alias("minhash"))
+    toks = fanout(df, id_col).select(
+        F.col(id_col),
+        F.expr(tokens_sql(text_col)).alias("__toks"),
+    )
+    hashed = toks.select(
+        F.col(id_col),
+        F.expr(shingle_hashes_from_tokens_sql("__toks", k)).alias("__hs"),
+        F.expr("size(__toks)").alias("__ntok"),
+    )
+    return hashed.select(
+        F.col(id_col),
+        F.expr(signature_from_hashes_sql("__hs", n_perm)).alias("minhash"),
+        "__ntok",
+    )
 
 
 def minhash_banded(
@@ -141,29 +103,21 @@ def minhash_banded(
     n_perm: int = 64,
     bands: int = 16,
 ) -> DataFrame:
-    """The banded ``(id, minhash, band, band_hash)`` projection of a
+    """The banded ``(id, band, band_key)`` rows of a
     :func:`minhash_signatures` table — the explode side of the LSH
-    bucket self-join.  Split out of :func:`minhash_lsh_pairs` so bench
-    stage-breakdowns can time signature-UDF / band-explode / join
-    separately (same expressions, so the composition is unchanged)."""
-    rows_per_band = n_perm // bands
+    bucketing, shared by :func:`minhash_lsh_pairs` and the bench's
+    stage breakdown.  Band keys are the RAW signature slices
+    (``array<bigint>``, collision-free); callers drop sub-``k``-token
+    rows first, as :func:`minhash_lsh_pairs` does."""
+    rpb = n_perm // bands
     return sigs.select(
         F.col(id_col),
-        F.col("minhash"),
         F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda band: F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(F.col("minhash"), band * rows_per_band + 1, rows_per_band),
-                            lambda v: v.cast("string"),
-                        ),
-                    )
-                ),
+            F.expr(
+                f"transform(sequence(0, {bands - 1}), band ->"
+                f" slice(minhash, band * {rpb} + 1, {rpb}))"
             )
-        ).alias("band", "band_hash"),
+        ).alias("band", "band_key"),
     )
 
 
@@ -174,94 +128,112 @@ def minhash_lsh_pairs(
     n_perm: int = 64,
     bands: int = 16,
     k: int = 3,
-    seed: int = 42,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs ``(id_a, id_b, est_jaccard)``.
 
     est_jaccard = fraction of matching MinHash components; pairs are
-    produced once (id_a < id_b) and deduped across bands.
+    produced once (id_a < id_b) and deduped across bands.  Raw band
+    keys make the output set EXACTLY the declarative spec "∃ band with
+    equal components" the oracle states over a cross join (at 100 TB
+    you'd md5 the key to fix its width, which only re-buckets, never
+    changes the pair set beyond md5 collisions).
 
-    At scale, pass ``signatures`` (a materialized
-    :func:`minhash_signatures` table) — the self-join otherwise
-    recomputes the signature UDF once per join side, doubling the most
-    expensive stage.  Locally Catalyst keeps both sides as one scan
-    lineage, so the default is fine for tests.
-    """
-    sigs = signatures if signatures is not None else minhash_signatures(
-        df, id_col, text_col, n_perm, k, seed
+    The signatures are read three times (banding and both attaches):
+    pass ``signatures`` (a materialized :func:`minhash_signatures`
+    table, ``__ntok`` included) so each read hits stored rows instead
+    of re-running the fold.
+
+    r7 shape (guide §2.3/§2.4 — shuffle keys, not payloads; fewer
+    exchanges): bucket membership is ONE skinny exchange —
+    ``groupBy(band, band_key)`` over ``(id, band, band_key)`` rows —
+    pairs expand inside each bucket from the sorted id list (x before
+    y in a sorted distinct list ⟺ x < y, exactly a self-join's
+    ``id_a < id_b`` filter; the explicit null guard reproduces that
+    filter's null-dropping), and the (tiny, deduped) pair set
+    re-attaches signatures.  r7 verified ``exceptAll`` empty both ways
+    vs the banded self-join at sf1.0 and by the DuckDB hash gate at
+    sf0.001/0.01/0.1."""
+    sigs = signatures if signatures is not None else (
+        minhash_signatures(df, id_col, text_col, n_perm, k)
     )
-    banded = minhash_banded(sigs, id_col=id_col, n_perm=n_perm, bands=bands)
-    left = banded.select(
-        F.col("band"), F.col("band_hash"),
-        F.col(id_col).alias("id_a"), F.col("minhash").alias("mh_a"),
-    )
-    right = banded.select(
-        F.col("band"), F.col("band_hash"),
-        F.col(id_col).alias("id_b"), F.col("minhash").alias("mh_b"),
+    sigs = sigs.filter(F.col("__ntok") >= k).drop("__ntok")
+    buckets = (
+        minhash_banded(sigs, id_col=id_col, n_perm=n_perm, bands=bands)
+        .groupBy("band", "band_key")
+        .agg(F.sort_array(F.collect_list(id_col)).alias("__ids"))
+        .filter(F.size("__ids") >= 2)
     )
     pairs = (
-        left.join(right, ["band", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        buckets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(__ids, (x, i) ->"
+                    " transform(slice(__ids, i + 2, size(__ids) - i - 1),"
+                    " y -> struct(x AS id_a, y AS id_b))))"
+                )
+            ).alias("__p")
+        )
+        .select("__p.id_a", "__p.id_b")
+        # sort_array puts nulls first: a null id can only be id_a, and
+        # an `id_a < id_b` predicate drops every null pair
+        .filter(F.col("id_a").isNotNull())
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    # both attaches join the SAME projection (renamed only above the
+    # joins), so its exchange plans once and the second side reuses it
+    mh = sigs.select(id_col, "minhash")
+    a, b = mh.alias("__a"), mh.alias("__b")
+    return (
+        pairs.join(a, F.col("id_a") == F.col(f"__a.{id_col}"))
+        .join(b, F.col("id_b") == F.col(f"__b.{id_col}"))
         .select(
             "id_a", "id_b",
             (
-                F.size(F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda m: m))
-                / F.lit(n_perm)
+                F.size(
+                    F.filter(
+                        F.zip_with("__a.minhash", "__b.minhash", lambda x, y: x == y),
+                        lambda m: m,
+                    )
+                ).cast("double")
+                / F.lit(float(n_perm))
             ).alias("est_jaccard"),
         )
-        .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs
 
 
-def make_simhash_udf(seed: int = 42):
-    @F.pandas_udf(LongType())
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        def one(text: str) -> int:
-            acc = np.zeros(64, dtype=np.int64)
-            for tok in _TOKEN_RE.findall((text or "").lower()):
-                h = int.from_bytes(
-                    hashlib.blake2b(tok.encode("utf-8"), digest_size=8,
-                                    key=seed.to_bytes(8, "big")).digest(),
-                    "big",
-                )
-                bits = (np.uint64(h) >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
-                acc += np.where(bits == 1, 1, -1)
-            val = int((acc > 0).astype(np.uint64) @ (np.uint64(1) << np.arange(64, dtype=np.uint64)))
-            return val - (1 << 64) if val >= (1 << 63) else val  # to signed int64
-
-        return texts.map(one)
-
-    return simhash_udf
-
-
-def simhash_64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-               seed: int = 42) -> DataFrame:
-    return df.select(F.col(id_col), make_simhash_udf(seed)(F.col(text_col)).alias("simhash"))
+def simhash_signatures(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, simhash) — 60-bit codes over the md5-fold hashes of every
+    token occurrence (bit b set iff strictly more tokens have it set
+    than clear)."""
+    hashed = df.select(
+        F.col(id_col),
+        F.expr(token_hashes_sql(text_col)).alias("__hs"),
+    )
+    return hashed.select(
+        F.col(id_col),
+        F.expr(simhash_code_from_hashes_sql("__hs")).alias("simhash"),
+    )
 
 
 def simhash_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                       max_hamming: int = 3, seed: int = 42,
-                       materialize: bool = False,
-                       n_bands: int | None = None,
-                       signatures: DataFrame | None = None) -> DataFrame:
-    """Near-dup pairs by SimHash: band-block then exact hamming filter.
+                       max_hamming: int = 3,
+                       n_bands: int | None = None) -> DataFrame:
+    """Near-dup pairs ``(id_a, id_b, hamming)`` by SimHash: band-block
+    then exact hamming filter.
 
     Blocking is pigeonhole-lossless when ``n_bands > max_hamming``: a
     pair within the hamming radius has at least one band with zero
-    differing bits, so it collides on that band's exact key.  The
+    differing bits, so it collides on that band's exact key — which is
+    why the oracle can state hamming ≤ r over a cross join.  The
     default ``n_bands = max_hamming + 1`` guarantees this (the classic
     Manku et al. WWW'07 configuration is 64-bit / radius 3 / 4×16-bit
-    bands).  More bands ⇒ shorter keys ⇒ hotter buckets: radius 3 gives
-    16-bit keys (65k buckets per band), radius 10 gives ~6-bit keys —
-    fine for verification corpora, too hot for 100 TB, where radius ≤3
-    is the deployable setting.
-
-    ``materialize=True`` persists + eagerly evaluates the signature
-    table so the self-join reads the cache instead of running the
-    SimHash UDF once per side — use at scale (same rationale as
-    ``minhash_lsh_pairs(signatures=...)``).
+    bands; here 4×15-bit over 60 bits).  More bands ⇒ shorter keys ⇒
+    hotter buckets: radius 3 gives 15-bit keys (32k buckets per band),
+    radius 10 gives ~5-bit keys — fine for verification corpora, too
+    hot for 100 TB, where radius ≤3 is the deployable setting.
     """
     if n_bands is None:
         n_bands = max_hamming + 1
@@ -269,19 +241,8 @@ def simhash_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
         raise ValueError(
             f"blocking is lossy: n_bands={n_bands} must exceed max_hamming={max_hamming}"
         )
-    # signatures= swaps the hash family (e.g. the SQL-replayable 60-bit
-    # SimHash in operators/replayable.py) while keeping the lossless
-    # banding + exact-hamming pipeline; same pattern as
-    # minhash_lsh_pairs(signatures=...)
-    sigs = signatures if signatures is not None else simhash_64(
-        df, id_col, text_col, seed
-    )
-    if materialize:
-        from .. import cache
-
-        sigs = cache.track(sigs.persist())
-        sigs.count()
-    base, rem = divmod(64, n_bands)
+    sigs = simhash_signatures(df, id_col, text_col)
+    base, rem = divmod(_SIMHASH_BITS, n_bands)
     widths = [base + (1 if i < rem else 0) for i in range(n_bands)]
     offsets = [sum(widths[:i]) for i in range(n_bands)]
     band_structs = F.array(
@@ -289,20 +250,20 @@ def simhash_candidates(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
             F.struct(
                 F.lit(i).alias("band"),
                 F.shiftrightunsigned(F.col("simhash"), offsets[i])
-                .bitwiseAND(F.lit((1 << widths[i]) - 1)).alias("key16"),
+                .bitwiseAND(F.lit((1 << widths[i]) - 1)).alias("band_key"),
             )
             for i in range(n_bands)
         ]
     )
     banded = sigs.select(id_col, "simhash", F.explode(band_structs).alias("bk")).select(
-        id_col, "simhash", F.col("bk.band").alias("band"), F.col("bk.key16").alias("key16")
+        id_col, "simhash", "bk.band", "bk.band_key"
     )
-    left = banded.select("band", "key16", F.col(id_col).alias("id_a"),
+    left = banded.select("band", "band_key", F.col(id_col).alias("id_a"),
                          F.col("simhash").alias("sh_a"))
-    right = banded.select("band", "key16", F.col(id_col).alias("id_b"),
+    right = banded.select("band", "band_key", F.col(id_col).alias("id_b"),
                           F.col("simhash").alias("sh_b"))
     return (
-        left.join(right, ["band", "key16"])
+        left.join(right, ["band", "band_key"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
             "id_a", "id_b",
@@ -368,28 +329,24 @@ def drop_repeated_paragraphs(
     )
 
 
-def make_shingle_udf(k: int = 3):
-    @F.pandas_udf(ArrayType(LongType()))
-    def shingle_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _shingle_hashes(t or "", k).astype(np.int64).tolist())
-
-    return shingle_udf
+def shingle_ids(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+                k: int = 3) -> DataFrame:
+    """``(id, sh)``: each document's distinct word-``k``-shingle ids
+    (:func:`replayable.shingle_ids_from_tokens_sql`, 60-bit, so exact
+    at corpus scale up to md5 collisions) — the set exact Jaccard and
+    decontamination compare."""
+    toks = df.select(F.col(id_col), F.expr(tokens_sql(text_col)).alias("__toks"))
+    return toks.select(
+        F.col(id_col), F.expr(shingle_ids_from_tokens_sql("__toks", k)).alias("sh")
+    )
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        k: int = 3, threshold: float = 0.5,
-                        shingled: DataFrame | None = None) -> DataFrame:
-    """Exact shingle-Jaccard pairs >= threshold via explode + self-join.
-
-    At scale, pass ``shingled`` (a materialized ``(id, sh)`` frame from
-    the same shingle UDF) so the self-join doesn't run the UDF once per
-    side — same rationale as ``minhash_lsh_pairs(signatures=...)``.
-    """
-    sh = shingled if shingled is not None else df.select(
-        F.col(id_col), make_shingle_udf(k)(F.col(text_col)).alias("sh")
-    )
-    sh = sh.withColumn("n_sh", F.size(F.array_distinct("sh")))
-    exploded = sh.select(id_col, "n_sh", F.explode(F.array_distinct("sh")).alias("shingle"))
+                        k: int = 3, threshold: float = 0.5) -> DataFrame:
+    """Exact shingle-Jaccard pairs >= threshold via explode + self-join
+    over :func:`shingle_ids`."""
+    sh = shingle_ids(df, id_col, text_col, k).withColumn("n_sh", F.size("sh"))
+    exploded = sh.select(id_col, "n_sh", F.explode("sh").alias("shingle"))
     a = exploded.select(F.col("shingle"), F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
     b = exploded.select(F.col("shingle"), F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb"))
     inter = (

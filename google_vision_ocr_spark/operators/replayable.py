@@ -1,24 +1,26 @@
 """SQL-replayable LSH families: MinHash, SimHash, hyperplane codes.
 
-The seeded families in :mod:`dedup` / :mod:`similarity` draw their
-randomness from numpy RNG state (hyperplanes) or keyed blake2b
-(token hashes) — not expressible in SQL, so their contract entries
-could only ever be rows-only checked.  This module re-derives each
-family's randomness from engine-shared deterministic primitives —
-``md5`` (same hex in Spark and DuckDB) and the integer-hash ±1 trick
+Every text sketch in the package hashes with this module's
+expressions: the MinHash / SimHash pipelines in :mod:`dedup`, the
+exact-Jaccard shingle ids and decontamination all draw their
+randomness from engine-shared deterministic primitives — ``md5``
+(same hex in Spark and DuckDB) and the integer-hash ±1 trick
 ``((a·C1 + b·C2) % 1000003) % 2`` that :func:`similarity.
 random_projection_expr` already ships — so every step replays
 bit-for-bit in DuckDB and the full pipelines sit under the typed-hash
-gate (VERDICT r5 next-round #3).
+gate.  Only the hyperplane family keeps a seeded twin (numpy RNG
+planes in :mod:`similarity`, shared by the ANN and embedding-LSH
+index writers); :func:`codes_sql` is its replayable counterpart.
 
-Scale shape: everything here is JVM built-in expressions (nested
-higher-order ``transform``/``aggregate`` folds inside whole-stage
-codegen) — no Python UDF at all, which also makes these the FASTER
-variants of their seeded twins.  The pair pipelines keep the
-bucketed-never-all-pairs shape (banded equality joins); the ORACLES
-instead state the declarative spec (∃ band agreement / hamming ≤ r
-over a cross join at gate scale), so the gate independently proves
-the banding logic lossless rather than replaying it.
+This module holds the SQL expression builders, their DuckDB twins,
+the oracle SQL and the hyperplane-code pipelines.  Everything is JVM
+built-in expressions (nested higher-order ``transform``/``aggregate``
+folds inside whole-stage codegen) — no Python UDF at all.  The pair
+pipelines keep the bucketed-never-all-pairs shape (banded equality
+joins); the ORACLES instead state the declarative spec (∃ band
+agreement / hamming ≤ r over a cross join at gate scale), so the gate
+independently proves the banding logic lossless rather than replaying
+it.
 
 Reference parity: the reference has no LSH (a 1,151-LoC desktop OCR
 app, /root/reference/main_window.py); these are part of the mandated
@@ -39,7 +41,7 @@ Cross-engine pins (each verified in tests/test_replayable_lsh.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: modulus of the MinHash universal-hash family h_p(x) = (a_p·x+b_p)%M
@@ -109,20 +111,15 @@ def _minhash_perm_sql(x_sql: str, p: str) -> str:
     return f"(({a} * ({x_sql}) + {b}) % {M})"
 
 
-def shingle_hashes_sql(text_col: str, k: int = 3) -> str:
+def shingle_hashes_from_tokens_sql(toks: str, k: int = 3) -> str:
     """Spark: array<bigint> of mod-``M`` md5 hashes of the ``k``-token
-    shingles.  MATERIALIZE this as a column before folding signatures
-    over it — an expression inlined into the per-permutation lambda is
+    shingles of a token-ARRAY expression.  Pass a column reference so
+    the tokenizer runs once (r7: inlining ``tokens_sql`` textually put
+    4 regex ``split`` calls in one projection, one per reference), and
+    MATERIALIZE the result as a column before folding signatures over
+    it — an expression inlined into the per-permutation lambda is
     re-evaluated once per permutation (64× the md5 work; measured 45 s
     → ~2 s at 500 docs)."""
-    return shingle_hashes_from_tokens_sql(tokens_sql(text_col), k)
-
-
-def shingle_hashes_from_tokens_sql(toks: str, k: int = 3) -> str:
-    """Spark: shingle hashes from a token-ARRAY expression (pass a
-    column reference so the tokenizer runs once — r7: inlining
-    ``tokens_sql`` textually put 4 regex ``split`` calls in one
-    projection, one per reference)."""
     sh = (
         f"CASE WHEN size({toks}) >= {k}"
         f" THEN transform(sequence(1, size({toks}) - {k - 1}),"
@@ -132,9 +129,27 @@ def shingle_hashes_from_tokens_sql(toks: str, k: int = 3) -> str:
     return f"transform({sh}, s -> {_md5_int_sql('s')} % {M})"
 
 
+def shingle_ids_from_tokens_sql(toks: str, k: int = 3) -> str:
+    """Spark: the distinct shingle ids of a token-ARRAY column — the
+    exact-Jaccard and decontamination set.  Each id is the full 60-bit
+    :func:`_md5_int_sql` of the ``chr(31)``-joined ``k``-shingle, NOT
+    reduced mod ``M``: 31-bit ids would collide (~58 expected over
+    sf0.1's shingles) and change exact counts.  A document with 0
+    tokens is the one shingle ``''`` and one with fewer than ``k``
+    tokens is its space-joined tokens, as in the exact-Jaccard oracle;
+    a null text has no shingles (the oracle's ``unnest`` of NULL)."""
+    sh = (
+        f"CASE WHEN size({toks}) = 0 THEN array('')"
+        f" WHEN size({toks}) < {k} THEN array(array_join({toks}, ' '))"
+        f" ELSE transform(sequence(1, size({toks}) - {k - 1}),"
+        f" j -> concat_ws(chr(31), slice({toks}, j, {k}))) END"
+    )
+    return f"array_distinct(transform({sh}, s -> {_md5_int_sql('s')}))"
+
+
 def shingle_hashes_duck(text_col: str, k: int = 3) -> str:
-    """DuckDB twin of :func:`shingle_hashes_sql` (hoist into a CTE for
-    the same reason)."""
+    """DuckDB twin of :func:`shingle_hashes_from_tokens_sql` (hoist
+    into a CTE for the same reason)."""
     toks = tokens_duck(text_col)
     sh = (
         f"CASE WHEN len({toks}) >= {k}"
@@ -174,133 +189,6 @@ def signature_from_hashes_duck(hs_col: str, n_perm: int = 64) -> str:
         f"list_transform(generate_series(0, {n_perm - 1}), p ->"
         f" list_reduce(list_prepend(CAST({M} AS BIGINT), {hs_col}),"
         f" (m, x) -> least(m, {_minhash_perm_sql('x', 'p')})))"
-    )
-
-
-def minhash_signatures_replayable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_perm: int = 64,
-    k: int = 3,
-) -> DataFrame:
-    """(id, minhash, __ntok) signatures — zero-shuffle scan-side
-    expressions, no Python worker (the seeded twin pays an Arrow
-    round-trip).  Docs with fewer than ``k`` tokens get the all-``M``
-    sentinel signature (callers filter them via ``__ntok`` — a
-    sentinel-sentinel join would fabricate est_jaccard = 1 pairs out
-    of empty documents).
-
-    r7 shape: the input fans out to cluster parallelism first (the
-    bench's single-row-group scan otherwise runs the whole md5+fold
-    pass on one core), and tokenization materializes as its own
-    projection so the regex ``split`` runs ONCE per row — the previous
-    single-expression form textually inlined the token array and paid
-    4 splits per row (CollapseProject keeps the boundary here because
-    ``__toks`` is referenced 4×, the same multi-reference guard the
-    simhash code documents)."""
-    from ..fanout import fanout
-
-    toks = fanout(df, id_col).select(
-        F.col(id_col),
-        F.expr(tokens_sql(text_col)).alias("__toks"),
-    )
-    hashed = toks.select(
-        F.col(id_col),
-        F.expr(shingle_hashes_from_tokens_sql("__toks", k)).alias("__hs"),
-        F.expr("size(__toks)").alias("__ntok"),
-    )
-    return hashed.select(
-        F.col(id_col),
-        F.expr(signature_from_hashes_sql("__hs", n_perm)).alias("minhash"),
-        "__ntok",
-    )
-
-
-def minhash_lsh_pairs_replayable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_perm: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
-    """Banded-LSH candidate pairs ``(id_a, id_b, est_jaccard)`` with
-    fully replayable randomness.  Band keys are the RAW signature
-    slices (``array<bigint>`` — collision-free, so the output set is
-    EXACTLY the declarative spec "∃ band with equal components" the
-    oracle states over a cross join; at 100 TB you'd md5 the key to
-    fix its width, which only re-buckets, never changes the pair set
-    beyond md5 collisions).  Pass ``signatures`` (a materialized
-    :func:`minhash_signatures_replayable` table, ``__ntok`` included)
-    at scale so banding reads the cache instead of re-hashing every
-    shingle.
-
-    r7 shape (guide §2.3/§2.4 — shuffle keys, not payloads; fewer
-    exchanges): the r6 banded self-join shuffled BOTH 64-element
-    signature arrays 16×/doc through two exchanges.  Now the bucket
-    membership is ONE skinny exchange — ``groupBy(band, band_key)``
-    over ``(id, band, band_key)`` rows — pairs expand inside each
-    bucket from the sorted id list (x before y in a sorted distinct
-    list ⟺ x < y, exactly the old ``id_a < id_b`` join filter; the
-    explicit null guard reproduces the old filter's null-dropping),
-    and the (tiny, deduped) pair set re-attaches signatures from the
-    materialized table.  Identical pair set and est_jaccard — r7
-    verified ``exceptAll`` empty both ways vs the r6 shape at sf1.0
-    and by the DuckDB hash gate at sf0.001/0.01/0.1."""
-    rpb = n_perm // bands
-    sigs = signatures if signatures is not None else (
-        minhash_signatures_replayable(df, id_col, text_col, n_perm, k)
-    )
-    sigs = sigs.filter(F.col("__ntok") >= k).drop("__ntok")
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), band ->"
-                f" slice(minhash, band * {rpb} + 1, {rpb}))"
-            )
-        ).alias("band", "band_key"),
-    )
-    buckets = (
-        banded.groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(__ids, (x, i) ->"
-                    " transform(slice(__ids, i + 2, size(__ids) - i - 1),"
-                    " y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("__p")
-        )
-        .select("__p.id_a", "__p.id_b")
-        # sort_array puts nulls first: a null id can only be id_a, and
-        # the old `id_a < id_b` predicate dropped every null pair
-        .filter(F.col("id_a").isNotNull())
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("mh_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("mh_b"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a", "id_b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("mh_a", "mh_b", lambda x, y: x == y),
-                        lambda m: m,
-                    )
-                ).cast("double")
-                / F.lit(float(n_perm))
-            ).alias("est_jaccard"),
-        )
     )
 
 
@@ -388,45 +276,6 @@ def simhash_code_duck(hs_col: str, nt_col: str) -> str:
         f" {hs_col}), (a, h) -> a + ((h >> b) & 1)) > {nt_col}"
         " THEN (CAST(1 AS BIGINT) << b)"
         " ELSE CAST(0 AS BIGINT) END)), (a, x) -> a + x)"
-    )
-
-
-def simhash_signatures_replayable(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash) — drop-in signature table for
-    :func:`dedup.simhash_candidates`'s ``signatures=`` path.  60-bit
-    codes (the replayable md5 fold yields 15 hex digits); all token
-    occurrences count, like the seeded 64-bit family."""
-    hashed = df.select(
-        F.col(id_col),
-        F.expr(token_hashes_sql(text_col)).alias("__hs"),
-    )
-    return hashed.select(
-        F.col(id_col),
-        F.expr(simhash_code_from_hashes_sql("__hs")).alias("simhash"),
-    )
-
-
-def simhash_candidates_replayable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 10,
-) -> DataFrame:
-    """Near-dup pairs ``(id_a, id_b, hamming)`` at hamming ≤
-    ``max_hamming`` over the replayable 60-bit SimHash.  Reuses the
-    seeded family's pigeonhole banding (lossless: the final filter is
-    the exact hamming predicate, so blocking only prunes), which is
-    exactly why the oracle can state hamming ≤ r over a cross join."""
-    from .dedup import simhash_candidates
-
-    return simhash_candidates(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        max_hamming=max_hamming,
-        signatures=simhash_signatures_replayable(df, id_col, text_col),
     )
 
 

@@ -444,26 +444,6 @@ def semdedup_keep(
     )
 
 
-def lsh_bucket_histogram(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Bucket-occupancy histogram of one LSH table — the balance check
-    a real deployment watches (hot buckets ⇒ bad pruning)."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    udf = make_bucket_udf(dim, n_planes, seed)
-    return (
-        embeddings.select(udf(F.col(vec_col)).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-    )
-
-
 def hyperplane_lsh_topk(
     embeddings: DataFrame,
     query_id: int,

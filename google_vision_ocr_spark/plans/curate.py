@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..functions.text import lang_id_series, quality_score
-from ..operators.dedup import exact_dedup, minhash_lsh_pairs
+from ..operators.dedup import exact_dedup, minhash_lsh_pairs, minhash_signatures
 from .fused import extract_fused
 
 METRICS_SCHEMA = "quality double, lang_guess string, ws_tokens bigint"
@@ -81,18 +81,19 @@ def curate(
     survived all gates plus per-gate booleans summed (survivors at each
     gate), so one pass yields the whole funnel.
 
-    ``materialize=True`` (default) cuts the lineage twice with
+    ``materialize=True`` (default) cuts the lineage three times with
     ``localCheckpoint(eager=True)``: once after the gates, where the
     survivors feed both sides of the exact-dedup semi-join, so
     extraction and the metrics UDF run once and the funnel counters
-    resolve on that action; and once on the returned corpus, so the
-    MinHash signature UDF runs inside that cut and later plans start
-    from its stored blocks instead of re-deriving it.  The first cut's
-    blocks are released once the second exists.  Cut blocks live in
-    executor storage: losing an executor fails the job instead of
-    recomputing (``docs/SCALE.md``).  Pass ``materialize=False`` for a
-    fully lazy plan (e.g. when composing into a larger job that does
-    its own checkpointing).
+    resolve on that action; once on the MinHash signatures, which the
+    pair pipeline reads three times, so the signature fold runs once;
+    and once on the returned corpus, so later plans start from its
+    stored blocks instead of re-deriving the near-dup step.  The first
+    two cuts' blocks are released once the last exists.  Cut blocks
+    live in executor storage: losing an executor fails the job instead
+    of recomputing (``docs/SCALE.md``).  Pass ``materialize=False`` for
+    a fully lazy plan (e.g. when composing into a larger job that does
+    its own checkpointing); the signature fold then runs three times.
     """
     docs = extract_fused(pages, **extract_kwargs)
     docs = docs.filter(F.col("n_errors") == 0)
@@ -133,8 +134,15 @@ def curate(
     )
     deduped = kept.join(keepers, "url", "left_semi")
 
-    # near-dup removal: drop the max-url side of each candidate pair
-    pairs = minhash_lsh_pairs(deduped, id_col="url", text_col="text")
+    # near-dup removal: drop the max-url side of each candidate pair.
+    # The pair pipeline reads the signatures three times (banding and
+    # both attaches), so they are cut once instead of folded thrice.
+    sigs = minhash_signatures(deduped, "url")
+    if materialize:
+        sigs = sigs.localCheckpoint(eager=True)
+    pairs = minhash_lsh_pairs(
+        deduped, id_col="url", text_col="text", signatures=sigs
+    )
     losers = (
         pairs.filter(F.col("est_jaccard") >= near_dup_jaccard)
         .select(F.greatest("id_a", "id_b").alias("url"))
@@ -144,6 +152,7 @@ def curate(
     if materialize:
         curated = curated.localCheckpoint(eager=True)
         cache.release_cut(kept)
+        cache.release_cut(sigs)
     return curated, obs
 
 

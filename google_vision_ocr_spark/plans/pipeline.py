@@ -21,8 +21,8 @@ from the operators this package already ships:
 
 Each stage is the scale-shape variant documented in ``docs/PLANS.md``;
 the pipeline adds no new shuffle beyond its stages' own.  The lineage
-is cut (``localCheckpoint(eager=True)``) at its three reuse points:
-curate's gate survivors and its curated corpus (see
+is cut (``localCheckpoint(eager=True)``) at its four reuse points:
+curate's gate survivors, MinHash signatures and curated corpus (see
 :func:`..plans.curate.curate`), and the corpus after paragraph dedup
 and redaction, which the LM-training pass, the packing pass, the
 writes and the report all read.

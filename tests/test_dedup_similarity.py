@@ -108,30 +108,48 @@ def test_cosine_pairs_bruteforce(spark):
     assert approx == exact
 
 
-def test_simhash_banding_pigeonhole_lossless(spark):
+@pytest.mark.parametrize("radius", [3, 10])
+def test_simhash_banding_pigeonhole_lossless(spark, radius):
     """n_bands = max_hamming + 1 must cover every pair within the radius:
     the band-blocked candidate set equals the exact O(n^2) hamming filter
     (on the real testdata documents, whose planted near-dups sit at
-    hamming up to ~8 — the case that exposed the fixed 4x16 blocking)."""
-    from google_vision_ocr_spark.operators.dedup import simhash_64, simhash_candidates
+    hamming up to ~8 — the case that exposed the fixed 4x16 blocking).
+    Checked twice: against a Spark cross join over the signature table,
+    and, with the reported hamming, against the spec computed from the
+    collected signatures — the claim the DuckDB oracle makes, pinned
+    here so a banding regression fails fast in pytest."""
+    from google_vision_ocr_spark.operators.dedup import (
+        simhash_candidates,
+        simhash_signatures,
+    )
 
     docs_df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for radius in (3, 10):
-        cands = {
-            (r["id_a"], r["id_b"])
-            for r in simhash_candidates(docs_df, max_hamming=radius).collect()
-        }
-        sigs = simhash_64(docs_df)
-        a = sigs.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sa"))
-        b = sigs.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sb"))
-        exact = {
-            (r["id_a"], r["id_b"])
-            for r in a.crossJoin(b)
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= radius)
-            .collect()
-        }
-        assert cands == exact, f"radius {radius}: blocking lost {exact - cands}"
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in simhash_candidates(docs_df, max_hamming=radius).collect()
+    }
+    cands = {(a, b) for a, b, _ in got}
+    sigs = simhash_signatures(docs_df)
+    a = sigs.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sa"))
+    b = sigs.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sb"))
+    exact = {
+        (r["id_a"], r["id_b"])
+        for r in a.crossJoin(b)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= radius)
+        .collect()
+    }
+    assert cands == exact, f"radius {radius}: blocking lost {exact - cands}"
+    codes = {r.doc_id: r.simhash for r in sigs.collect()}
+    ids = sorted(codes)
+    expected = {
+        (x, y, bin(codes[x] ^ codes[y]).count("1"))
+        for i, x in enumerate(ids)
+        for y in ids[i + 1:]
+        if bin(codes[x] ^ codes[y]).count("1") <= radius
+    }
+    assert got == expected
+    assert len(got) > 0
 
 
 def test_simhash_rejects_lossy_banding(docs):

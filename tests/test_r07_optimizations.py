@@ -45,11 +45,9 @@ def test_fanout_env_override(spark, monkeypatch):
 def _reference_pairs(spark, df):
     """The pre-r7 shape: banded equality self-join + id_a < id_b +
     dropDuplicates — the declarative spec the oracle states."""
-    from google_vision_ocr_spark.operators.replayable import (
-        minhash_signatures_replayable,
-    )
+    from google_vision_ocr_spark.operators.dedup import minhash_signatures
 
-    sigs = minhash_signatures_replayable(df).filter(F.col("__ntok") >= 3)
+    sigs = minhash_signatures(df).filter(F.col("__ntok") >= 3)
     banded = sigs.select(
         F.col("doc_id"),
         F.col("minhash"),
@@ -82,9 +80,7 @@ def test_minhash_bucket_pairgen_matches_join_shape(spark):
     """The r7 one-exchange bucket pair expansion must emit EXACTLY the
     r6 self-join's pair set (planted near-dups, a disjoint doc, and
     sub-k-token docs that must be filtered, not paired)."""
-    from google_vision_ocr_spark.operators.replayable import (
-        minhash_lsh_pairs_replayable,
-    )
+    from google_vision_ocr_spark.operators.dedup import minhash_lsh_pairs
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [
@@ -96,7 +92,7 @@ def test_minhash_bucket_pairgen_matches_join_shape(spark):
         (21, "too short"),            # identical, still filtered
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    new = minhash_lsh_pairs_replayable(df)
+    new = minhash_lsh_pairs(df)
     ref = _reference_pairs(spark, df)
     # collected-set comparison: exceptAll over this dropDuplicates +
     # HOF-expression shape trips INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in
@@ -113,17 +109,17 @@ def test_minhash_bucket_pairgen_matches_join_shape(spark):
 def test_minhash_banded_exchange_is_signature_free(spark):
     """The whole point of the r7 join diet: the 64-element signature
     array must not ride the bucket exchange — only (id, band, slice)."""
-    from google_vision_ocr_spark.operators.replayable import (
-        minhash_lsh_pairs_replayable,
-        minhash_signatures_replayable,
+    from google_vision_ocr_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
     )
 
     df = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon {i}") for i in range(10)],
         "doc_id long, text string",
     )
-    sigs = minhash_signatures_replayable(df)
-    q = minhash_lsh_pairs_replayable(df, signatures=sigs)
+    sigs = minhash_signatures(df)
+    q = minhash_lsh_pairs(df, signatures=sigs)
     fmt = q._sc._jvm.PythonSQLUtils.explainString(
         q._jdf.queryExecution(), "formatted")
     # the exchange that buckets band membership must be signature-free:
@@ -141,12 +137,12 @@ def test_minhash_banded_exchange_is_signature_free(spark):
     assert "sort_array(collect_list" in fmt
 
 
-def test_seeded_minhash_signatures_fanout_and_invariance(spark):
-    """r7 (second pass): the seeded pandas-UDF signature table fans
-    out to cluster parallelism (the bench tables are single-row-group
-    parquet, so the UDF pass otherwise runs one-task) and per-row
-    seeded hashing is partition-invariant — the signature set must not
-    depend on the fan-out."""
+def test_minhash_signatures_fanout_and_invariance(spark):
+    """r7 (second pass): the signature table fans out to cluster
+    parallelism (the bench tables are single-row-group parquet, so the
+    signature pass otherwise runs one-task) and per-row hashing is
+    partition-invariant — the signature set must not depend on the
+    fan-out."""
     from google_vision_ocr_spark.operators.dedup import minhash_signatures
 
     df = spark.createDataFrame(

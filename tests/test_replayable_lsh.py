@@ -1,7 +1,9 @@
-"""SQL-replayable LSH families (operators/replayable.py): cross-engine
-bit-identity of the primitives, losslessness of the banding vs the
-declarative spec, planted-pair recall, and the no-Python-UDF plan
-claim.  The full-pipeline hash evidence lives in the driver gate
+"""SQL-replayable LSH families (operators/replayable.py and the
+pipelines built on it in operators/dedup.py and decontaminate.py):
+cross-engine bit-identity of the primitives, planted-pair recall, the
+no-Python-UDF plan claim, and exact Jaccard on edge-case texts.  The
+SimHash banding's losslessness is pinned in test_dedup_similarity.
+The full-pipeline hash evidence lives in the contract's hash gate
 (ann_lsh_cosine / dedup_minhash_lsh / dedup_simhash /
 lsh_bucket_histogram all carry DuckDB oracles since r6)."""
 
@@ -9,6 +11,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from google_vision_ocr_spark.operators import decontaminate as C
+from google_vision_ocr_spark.operators import dedup as D
 from google_vision_ocr_spark.operators import replayable as R
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -57,33 +61,9 @@ def test_minhash_replayable_recall_on_planted_pairs(spark, docs):
     ≥ 0.97 — the replayable family must surface (nearly) all of them
     with est_jaccard ≈ 1 (16 bands × 4 rows: miss probability per
     pair ≤ (1 − J⁴)¹⁶ ≈ 1e-10 at J = 0.97)."""
-    pairs = R.minhash_lsh_pairs_replayable(docs).collect()
+    pairs = D.minhash_lsh_pairs(docs).collect()
     strong = [r for r in pairs if r.est_jaccard >= 0.9]
     assert len(strong) >= 20, (len(pairs), len(strong))
-
-
-def test_simhash_replayable_banding_is_lossless(spark, docs):
-    """The operator's pigeonhole banding + exact hamming filter must
-    equal the declarative spec computed from the collected signatures
-    — the same claim the DuckDB oracle makes, pinned here Spark-only
-    so a banding regression fails fast in pytest."""
-    sigs = {
-        r.doc_id: r.simhash
-        for r in R.simhash_signatures_replayable(docs).collect()
-    }
-    ids = sorted(sigs)
-    expected = {
-        (a, b, bin(sigs[a] ^ sigs[b]).count("1"))
-        for i, a in enumerate(ids)
-        for b in ids[i + 1:]
-        if bin(sigs[a] ^ sigs[b]).count("1") <= 10
-    }
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in R.simhash_candidates_replayable(docs).collect()
-    }
-    assert got == expected
-    assert len(got) > 0
 
 
 def test_minhash_short_docs_never_pair(spark):
@@ -94,7 +74,7 @@ def test_minhash_short_docs_never_pair(spark):
          (4, "a b c d e f g")],
         "doc_id bigint, text string",
     )
-    pairs = R.minhash_lsh_pairs_replayable(df).collect()
+    pairs = D.minhash_lsh_pairs(df).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(3, 4)}
     assert pairs[0].est_jaccard == 1.0
 
@@ -102,10 +82,18 @@ def test_minhash_short_docs_never_pair(spark):
 def test_replayable_pipelines_have_no_python_udf(spark, docs, emb):
     """The whole point of the replayable family at scale: pure JVM
     expressions — no ArrowEvalPython / BatchEvalPython stage anywhere
-    (the seeded twins each pay an Arrow round-trip per side)."""
+    (a Python UDF pays an Arrow round-trip per task).  Covers every
+    text-sketch pipeline: MinHash, SimHash, exact Jaccard and both
+    decontamination shingle joins."""
+    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
+        F.substring("text", 1, 120).alias("text")
+    )
     for df in (
-        R.minhash_lsh_pairs_replayable(docs),
-        R.simhash_candidates_replayable(docs),
+        D.minhash_lsh_pairs(docs),
+        D.simhash_candidates(docs, max_hamming=10),
+        D.ngram_jaccard_pairs(docs),
+        C.contaminated_ids(docs, bench),
+        C.contamination_fraction(docs, bench),
         R.hyperplane_lsh_topk_replayable(emb, query_id=0, dim=64),
         R.lsh_bucket_histogram_replayable(emb, dim=64),
     ):
@@ -118,7 +106,7 @@ def test_minhash_signature_matches_duckdb_on_sample(spark, docs):
     cross-engine for a sample of documents."""
     sp = {
         r.doc_id: list(r.minhash)
-        for r in R.minhash_signatures_replayable(docs)
+        for r in D.minhash_signatures(docs)
         .filter(F.col("doc_id") < 50)
         .collect()
     }
@@ -136,3 +124,43 @@ def test_minhash_signature_matches_duckdb_on_sample(spark, docs):
         ).fetchall()
     }
     assert sp == du and len(sp) > 0
+
+
+def test_exact_jaccard_edge_cases_match_oracle(spark):
+    """The gate data has no document under 3 tokens, so the short-text
+    branches of the shingle ids (0 tokens -> '', fewer than k -> the
+    space-joined tokens) are pinned here: at threshold 0 every pair
+    sharing a shingle is reported, and the Spark result must equal
+    DuckDB running the exact-Jaccard oracle on the same rows."""
+    import __spark_entry__ as entry_mod
+
+    rows = [
+        (1, ""),
+        (2, "  \t \n "),                      # whitespace only
+        (3, "alpha beta"),                     # two identical 2-token docs
+        (4, "alpha beta"),
+        (5, "solo"),                           # 1 token
+        (6, "one\ttwo\fthree\rfour"),          # tab/form-feed separators
+        (7, "one two three four"),
+        (8, "Upper Case Twin Words"),          # case twins
+        (9, "upper case twin words"),
+        (10, "the quick brown fox jumps over the lazy dog"),
+        (11, "the quick brown fox leaps over the lazy dog"),
+        (12, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = sorted(
+        (r.id_a, r.id_b, r.jaccard)
+        for r in D.ngram_jaccard_pairs(df, threshold=0.0).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(
+        (a, b, round(j, 6))
+        for a, b, j in con.execute(entry_mod._exact_jaccard_oracle(0.0)).fetchall()
+    )
+    assert got == want
+    assert (1, 2, 1.0) in got and (3, 4, 1.0) in got
+    assert (6, 7, 1.0) in got and (8, 9, 1.0) in got
+    assert any(r[:2] == (10, 11) for r in got)
