@@ -466,29 +466,26 @@ def _ann_bruteforce(spark, sf_dir):
 
 
 def _ann_lsh(spark, sf_dir):
-    """OR-amplified hyperplane-LSH top-10 with REPLAYABLE randomness
-    (r6, VERDICT r5 #3): plane (t, b) is a ±1 Rademacher normal from
-    the jl_projection integer-hash sign trick, codes are left-fold
-    expressions — the DuckDB oracle replays codes, the any-table
-    Hamming filter, and the cosine rerank, so this family finally
-    carries hash evidence (partial recall and all).  The seeded numpy
-    family stays in the library (similarity.hyperplane_lsh_topk,
-    pytest + ann_lsh_planted twin)."""
-    from google_vision_ocr_spark.operators.replayable import (
-        hyperplane_lsh_topk_replayable,
-    )
+    """OR-amplified hyperplane-LSH top-10 with REPLAYABLE randomness:
+    the seeded Gaussian planes ship into the plan as one JSON literal
+    and codes are left-fold expressions — the DuckDB oracle replays
+    the codes, the any-table Hamming filter, and the cosine rerank, so
+    the family carries hash evidence (partial recall and all).  The
+    same family serves ann_lsh_planted, ann_lsh_pruned_multiprobe,
+    embedding_near_dups and lsh_bucket_histogram."""
+    from google_vision_ocr_spark.operators.similarity import hyperplane_lsh_topk
 
-    return hyperplane_lsh_topk_replayable(
+    return hyperplane_lsh_topk(
         _t(spark, sf_dir, "embeddings"), query_id=0, k=10, dim=64
     )
 
 
 def _ann_ivf(spark, sf_dir):
     """IVF-style ANN: coarse-quantize to deterministic centroids, probe
-    the 4 nearest cells, exact-rerank within them.  Unlike the
-    seeded-hash LSH family every step is cosine arithmetic, so the
-    DuckDB oracle replays the whole algorithm (assignment, probe,
-    rerank) — a falsifiable partial-recall search path."""
+    the 4 nearest cells, exact-rerank within them.  Every step is
+    cosine arithmetic, so the DuckDB oracle replays the whole
+    algorithm (assignment, probe, rerank) — a falsifiable
+    partial-recall search path."""
     from google_vision_ocr_spark.operators.similarity import ivf_topk
 
     return ivf_topk(_t(spark, sf_dir, "embeddings"), query_id=0, k=10,
@@ -577,12 +574,10 @@ def _ann_lsh_pruned_multiprobe(spark, sf_dir):
 
     frame = _planted_neighbor_frame(spark, sf_dir)
     path = _scratch_dir("lshm", sf_dir)
-    write_lsh_multi_index(
-        frame, path, n_tables=4, n_planes=12, seed=42, dim=64
-    )
+    write_lsh_multi_index(frame, path, n_tables=4, n_planes=12, dim=64)
     return lsh_multiprobe_pruned(
         spark, frame, path, query_id=0, k=10, n_tables=4, n_planes=12,
-        radius=1, seed=42, dim=64,
+        radius=1, dim=64,
     )
 
 
@@ -1580,13 +1575,9 @@ def _lsh_bucket_histogram(spark, sf_dir):
     """Bucket-occupancy histogram over REPLAYABLE table-0 codes (r6)
     — the balance check a deployment watches, with a full DuckDB
     oracle (the package's only bucket histogram)."""
-    from google_vision_ocr_spark.operators.replayable import (
-        lsh_bucket_histogram_replayable,
-    )
+    from google_vision_ocr_spark.operators.similarity import lsh_bucket_histogram
 
-    return lsh_bucket_histogram_replayable(
-        _t(spark, sf_dir, "embeddings"), dim=64
-    )
+    return lsh_bucket_histogram(_t(spark, sf_dir, "embeddings"), dim=64)
 
 
 # Deterministic near-duplicate planting for the embedding-LSH recall test.
@@ -7301,12 +7292,12 @@ def _oracle_sql_entries(frame: str) -> dict[str, str]:
                    t.threshold
             FROM r, t WHERE r.rn = t.threshold
         """,
-        # The four formerly-rows-only LSH entries (VERDICT r5 #3): r6
-        # re-derived their randomness from md5 folds + the integer-
-        # hash sign trick, so the oracles replay every signature and
-        # state each pair set's declarative spec (operators/
-        # replayable.py builds the SQL; only the hyperplane family
-        # keeps a seeded numpy twin, under pytest + ann_lsh_planted).
+        # The four formerly-rows-only LSH entries (VERDICT r5 #3): their
+        # randomness comes from md5 folds, integer-hash permutations
+        # and the seeded hyperplanes shipped as one literal, so the
+        # oracles replay every signature and state each pair set's
+        # declarative spec (operators/replayable.py builds the SQL;
+        # each family has exactly one implementation).
         "ann_lsh_cosine": _replayable.ann_lsh_oracle_sql(
             query_id=0, k=10, n_planes=12, n_tables=4,
             hamming_radius=3, dim=64,

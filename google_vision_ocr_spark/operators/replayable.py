@@ -1,26 +1,23 @@
 """SQL-replayable LSH families: MinHash, SimHash, hyperplane codes.
 
-Every text sketch in the package hashes with this module's
-expressions: the MinHash / SimHash pipelines in :mod:`dedup`, the
-exact-Jaccard shingle ids and decontamination all draw their
-randomness from engine-shared deterministic primitives — ``md5``
-(same hex in Spark and DuckDB) and the integer-hash ±1 trick
-``((a·C1 + b·C2) % 1000003) % 2`` that :func:`similarity.
-random_projection_expr` already ships — so every step replays
-bit-for-bit in DuckDB and the full pipelines sit under the typed-hash
-gate.  Only the hyperplane family keeps a seeded twin (numpy RNG
-planes in :mod:`similarity`, shared by the ANN and embedding-LSH
-index writers); :func:`codes_sql` is its replayable counterpart.
+Every sketch in the package hashes with this module's expressions.
+The MinHash / SimHash pipelines in :mod:`dedup`, the exact-Jaccard
+shingle ids and decontamination draw their randomness from
+engine-shared deterministic primitives — ``md5`` (same hex in Spark
+and DuckDB) and integer-hash permutation parameters.  The hyperplane
+family (every LSH operator in :mod:`similarity`) takes seeded
+Gaussian planes, shipped into the plan as one JSON literal
+(:func:`planes_json`).  So every step replays bit-for-bit in DuckDB
+and the full pipelines sit under the typed-hash gate.
 
-This module holds the SQL expression builders, their DuckDB twins,
-the oracle SQL and the hyperplane-code pipelines.  Everything is JVM
-built-in expressions (nested higher-order ``transform``/``aggregate``
-folds inside whole-stage codegen) — no Python UDF at all.  The pair
-pipelines keep the bucketed-never-all-pairs shape (banded equality
-joins); the ORACLES instead state the declarative spec (∃ band
-agreement / hamming ≤ r over a cross join at gate scale), so the gate
-independently proves the banding logic lossless rather than replaying
-it.
+This module holds the SQL expression builders, their DuckDB twins
+and the oracle SQL.  Everything is JVM built-in expressions (nested
+higher-order ``transform``/``aggregate`` folds inside whole-stage
+codegen) — no Python UDF at all.  The pair pipelines keep the
+bucketed-never-all-pairs shape (banded equality joins); the ORACLES
+instead state the declarative spec (∃ band agreement / hamming ≤ r
+over a cross join at gate scale), so the gate independently proves
+the banding logic lossless rather than replaying it.
 
 Reference parity: the reference has no LSH (a 1,151-LoC desktop OCR
 app, /root/reference/main_window.py); these are part of the mandated
@@ -37,12 +34,14 @@ Cross-engine pins (each verified in tests/test_replayable_lsh.py):
 - ``sequence(1, 0)`` DESCENDS in Spark while ``generate_series(1,0)``
   is empty in DuckDB — shingle counts are guarded with CASE WHEN
   size >= k on BOTH sides.
+- hyperplane planes cross as one JSON string of shortest-repr doubles,
+  which both parsers return bit-exactly; the dot product is a left
+  fold from 0.0 in index order on both sides.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import json
 
 #: modulus of the MinHash universal-hash family h_p(x) = (a_p·x+b_p)%M
 #: — 2^31-1 (prime), so a_p·x ≤ (M-1)² < 2^62 never overflows int64
@@ -51,16 +50,6 @@ M = 2_147_483_647
 #: RE2's whitespace class [ \t\n\f\r] (the repo-wide token boundary),
 #: assembled from chr() so no SQL string-escape dialect can mangle it
 WS_CLASS = "concat('[ ', chr(9), chr(10), chr(12), chr(13), ']+')"
-
-#: deterministic ±1 sign for (table t, plane b, coordinate i) — same
-#: integer-hash trick as random_projection_expr, distinct constants
-_SIGN = (
-    "(CASE WHEN ((CAST({t} AS BIGINT) * 888888877"
-    " + CAST({b} AS BIGINT) * 1315423911"
-    " + CAST({i} AS BIGINT) * 2654435761) % 1000003) % 2 = 0"
-    " THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)"
-)
-
 
 # ---------------------------------------------------------------- tokens
 
@@ -301,76 +290,73 @@ def simhash_pairs_oracle_sql(max_hamming: int = 10) -> str:
 
 # ---------------------------------------------------- hyperplane codes
 
+#: table t of the hyperplane family draws its planes from
+#: ``RandomState(PLANE_SEED + 1000·t)``
+PLANE_SEED = 42
+
+
+def planes_json(dim: int, n_planes: int, n_tables: int) -> str:
+    """The hyperplane family's planes as ONE JSON literal: table ``t``
+    is ``RandomState(PLANE_SEED + 1000·t).standard_normal((n_planes,
+    dim))``.  Independent Gaussian streams per table: ±1 integer-hash
+    planes (affine shifts of one sequence) missed the same planted
+    pairs in every table at once.  ``json.dumps`` writes shortest-repr
+    doubles, which both engines parse back bit-exactly."""
+    import numpy as np  # only the embedding operators need it
+
+    return json.dumps([
+        np.random.RandomState(PLANE_SEED + 1000 * t)
+        .standard_normal((n_planes, dim)).tolist()
+        for t in range(n_tables)
+    ])
+
+
 def codes_sql(vec_col: str, dim: int, n_planes: int, n_tables: int) -> str:
-    """Spark: array<bigint> of per-table hyperplane-LSH codes.  Plane
-    (t, b)'s normal is a ±1 Rademacher vector from the integer-hash
-    sign; bit b is set iff the left-fold dot product is > 0 (a valid
-    cosine-LSH family — SimHash over coordinates)."""
-    sign = _SIGN.format(t="t", b="b", i="i")
+    """Spark: array<bigint> of per-table hyperplane-LSH codes.  Bit b
+    of table t is set iff the left-fold dot product of plane (t, b)
+    with the vector is > 0.  The planes ship as one string literal
+    (:func:`planes_json`): a nested ``array(...)`` literal of the same
+    values took 0.41–0.46 s to plan against 0.04–0.07 s.  The dot
+    product zips the vector with the plane (the
+    :data:`similarity.DOT_EXPR` shape): over sf0.1's 2,000 vectors it
+    took 0.9–1.2 s against 1.5–1.6 s for a fold over ``sequence(0,
+    dim - 1)`` that indexes both arrays with ``element_at``."""
+    planes = (
+        f"from_json('{planes_json(dim, n_planes, n_tables)}',"
+        " 'array<array<array<double>>>')"
+    )
+    # zip_with pads a short array with nulls, which would silently
+    # clear bits: a vector of the wrong width is an error instead
     return (
-        f"transform(sequence(0, {n_tables - 1}), t ->"
-        f" aggregate(sequence(0, {n_planes - 1}), CAST(0 AS BIGINT),"
-        " (acc, b) -> acc + CASE WHEN"
-        f" aggregate(sequence(0, {dim - 1}), CAST(0.0 AS DOUBLE),"
-        f" (a, i) -> a + CAST(element_at({vec_col}, i + 1) AS DOUBLE)"
-        f" * {sign}) > CAST(0.0 AS DOUBLE)"
+        f"CASE WHEN {vec_col} IS NOT NULL AND size({vec_col}) <> {dim}"
+        " THEN raise_error(concat("
+        f"'hyperplane codes need vectors of length {dim}, got ',"
+        f" size({vec_col}))) ELSE"
+        f" transform({planes}, tp -> aggregate(transform(tp, (p, b) ->"
+        f" CASE WHEN aggregate(zip_with({vec_col}, p,"
+        " (x, w) -> CAST(x AS DOUBLE) * w), CAST(0.0 AS DOUBLE),"
+        " (a, y) -> a + y) > CAST(0.0 AS DOUBLE)"
         " THEN shiftleft(CAST(1 AS BIGINT), b)"
-        " ELSE CAST(0 AS BIGINT) END))"
+        " ELSE CAST(0 AS BIGINT) END), CAST(0 AS BIGINT),"
+        " (acc, c) -> acc + c)) END"
     )
 
 
 def codes_duck(vec_col: str, dim: int, n_planes: int, n_tables: int) -> str:
-    """DuckDB twin of :func:`codes_sql`."""
-    sign = _SIGN.format(t="t", b="b", i="i")
+    """DuckDB twin of :func:`codes_sql` (``list_transform``'s index
+    argument ``b`` is 1-based)."""
+    planes = (
+        f"CAST('{planes_json(dim, n_planes, n_tables)}' AS DOUBLE[][][])"
+    )
     return (
-        f"list_transform(generate_series(0, {n_tables - 1}), t ->"
-        " list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(generate_series(0, {n_planes - 1}), b ->"
+        f"list_transform({planes}, tp -> list_reduce(list_prepend("
+        " CAST(0 AS BIGINT), list_transform(tp, (p, b) ->"
         " CASE WHEN list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        f" list_transform(generate_series(0, {dim - 1}), i ->"
-        f" CAST({vec_col}[i + 1] AS DOUBLE) * {sign})),"
-        " (a, x) -> a + x) > CAST(0.0 AS DOUBLE)"
-        " THEN (CAST(1 AS BIGINT) << b)"
-        " ELSE CAST(0 AS BIGINT) END)), (a, x) -> a + x))"
-    )
-
-
-def hyperplane_lsh_topk_replayable(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    hamming_radius: int = 3,
-    dim: int = 64,
-) -> DataFrame:
-    """OR-amplified LSH top-k with replayable codes: candidates are
-    rows within ``hamming_radius`` of the query's code in ANY table,
-    exact-reranked by cosine.  Same semantics and plan shape as the
-    seeded :func:`similarity.hyperplane_lsh_topk`, minus the UDF."""
-    from .similarity import _cosine_col
-
-    codes = F.expr(codes_sql(vec_col, dim, n_planes, n_tables))
-    with_codes = embeddings.select(
-        F.col(id_col), F.col(vec_col), codes.alias("__codes")
-    )
-    qrow = with_codes.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q"), F.col("__codes").alias("__qcodes")
-    )
-    any_close = F.expr(
-        "exists(zip_with(__codes, __qcodes,"
-        f" (a, b) -> bit_count(a ^ b) <= {hamming_radius}), h -> h)"
-    )
-    return (
-        with_codes.crossJoin(F.broadcast(qrow))
-        .filter(F.col(id_col) != query_id)
-        .filter(any_close)
-        .select(F.col(id_col), _cosine_col(vec_col, "__q").alias("__sim"))
-        .orderBy(F.col("__sim").desc(), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
+        f" list_transform(generate_series(1, {dim}), i ->"
+        f" CAST({vec_col}[i] AS DOUBLE) * p[i])),"
+        " (a, y) -> a + y) > CAST(0.0 AS DOUBLE)"
+        " THEN (CAST(1 AS BIGINT) << (b - 1))"
+        " ELSE CAST(0 AS BIGINT) END)), (acc, c) -> acc + c))"
     )
 
 
@@ -411,27 +397,8 @@ def ann_lsh_oracle_sql(
     """
 
 
-def lsh_bucket_histogram_replayable(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    dim: int = 64,
-) -> DataFrame:
-    """Bucket-occupancy of table 0's replayable codes — the balance
-    check a deployment watches (hot buckets ⇒ bad pruning)."""
-    code = F.expr(
-        f"element_at({codes_sql(vec_col, dim, n_planes, 1)}, 1)"
-    )
-    return (
-        embeddings.select(code.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-    )
-
-
 def bucket_histogram_oracle_sql(n_planes: int = 12, dim: int = 64) -> str:
-    """DuckDB oracle for :func:`lsh_bucket_histogram_replayable`."""
+    """DuckDB oracle for :func:`similarity.lsh_bucket_histogram`."""
     codes = codes_duck("embedding", dim, n_planes, 1)
     return f"""
         SELECT ({codes})[1] AS bucket,

@@ -4,15 +4,20 @@
   vector, entirely in JVM-side higher-order functions (``zip_with`` +
   ``aggregate`` dot product, double precision).  The baseline and the
   correctness oracle for the approximate path.
-- :func:`hyperplane_lsh_topk` — random-hyperplane LSH: a fixed-seed
-  plane matrix (broadcast to executors inside a vectorized pandas UDF)
-  maps each vector to a bucket code; candidates share the query's
-  bucket within hamming radius, then exact cosine reranks.  At scale,
-  the bucket column is a partition/cluster key, so a query touches a
-  bounded number of buckets instead of the full table.
+- :func:`hyperplane_lsh_topk` — random-hyperplane LSH: a JVM fold over
+  seeded planes shipped as one literal (:func:`replayable.codes_sql`,
+  the one family every LSH operator here shares) maps each vector to
+  a bucket code per table; candidates share the query's bucket within
+  hamming radius, then exact cosine reranks.  At scale, the bucket
+  column is a partition/cluster key, so a query touches a bounded
+  number of buckets instead of the full table.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from itertools import combinations
+from operator import or_
 
 import numpy as np
 import pandas as pd
@@ -20,23 +25,87 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from .replayable import codes_sql
+
 DOT_EXPR = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
     "cast(0.0 as double), (acc, v) -> acc + v)"
 )
 
 
-def _cosine_col(vec_col: str, query_col: str):
+def _cosine_col(vec_col: str, query_col: str, query_norm2: str | None = None):
     # cos(0-vector, ·) is defined as 0.0 — the zero-norm guard keeps
     # ANSI mode from raising DIVIDE_BY_ZERO and matches the matmul
-    # path's normalized-to-zero convention
+    # path's normalized-to-zero convention.  ``query_norm2`` names a
+    # column already holding DOT(query, query) (see _query_row).
     dot = DOT_EXPR.format(a=vec_col, b=query_col)
     na = DOT_EXPR.format(a=vec_col, b=vec_col)
-    nb = DOT_EXPR.format(a=query_col, b=query_col)
+    nb = query_norm2 or DOT_EXPR.format(a=query_col, b=query_col)
     return F.expr(
         f"CASE WHEN ({na}) = 0.0D OR ({nb}) = 0.0D THEN 0.0D"
         f" ELSE ({dot}) / (sqrt({na}) * sqrt({nb})) END"
     )
+
+
+def _query_row(embeddings: DataFrame, query_id: int, id_col: str,
+               vec_col: str, *extra) -> DataFrame:
+    """The one-row broadcast side of every rerank: the query vector
+    ``__q`` and its squared norm ``__qq``, folded once here instead of
+    on every scored row (same fold, same bits)."""
+    return embeddings.filter(F.col(id_col) == query_id).select(
+        F.col(vec_col).alias("__q"),
+        F.expr(DOT_EXPR.format(a=vec_col, b=vec_col)).alias("__qq"), *extra,
+    )
+
+
+def _rerank_topk(cands: DataFrame, qrow: DataFrame, k: int, id_col: str,
+                 vec_col: str, keep=None) -> DataFrame:
+    """Exact cosine top-``k`` of ``cands`` against :func:`_query_row`,
+    ties broken on id, rounded to 4 places; ``keep`` filters the joined
+    rows first (for predicates on the query row's columns)."""
+    joined = cands.crossJoin(F.broadcast(qrow))
+    if keep is not None:
+        joined = joined.filter(keep)
+    return (
+        joined.select(
+            F.col(id_col), _cosine_col(vec_col, "__q", "__qq").alias("__sim")
+        )
+        .orderBy(F.col("__sim").desc(), F.col(id_col))
+        .limit(k)
+        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
+    )
+
+
+def _codes(embeddings: DataFrame, vec_col: str, n_planes: int,
+           n_tables: int, dim: int | None):
+    """array<bigint> column of the ``n_tables`` hyperplane codes (the
+    package's one family, :func:`replayable.codes_sql`).  Without
+    ``dim`` a plan-build-time action reads the first vector's width."""
+    if dim is None:
+        dim = len(embeddings.select(vec_col).first()[0])
+    return F.expr(codes_sql(vec_col, dim, n_planes, n_tables))
+
+
+def _query_codes(embeddings: DataFrame, query_id: int, id_col: str,
+                 vec_col: str, n_planes: int, n_tables: int,
+                 dim: int | None) -> list[int]:
+    """The query row's codes from the index's own expression, so a
+    probe's Hamming ball matches the index by construction: ONE driver
+    action when ``dim`` is given, and a clear error for a missing id."""
+    codes = _codes(embeddings, vec_col, n_planes, n_tables, dim)
+    row = embeddings.filter(F.col(id_col) == query_id).select(codes).first()
+    if row is None:
+        raise ValueError(f"query_id {query_id!r} not found in column {id_col!r}")
+    return list(row[0])
+
+
+def _hamming_ball(code: int, n_planes: int, radius: int) -> list[int]:
+    """Every code within ``radius`` bit flips of ``code``, center first."""
+    return [code] + [
+        code ^ sum(1 << b for b in bits)
+        for r in range(1, radius + 1)
+        for bits in combinations(range(n_planes), r)
+    ]
 
 
 def cosine_topk(
@@ -51,16 +120,10 @@ def cosine_topk(
     The single query row is broadcast; ordering ties break on id so the
     result is deterministic.
     """
-    q = embeddings.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
-    scored = (
-        embeddings.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), _cosine_col(vec_col, "__q").alias("__sim"))
-    )
-    return (
-        scored.orderBy(F.col("__sim").desc(), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
+    return _rerank_topk(
+        embeddings.filter(F.col(id_col) != query_id),
+        _query_row(embeddings, query_id, id_col, vec_col),
+        k, id_col, vec_col,
     )
 
 
@@ -89,51 +152,6 @@ def cosine_pairs_bruteforce(
     )
 
 
-def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    return np.random.RandomState(seed).standard_normal((n_planes, dim))
-
-
-def _code_from_planes(planes: np.ndarray, arr: np.ndarray, n_planes: int) -> int:
-    """The LSH code of one vector — shared by the executor-side UDF and
-    the driver-side probe planners so a probe's ball provably matches
-    the index's codes (same float64 matmul, same bit packing)."""
-    bits = (planes @ arr) > 0
-    return int(
-        bits.astype(np.uint64)
-        @ (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
-    )
-
-
-def make_bucket_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """One 64-bit LSH code per table, packed into an array column."""
-    planes = _planes(dim, n_planes, seed)
-
-    @F.pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        return vecs.map(
-            lambda v: _code_from_planes(
-                planes, np.asarray(v, dtype=np.float64), n_planes
-            )
-        )
-
-    return bucket_udf
-
-
-def _fetch_query_vec(
-    embeddings: DataFrame, query_id: int, id_col: str, vec_col: str
-) -> np.ndarray:
-    """ONE driver action per probe: fetch the query row's vector (and
-    with it the dim), with a clear error when the id is absent — the
-    bare ``first()[...]`` pattern raised an opaque ``TypeError`` on a
-    missing query_id and cost a second action when dim was unset."""
-    row = embeddings.filter(F.col(id_col) == query_id).select(vec_col).first()
-    if row is None:
-        raise ValueError(
-            f"query_id {query_id!r} not found in column {id_col!r}"
-        )
-    return np.asarray(row[0], dtype=np.float64)
-
-
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -141,7 +159,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     n_planes: int = 12,
     n_tables: int = 4,
-    seed: int = 42,
     materialize: bool = False,
     dim: int | None = None,
 ) -> DataFrame:
@@ -153,26 +170,19 @@ def embedding_near_dup_pairs(
     ``(table, code)`` so only same-bucket rows shuffle — the all-pairs
     O(n²) never materializes.
 
-    ``materialize=True`` persists + eagerly evaluates the unioned
+    ``materialize=True`` persists + eagerly evaluates the exploded
     (table, code) frame: it feeds both join sides, so without a cache
-    each side recomputes its bucket UDF — use at scale.
+    each side recomputes the codes fold (AQE does not reuse the
+    exchange here) — use at scale.
 
     Pass ``dim`` to avoid the plan-build-time probe job (a ``.first()``
     Spark action just to learn the vector width).
     """
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    coded = embeddings
-    for t in range(n_tables):
-        udf = make_bucket_udf(dim, n_planes, seed + 1000 * t)
-        coded = coded.withColumn(f"__c{t}", udf(F.col(vec_col)))
-    tables = None
-    for t in range(n_tables):
-        part = coded.select(
-            F.lit(t).alias("table"), F.col(f"__c{t}").alias("code"),
-            F.col(id_col), F.col(vec_col),
-        )
-        tables = part if tables is None else tables.unionByName(part)
+    tables = embeddings.select(
+        F.posexplode(_codes(embeddings, vec_col, n_planes, n_tables, dim))
+        .alias("table", "code"),
+        F.col(id_col), F.col(vec_col),
+    )
     if materialize:
         from .. import cache
 
@@ -293,33 +303,25 @@ def ivf_topk(
     vector) — the k-means training step is orthogonal to the engine
     shape and would slot in the same ``centroids`` frame.  Every step
     (assignment, probe selection, rerank) is plain cosine arithmetic,
-    so the whole operator is expressible as an ANSI-SQL oracle, unlike
-    the seeded-hash LSH family.
+    so the whole operator is expressible as an ANSI-SQL oracle.
     """
     centroids = embeddings.filter(F.col(id_col) % centroid_mod == 0).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
     )
     assigned = ivf_assign(embeddings, centroids, id_col, vec_col,
                           method=assign_method)
-    qrow = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q")
-    )
+    qrow = _query_row(embeddings, query_id, id_col, vec_col)
     probe = (
         centroids.crossJoin(F.broadcast(qrow))
-        .select("cid", _cosine_col("cv", "__q").alias("__s"))
+        .select("cid", _cosine_col("cv", "__q", "__qq").alias("__s"))
         .orderBy(F.col("__s").desc(), F.col("cid"))
         .limit(n_probe)
         .select("cid")
     )
-    return (
-        assigned.join(F.broadcast(probe), assigned["cell"] == probe["cid"], "left_semi")
-        .filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(qrow))
-        .select(F.col(id_col), _cosine_col(vec_col, "__q").alias("__sim"))
-        .orderBy(F.col("__sim").desc(), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
-    )
+    cands = assigned.join(
+        F.broadcast(probe), assigned["cell"] == probe["cid"], "left_semi"
+    ).filter(F.col(id_col) != query_id)
+    return _rerank_topk(cands, qrow, k, id_col, vec_col)
 
 
 def kmeans_centroid_update(
@@ -453,7 +455,6 @@ def hyperplane_lsh_topk(
     n_planes: int = 12,
     n_tables: int = 4,
     hamming_radius: int = 3,
-    seed: int = 42,
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: multi-table LSH prefilter + exact rerank.
@@ -466,33 +467,37 @@ def hyperplane_lsh_topk(
     a cluster/partition key; the radius probe touches a bounded bucket
     neighborhood instead of the full table.
     """
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    with_codes = embeddings
-    for t in range(n_tables):
-        udf = make_bucket_udf(dim, n_planes, seed + 1000 * t)
-        with_codes = with_codes.withColumn(f"__code{t}", udf(F.col(vec_col)))
-    code_cols = [f"__code{t}" for t in range(n_tables)]
-    qrow = with_codes.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q"),
-        *[F.col(c).alias(f"__qc{t}") for t, c in enumerate(code_cols)],
+    codes = _codes(embeddings, vec_col, n_planes, n_tables, dim)
+    with_codes = embeddings.select(
+        F.col(id_col), F.col(vec_col), codes.alias("__codes")
     )
-    any_close = None
-    for t in range(n_tables):
-        close = (
-            F.bit_count(F.col(code_cols[t]).bitwiseXOR(F.col(f"__qc{t}"))) <= hamming_radius
-        )
-        any_close = close if any_close is None else (any_close | close)
-    candidates = (
-        with_codes.crossJoin(F.broadcast(qrow))
-        .filter(F.col(id_col) != query_id)
-        .filter(any_close)
+    qrow = _query_row(
+        with_codes, query_id, id_col, vec_col,
+        F.col("__codes").alias("__qcodes"),
     )
+    any_close = F.expr(
+        "exists(zip_with(__codes, __qcodes,"
+        f" (a, b) -> bit_count(a ^ b) <= {hamming_radius}), h -> h)"
+    )
+    return _rerank_topk(
+        with_codes.filter(F.col(id_col) != query_id), qrow, k, id_col,
+        vec_col, keep=any_close,
+    )
+
+
+def lsh_bucket_histogram(
+    embeddings: DataFrame,
+    vec_col: str = "embedding",
+    n_planes: int = 12,
+    dim: int | None = None,
+) -> DataFrame:
+    """Bucket occupancy of table 0's codes — the balance check a
+    deployment watches (hot buckets ⇒ bad pruning)."""
+    code = _codes(embeddings, vec_col, n_planes, 1, dim)[0]
     return (
-        candidates.select(F.col(id_col), _cosine_col(vec_col, "__q").alias("__sim"))
-        .orderBy(F.col("__sim").desc(), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
+        embeddings.select(code.alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
 
 
@@ -592,13 +597,11 @@ def ivf_topk_pruned(
     centroids = embeddings.filter(F.col(id_col) % centroid_mod == 0).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
     )
-    qrow = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q")
-    )
+    qrow = _query_row(embeddings, query_id, id_col, vec_col)
     probe_cells = [
         r["cid"]
         for r in centroids.crossJoin(F.broadcast(qrow))
-        .select("cid", _cosine_col("cv", "__q").alias("__s"))
+        .select("cid", _cosine_col("cv", "__q", "__qq").alias("__s"))
         .orderBy(F.col("__s").desc(), F.col("cid"))
         .limit(n_probe)
         .collect()
@@ -606,13 +609,8 @@ def ivf_topk_pruned(
     idx = spark.read.parquet(index_path).filter(
         F.col("cell").isin(probe_cells)
     )
-    return (
-        idx.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(qrow))
-        .select(F.col(id_col), _cosine_col(vec_col, "__q").alias("__sim"))
-        .orderBy(F.col("__sim").desc(), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
+    return _rerank_topk(
+        idx.filter(F.col(id_col) != query_id), qrow, k, id_col, vec_col
     )
 
 
@@ -620,20 +618,19 @@ def write_lsh_index(
     embeddings: DataFrame,
     path: str,
     n_planes: int = 12,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Write ONE hyperplane-LSH table hive-partitioned by its ``code``
-    — the physical layout behind "the per-table code is a partition
-    key".  A radius-``r`` probe then enumerates the code's Hamming-
-    ball literals and scans only those directories."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    udf = make_bucket_udf(dim, n_planes, seed)
-    coded = embeddings.withColumn("code", udf(F.col(vec_col)))
+    """Write ONE hyperplane-LSH table (table 0 of the family, so it
+    equals :func:`write_lsh_multi_index`'s ``tbl=0``) hive-partitioned
+    by its ``code`` — the physical layout behind "the per-table code is
+    a partition key".  A radius-``r`` probe then enumerates the code's
+    Hamming-ball literals and scans only those directories."""
+    coded = embeddings.withColumn(
+        "code", _codes(embeddings, vec_col, n_planes, 1, dim)[0]
+    )
     coded.write.mode(mode).partitionBy("code").parquet(path)
 
 
@@ -644,7 +641,6 @@ def lsh_probe_pruned(
     query_id: int,
     k: int = 10,
     n_planes: int = 12,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
@@ -653,22 +649,16 @@ def lsh_probe_pruned(
     code plus its ``n_planes`` single-bit flips are ``1 + n_planes``
     literal partition values — the scan reads only that Hamming ball's
     directories, never the full table."""
-    qvec = _fetch_query_vec(embeddings, query_id, id_col, vec_col)
-    if dim is None:
-        dim = qvec.size
-    qc = _code_from_planes(_planes(dim, n_planes, seed), qvec, n_planes)
-    ball = [qc] + [qc ^ (1 << b) for b in range(n_planes)]
-    idx = spark.read.parquet(index_path).filter(F.col("code").isin(ball))
-    qrow = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q")
+    (qc,) = _query_codes(
+        embeddings, query_id, id_col, vec_col, n_planes, 1, dim
     )
-    return (
-        idx.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(qrow))
-        .select(F.col(id_col), _cosine_col(vec_col, "__q").alias("__sim"))
-        .orderBy(F.col("__sim").desc(), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
+    idx = spark.read.parquet(index_path).filter(
+        F.col("code").isin(_hamming_ball(qc, n_planes, 1))
+    )
+    return _rerank_topk(
+        idx.filter(F.col(id_col) != query_id),
+        _query_row(embeddings, query_id, id_col, vec_col),
+        k, id_col, vec_col,
     )
 
 
@@ -677,7 +667,6 @@ def write_lsh_multi_index(
     path: str,
     n_tables: int = 4,
     n_planes: int = 12,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
@@ -685,23 +674,17 @@ def write_lsh_multi_index(
 ) -> None:
     """Write the FULL multi-table LSH index hive-partitioned by
     ``(tbl, code)`` in one pass: each row appears once per table with
-    that table's code (table ``t`` uses seed ``seed + 1000·t``, the
-    same family :func:`hyperplane_lsh_topk` amplifies over).  The
-    physical form of OR-amplification at scale — every per-table
-    Hamming ball is a set of directories, so a multiprobe plans
-    ``n_tables`` groups of literal partition values and never scans
-    an unprobed bucket (asserted in tests/test_pruned_probe.py)."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    coded = embeddings
-    for t in range(n_tables):
-        udf = make_bucket_udf(dim, n_planes, seed + 1000 * t)
-        coded = coded.withColumn(f"__code{t}", udf(F.col(vec_col)))
-    stack_args = ", ".join(f"{t}, __code{t}" for t in range(n_tables))
-    rows = coded.select(
+    that table's code (the same family :func:`hyperplane_lsh_topk`
+    amplifies over).  The physical form of OR-amplification at scale —
+    every per-table Hamming ball is a set of directories, so a
+    multiprobe plans ``n_tables`` groups of literal partition values
+    and never scans an unprobed bucket (asserted in
+    tests/test_pruned_probe.py)."""
+    rows = embeddings.select(
         F.col(id_col),
         F.col(vec_col),
-        F.expr(f"stack({n_tables}, {stack_args}) AS (tbl, code)"),
+        F.posexplode(_codes(embeddings, vec_col, n_planes, n_tables, dim))
+        .alias("tbl", "code"),
     )
     rows.write.mode(mode).partitionBy("tbl", "code").parquet(path)
 
@@ -715,7 +698,6 @@ def lsh_multiprobe_pruned(
     n_tables: int = 4,
     n_planes: int = 12,
     radius: int = 1,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
@@ -727,35 +709,19 @@ def lsh_multiprobe_pruned(
     branch statically prunes to its ball's directories.  Rows caught
     by several tables dedupe by id before the exact rerank (matching
     the by-row OR semantics of :func:`hyperplane_lsh_topk`)."""
-    from functools import reduce
-    from itertools import combinations
-    from operator import or_
-
-    qvec = _fetch_query_vec(embeddings, query_id, id_col, vec_col)
-    if dim is None:
-        dim = qvec.size
-    preds = []
-    for t in range(n_tables):
-        qc = _code_from_planes(
-            _planes(dim, n_planes, seed + 1000 * t), qvec, n_planes
-        )
-        ball = [qc] + [
-            qc ^ sum(1 << b for b in bits)
-            for r in range(1, radius + 1)
-            for bits in combinations(range(n_planes), r)
-        ]
-        preds.append((F.col("tbl") == t) & F.col("code").isin(ball))
-    idx = spark.read.parquet(index_path).filter(reduce(or_, preds))
-    qvec = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q")
+    qcodes = _query_codes(
+        embeddings, query_id, id_col, vec_col, n_planes, n_tables, dim
     )
-    return (
+    preds = [
+        (F.col("tbl") == t)
+        & F.col("code").isin(_hamming_ball(qc, n_planes, radius))
+        for t, qc in enumerate(qcodes)
+    ]
+    idx = spark.read.parquet(index_path).filter(reduce(or_, preds))
+    return _rerank_topk(
         idx.filter(F.col(id_col) != query_id)
         .select(id_col, vec_col)
-        .dropDuplicates([id_col])
-        .crossJoin(F.broadcast(qvec))
-        .select(F.col(id_col), _cosine_col(vec_col, "__q").alias("__sim"))
-        .orderBy(F.col("__sim").desc(), F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col), F.round(F.col("__sim"), 4).alias("cos_sim"))
+        .dropDuplicates([id_col]),
+        _query_row(embeddings, query_id, id_col, vec_col),
+        k, id_col, vec_col,
     )

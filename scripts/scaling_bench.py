@@ -99,14 +99,20 @@ def run_level(cores: int, pages_path: str, retries: int = 1) -> dict:
     on anything systematic."""
     code = RUN_ONE.format(repo=REPO, cores=cores, pages_path=pages_path)
     last = None
-    for _ in range(retries + 1):
-        proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                              text=True, timeout=1800)
-        for line in proc.stdout.splitlines():
-            if line.startswith("RESULT "):
-                return json.loads(line[len("RESULT "):])
-        last = f"run failed (cores={cores}):\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
-        print(f"   retrying cores={cores} after failed run", flush=True)
+    for attempt in range(retries + 1):
+        try:
+            proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                                  text=True, timeout=1800)
+        except subprocess.TimeoutExpired as exc:
+            # a hung run is a failed attempt like a crashed one
+            last = f"run timed out after {exc.timeout} s (cores={cores})"
+        else:
+            for line in proc.stdout.splitlines():
+                if line.startswith("RESULT "):
+                    return json.loads(line[len("RESULT "):])
+            last = f"run failed (cores={cores}):\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
+        if attempt < retries:
+            print(f"   retrying cores={cores} after failed run", flush=True)
     raise RuntimeError(last)
 
 

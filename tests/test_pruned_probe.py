@@ -12,12 +12,12 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from google_vision_ocr_spark.operators.replayable import codes_sql
 from google_vision_ocr_spark.operators.similarity import (
     hyperplane_lsh_topk,
     ivf_topk,
     ivf_topk_pruned,
     lsh_probe_pruned,
-    make_bucket_udf,
     write_ivf_index,
     write_lsh_index,
 )
@@ -28,6 +28,16 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+
+def _query_codes(emb, n_tables):
+    """The query row's per-table codes (8 planes), straight from the
+    index's own code expression."""
+    return list(
+        emb.filter(F.col("vec_id") == 0)
+        .select(F.expr(codes_sql("embedding", 64, 8, n_tables)).alias("c"))
+        .first()["c"]
+    )
 
 
 @pytest.fixture(scope="module")
@@ -80,9 +90,9 @@ def test_ivf_pruned_probe_matches_in_memory_operator(spark, emb, ivf_index):
 
 def test_lsh_pruned_probe_reads_only_hamming_ball(spark, emb, tmp_path):
     path = str(tmp_path / "lsh")
-    write_lsh_index(emb, path, n_planes=8, seed=42, dim=64)
+    write_lsh_index(emb, path, n_planes=8, dim=64)
     out = lsh_probe_pruned(
-        spark, emb, path, query_id=0, k=10, n_planes=8, seed=42, dim=64
+        spark, emb, path, query_id=0, k=10, n_planes=8, dim=64
     )
     import os
 
@@ -91,12 +101,7 @@ def test_lsh_pruned_probe_reads_only_hamming_ball(spark, emb, tmp_path):
     assert m, plan
     probed = {int(c) for c in m.group(1).split(",")}
     # the probe filter is exactly the query code's radius-1 Hamming ball
-    udf = make_bucket_udf(64, 8, 42)
-    qc = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(udf(F.col("embedding")).alias("c"))
-        .first()["c"]
-    )
+    (qc,) = _query_codes(emb, 1)
     ball = {qc} | {qc ^ (1 << b) for b in range(8)}
     assert probed == ball
     # and the table genuinely holds codes OUTSIDE the ball (pruned away)
@@ -111,9 +116,9 @@ def test_lsh_pruned_probe_reads_only_hamming_ball(spark, emb, tmp_path):
 def test_lsh_pruned_probe_is_subset_of_radius1_inmemory(spark, emb, tmp_path):
     """Radius-1 pruned probe == in-memory single-table radius-1 LSH."""
     path = str(tmp_path / "lsh2")
-    write_lsh_index(emb, path, n_planes=8, seed=42, dim=64)
+    write_lsh_index(emb, path, n_planes=8, dim=64)
     pruned = lsh_probe_pruned(
-        spark, emb, path, query_id=0, k=10, n_planes=8, seed=42, dim=64
+        spark, emb, path, query_id=0, k=10, n_planes=8, dim=64
     ).collect()
     mem = hyperplane_lsh_topk(
         emb,
@@ -122,7 +127,6 @@ def test_lsh_pruned_probe_is_subset_of_radius1_inmemory(spark, emb, tmp_path):
         n_planes=8,
         n_tables=1,
         hamming_radius=1,
-        seed=42,
         dim=64,
     ).collect()
     assert [tuple(r) for r in pruned] == [tuple(r) for r in mem]
@@ -141,14 +145,14 @@ def test_lsh_multiprobe_prunes_every_table_branch(spark, emb, tmp_path):
     )
 
     path = str(tmp_path / "lshm")
-    write_lsh_multi_index(emb, path, n_tables=2, n_planes=8, seed=42, dim=64)
+    write_lsh_multi_index(emb, path, n_tables=2, n_planes=8, dim=64)
     # scan metadata truncates at 100 chars by default — the two
     # 9-literal balls need more to be asserted exactly
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try:
         out = lsh_multiprobe_pruned(
             spark, emb, path, query_id=0, k=10, n_tables=2, n_planes=8,
-            radius=1, seed=42, dim=64,
+            radius=1, dim=64,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
     finally:
@@ -161,14 +165,8 @@ def test_lsh_multiprobe_prunes_every_table_branch(spark, emb, tmp_path):
         assert re.search(rf"tbl#\d+ = {t}\)", pf), pf
     assert pf.count("INSET") + pf.count(" IN (") >= 2, pf
     # every per-table ball literal is the query code's radius-1
-    # neighborhood under that table's seed
-    for t in range(2):
-        udf = make_bucket_udf(64, 8, 42 + 1000 * t)
-        qc = (
-            emb.filter(F.col("vec_id") == 0)
-            .select(udf(F.col("embedding")).alias("c"))
-            .first()["c"]
-        )
+    # neighborhood under that table's planes
+    for t, qc in enumerate(_query_codes(emb, 2)):
         ball = {qc} | {qc ^ (1 << b) for b in range(8)}
         nums = None
         for mm in re.finditer(rf"tbl#\d+ = {t}\) AND code#\d+L? (?:INSET|IN \()([\d, .]+?)(?:\)|\))", pf):
@@ -182,7 +180,7 @@ def test_lsh_multiprobe_prunes_every_table_branch(spark, emb, tmp_path):
         tuple(r)
         for r in hyperplane_lsh_topk(
             emb, query_id=0, k=10, n_planes=8, n_tables=2,
-            hamming_radius=1, seed=42, dim=64,
+            hamming_radius=1, dim=64,
         ).collect()
     ]
     assert got == mem
@@ -190,8 +188,9 @@ def test_lsh_multiprobe_prunes_every_table_branch(spark, emb, tmp_path):
 
 def test_pruned_probes_missing_query_id_raises(spark, emb, tmp_path):
     """A probe for an absent query_id must raise a clear ValueError,
-    not an opaque NoneType crash — and the fetch is ONE driver action
-    (vector + dim from the same first())."""
+    not an opaque NoneType crash.  With ``dim`` given, the query's
+    codes come from ONE driver action (the ``first()`` that finds the
+    row missing); without it, a width probe runs first."""
     import pytest
 
     from google_vision_ocr_spark.operators.similarity import (
@@ -203,8 +202,8 @@ def test_pruned_probes_missing_query_id_raises(spark, emb, tmp_path):
 
     p1 = str(tmp_path / "lsh1")
     pm = str(tmp_path / "lshm")
-    write_lsh_index(emb, p1, n_planes=8, seed=42, dim=64)
-    write_lsh_multi_index(emb, pm, n_tables=2, n_planes=8, seed=42, dim=64)
+    write_lsh_index(emb, p1, n_planes=8, dim=64)
+    write_lsh_multi_index(emb, pm, n_tables=2, n_planes=8, dim=64)
     with pytest.raises(ValueError, match="query_id"):
         lsh_probe_pruned(spark, emb, p1, query_id=10**9, n_planes=8, dim=64)
     with pytest.raises(ValueError, match="query_id"):

@@ -1,21 +1,27 @@
 """SQL-replayable LSH families (operators/replayable.py and the
-pipelines built on it in operators/dedup.py and decontaminate.py):
-cross-engine bit-identity of the primitives, planted-pair recall, the
-no-Python-UDF plan claim, and exact Jaccard on edge-case texts.  The
+pipelines built on it in operators/dedup.py, decontaminate.py and
+similarity.py): cross-engine bit-identity of the primitives, the
+seeded hyperplanes, planted-pair recall, the no-Python-UDF plan claim,
+and exact Jaccard on edge-case texts.  The
 SimHash banding's losslessness is pinned in test_dedup_similarity.
 The full-pipeline hash evidence lives in the contract's hash gate
 (ann_lsh_cosine / dedup_minhash_lsh / dedup_simhash /
 lsh_bucket_histogram all carry DuckDB oracles since r6)."""
 
+import os
+
 import duckdb
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from google_vision_ocr_spark.operators import decontaminate as C
 from google_vision_ocr_spark.operators import dedup as D
 from google_vision_ocr_spark.operators import replayable as R
+from google_vision_ocr_spark.operators import similarity as S
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +35,7 @@ def emb(spark):
 
 
 def test_codes_cross_engine_bit_identity(spark):
-    """The hyperplane codes — sign trick, left-fold dot, bit packing —
+    """The hyperplane codes — plane literal, left-fold dot, bit packing —
     must agree between engines on a literal vector (the pin behind
     the ann_lsh_cosine / lsh_bucket_histogram oracles)."""
     vals = "0.12, -0.5, 0.33, 0.9, -0.01, 0.07, -0.4, 0.25"
@@ -41,6 +47,53 @@ def test_codes_cross_engine_bit_identity(spark):
     ).fetchone()[0]
     assert list(sp) == list(du)
     assert any(c != 0 for c in sp)
+
+
+def test_codes_reject_wrong_width_vector(spark):
+    """A vector whose length is not ``dim`` raises instead of getting
+    codes from a null-padded dot product."""
+    with pytest.raises(Exception, match="vectors of length 8, got 2"):
+        spark.sql(
+            f"SELECT {R.codes_sql('array(1.0D, 2.0D)', 8, 4, 1)} AS c"
+        ).collect()
+
+
+def test_hyperplane_family_keeps_seeded_planes(spark):
+    """The one hyperplane family uses seeded Gaussian planes, table t
+    from RandomState(42 + 1000·t): (a) the JSON plane literal parses
+    back bit-exactly in both engines, and (b) the Spark codes of every
+    sf0.1 embedding equal a numpy sign(P @ v), packed LSB-first.  The
+    seed matters for recall: ±1 integer-hash planes missed planted
+    cos≈0.9988 pairs in every table at once."""
+    dim, n_planes, n_tables = 64, 12, 4
+    want = [
+        np.random.RandomState(42 + 1000 * t).standard_normal((n_planes, dim))
+        for t in range(n_tables)
+    ]
+    lit = R.planes_json(dim, n_planes, n_tables)
+    sp = spark.sql(
+        f"SELECT from_json('{lit}', 'array<array<array<double>>>') AS p"
+    ).first().p
+    du = duckdb.sql(f"SELECT CAST('{lit}' AS DOUBLE[][][])").fetchone()[0]
+    for t in range(n_tables):
+        assert np.array_equal(np.array(sp[t], dtype=np.float64), want[t])
+        assert np.array_equal(np.array(du[t], dtype=np.float64), want[t])
+
+    weights = np.uint64(1) << np.arange(n_planes, dtype=np.uint64)
+    rows = (
+        spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
+        .select(
+            "embedding",
+            F.expr(R.codes_sql("embedding", dim, n_planes, n_tables))
+            .alias("codes"),
+        )
+        .collect()
+    )
+    assert len(rows) > 1000
+    for r in rows:
+        v = np.asarray(r.embedding, dtype=np.float64)
+        ref = [int(((p @ v) > 0).astype(np.uint64) @ weights) for p in want]
+        assert list(r.codes) == ref
 
 
 def test_md5_fold_and_tokens_cross_engine(spark):
@@ -79,23 +132,31 @@ def test_minhash_short_docs_never_pair(spark):
     assert pairs[0].est_jaccard == 1.0
 
 
-def test_replayable_pipelines_have_no_python_udf(spark, docs, emb):
+def test_replayable_pipelines_have_no_python_udf(
+    spark, docs, emb, tmp_path
+):
     """The whole point of the replayable family at scale: pure JVM
     expressions — no ArrowEvalPython / BatchEvalPython stage anywhere
     (a Python UDF pays an Arrow round-trip per task).  Covers every
-    text-sketch pipeline: MinHash, SimHash, exact Jaccard and both
-    decontamination shingle joins."""
+    text-sketch pipeline (MinHash, SimHash, exact Jaccard and both
+    decontamination shingle joins) and every hyperplane operator."""
     bench = docs.filter(F.col("doc_id") % 50 == 0).select(
         F.substring("text", 1, 120).alias("text")
     )
+    p1, pm = str(tmp_path / "lsh1"), str(tmp_path / "lshm")
+    S.write_lsh_index(emb, p1, dim=64)
+    S.write_lsh_multi_index(emb, pm, dim=64)
     for df in (
         D.minhash_lsh_pairs(docs),
         D.simhash_candidates(docs, max_hamming=10),
         D.ngram_jaccard_pairs(docs),
         C.contaminated_ids(docs, bench),
         C.contamination_fraction(docs, bench),
-        R.hyperplane_lsh_topk_replayable(emb, query_id=0, dim=64),
-        R.lsh_bucket_histogram_replayable(emb, dim=64),
+        S.hyperplane_lsh_topk(emb, query_id=0, dim=64),
+        S.lsh_bucket_histogram(emb, dim=64),
+        S.embedding_near_dup_pairs(emb, dim=64),
+        S.lsh_probe_pruned(spark, emb, p1, query_id=0, dim=64),
+        S.lsh_multiprobe_pruned(spark, emb, pm, query_id=0, dim=64),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan, plan[:2000]
