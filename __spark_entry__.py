@@ -625,29 +625,17 @@ def _simhash_pairs(spark, sf_dir):
 
 
 def _lang_id(spark, sf_dir):
-    import pandas as pd
+    from google_vision_ocr_spark.functions.text import with_text_metrics
 
-    from google_vision_ocr_spark.functions.text import lang_id_series
-
-    @F.pandas_udf("string")
-    def lang_udf(texts: pd.Series) -> pd.Series:
-        return lang_id_series(texts)
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", "lang", lang_udf(F.col("text")).alias("lang_guess"))
+    d = with_text_metrics(_t(spark, sf_dir, "documents"))
+    return d.select("doc_id", "lang", "lang_guess")
 
 
 def _quality_scores(spark, sf_dir):
-    import pandas as pd
+    from google_vision_ocr_spark.functions.text import with_text_metrics
 
-    from google_vision_ocr_spark.functions.text import quality_score
-
-    @F.pandas_udf("double")
-    def quality_udf(texts: pd.Series) -> pd.Series:
-        return texts.fillna("").map(quality_score)
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", quality_udf(F.col("text")).alias("quality"))
+    d = with_text_metrics(_t(spark, sf_dir, "documents"))
+    return d.select("doc_id", "quality")
 
 
 def _tpch_q1(spark, sf_dir):
@@ -758,11 +746,10 @@ def _pack_shards_manifest(spark, sf_dir):
     pack into ~2000-token shards within each language partition via a
     two-pass distributed prefix sum; the manifest is one row per shard."""
     from google_vision_ocr_spark.operators.packing import shard_manifest
-    from google_vision_ocr_spark.operators.scoring import WORDS_EXPR
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang",
-        F.size(F.expr(WORDS_EXPR.format(col="text"))).cast("bigint").alias("ws_tokens"),
+        F.size(F.expr(_replayable.tokens_sql("text"))).cast("bigint").alias("ws_tokens"),
     )
     return shard_manifest(d, budget=2000)
 
@@ -1739,10 +1726,10 @@ def _curate_documents(spark, sf_dir):
 
     pages = documents_to_pages(_t(spark, sf_dir, "documents"))
     curated, _obs = curate(pages, min_quality=0.2, min_tokens=5)
-    # quality rides at its native 6-decimal quantization (functions/
-    # text.py:89 mirrors the oracle's round(...,6) — verified equal by
-    # the quality_scores gate entry at every SF).  Re-rounding to 4 here
-    # created a fresh half-tie surface: at sf0.1 one row's 0.634550
+    # quality rides at its native 6-decimal quantization (the exact
+    # half-up of functions/text.py, one spec in both engines, checked
+    # by the quality_scores gate entry at every SF).  Re-rounding to 4
+    # here created a fresh half-tie surface: at sf0.1 one row's 0.634550
     # split 0.6346 (Spark) vs 0.6345 (DuckDB).  Never re-round a value
     # both engines already agree on (the tpch_q3 lesson, float edition).
     return curated.select("url", "ws_tokens", "lang_guess", "quality")
@@ -2542,11 +2529,10 @@ def _top_words_per_lang(spark, sf_dir):
     Two-phase top-k: per (lang, hash-bucket) top-5 first, then the
     global top-5 over the ≤ 5×32 survivors — no window ever sorts a
     whole language's vocabulary in one task."""
-    from google_vision_ocr_spark.operators.scoring import WORDS_EXPR
 
     d = _t(spark, sf_dir, "documents")
     counts = (
-        d.select("lang", F.explode(F.expr(WORDS_EXPR.format(col="text"))).alias("word"))
+        d.select("lang", F.explode(F.expr(_replayable.tokens_sql("text"))).alias("word"))
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -2896,7 +2882,6 @@ def _cms_heavy_hitters(spark, sf_dir):
     sketch AND the estimates, so a single hash/bucket drift anywhere
     fails the value hash (est ≥ true by construction; equality unless
     buckets collide)."""
-    from google_vision_ocr_spark.operators.scoring import WORDS_EXPR
     from google_vision_ocr_spark.operators.sketch import (
         count_min_build,
         count_min_estimate,
@@ -2904,7 +2889,7 @@ def _cms_heavy_hitters(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     words = d.select(
-        F.explode(F.expr(WORDS_EXPR.format(col="text"))).alias("word")
+        F.explode(F.expr(_replayable.tokens_sql("text"))).alias("word")
     )
     sketch = count_min_build(words, "word", depth=4, width=256)
     truth = (
@@ -2925,7 +2910,6 @@ def _cms_segment_merge(spark, sf_dir):
     against the ORACLE OF THE FULL BUILD — the same merge==rebuild
     contract the postings segment merge carries.  At 10^12 docs this
     is how daily sketches roll up without rescanning history."""
-    from google_vision_ocr_spark.operators.scoring import WORDS_EXPR
     from google_vision_ocr_spark.operators.sketch import (
         count_min_build,
         count_min_merge,
@@ -2933,7 +2917,7 @@ def _cms_segment_merge(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     words = lambda df: df.select(  # noqa: E731
-        F.explode(F.expr(WORDS_EXPR.format(col="text"))).alias("word")
+        F.explode(F.expr(_replayable.tokens_sql("text"))).alias("word")
     )
     a = count_min_build(words(d.filter(F.col("doc_id") % 2 == 0)), "word")
     b = count_min_build(words(d.filter(F.col("doc_id") % 2 == 1)), "word")
@@ -2951,14 +2935,13 @@ def _distinct_words_linear_counting(spark, sf_dir):
     The SQL-replayable stand-in for approx_count_distinct's opaque
     HLL registers (profile_columns documents that as the 100 TB
     default)."""
-    from google_vision_ocr_spark.operators.scoring import WORDS_EXPR
     from google_vision_ocr_spark.operators.sketch import (
         distinct_linear_counting,
     )
 
     d = _t(spark, sf_dir, "documents")
     words = d.select(
-        F.explode(F.expr(WORDS_EXPR.format(col="text"))).alias("word")
+        F.explode(F.expr(_replayable.tokens_sql("text"))).alias("word")
     )
     return distinct_linear_counting(words, "word", m=4096)
 
@@ -3252,13 +3235,12 @@ def _fuzzy_vocab_pairs(spark, sf_dir):
     (word, typo) pairs.  The oracle replays the typo derivation, the
     blocking, and the distance check."""
     from google_vision_ocr_spark.operators.fuzzy import fuzzy_word_pairs
-    from google_vision_ocr_spark.operators.scoring import WORDS_EXPR
 
     d = _t(spark, sf_dir, "documents")
     base = d.select(
-        F.explode(F.expr(WORDS_EXPR.format(col="text"))).alias("word")
+        F.explode(F.expr(_replayable.tokens_sql("text"))).alias("word")
     )
-    first = F.element_at(F.expr(WORDS_EXPR.format(col="text")), 1)
+    first = F.element_at(F.expr(_replayable.tokens_sql("text")), 1)
     typos = (
         d.filter(F.col("doc_id") % 37 == 0)
         .select(first.alias("w0"))
@@ -3602,9 +3584,7 @@ def _tier_extraction(spark, sf_dir):
     oracle replays the ENTIRE composite — dedup reachability
     (recursive CTE), the quality formula, all three PageRank rounds,
     and the tier CASE — in a single SQL statement."""
-    import pandas as pd  # noqa: F811
-
-    from google_vision_ocr_spark.functions.text import quality_score
+    from google_vision_ocr_spark.functions.text import with_text_metrics
     from google_vision_ocr_spark.operators.components import connected_components
     from google_vision_ocr_spark.operators.dedup import ngram_jaccard_pairs
     from google_vision_ocr_spark.operators.pagerank import pagerank_fixed_point
@@ -3616,10 +3596,6 @@ def _tier_extraction(spark, sf_dir):
         .filter(F.col("node") != F.col("component"))
         .select(F.col("node").alias("doc_id"))
     )
-
-    @F.pandas_udf("double")
-    def quality_udf(texts: pd.Series) -> pd.Series:
-        return texts.fillna("").map(quality_score)
 
     sparse = d.filter(F.col("doc_id") % 7 == 0)
     dst = F.concat(
@@ -3633,8 +3609,8 @@ def _tier_extraction(spark, sf_dir):
         "node", "source"
     )
     scored = (
-        d.join(losers, "doc_id", "left_anti")
-        .select("doc_id", "lang", "source", quality_udf(F.col("text")).alias("quality"))
+        with_text_metrics(d.join(losers, "doc_id", "left_anti"))
+        .select("doc_id", "lang", "source", "quality")
         .join(F.broadcast(pr), "source")
     )
     tier = (
@@ -3880,96 +3856,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return ordered
 
 
-# --- DuckDB mirrors of the Python text heuristics -------------------------
-# (functions/text.py::lang_id / quality_score / rolling_fingerprint; each
-# verified exactly equal to the Python implementation on the testdata)
-
-_LANG_PROFILES = {
-    "en": (" th", "the", " an", "and", "ing", " of", "ion", " to"),
-    "de": ("der", "die", "und", "ein", "sch", " de", "ich", "cht"),
-    "es": (" de", "os ", " la", "ión", "ent", " el", "que", "ado"),
-    "fr": (" de", "es ", " le", "ent", "que", " la", "ion", "ait"),
-}
-_STOPLIST_SQL = ", ".join(
-    f"'{s}'" for s in (
-        "the a an and or of to in is are was were be on for with as at by it "
-        "this that from not have has had but they you he she we i".split()
-    )
+# --- DuckDB twins of the text metrics (functions/text.py holds both
+# engines' forms; the Spark side is with_text_metrics)
+from google_vision_ocr_spark.functions.text import (  # noqa: E402
+    _LANG_CASE_SQL,
+    _QUALITY_CASE_SQL,
+    _TOKEN_STATS_SQL,
+    _lang_scores_sql,
+    _quality_feature_sql,
 )
-# '' escapes the apostrophe inside a SQL string literal
-_PUNCT_CLASS_SQL = "[.,!?;:''\"()\\[\\]{}\\-]"
-_TRIM_CHARS_SQL = "$punct$.,!?;:'\"()[]{}-$punct$"
-
-
-def _lang_scores_sql(col: str) -> str:
-    """Per-language n-gram scores over lowered text column ``col``
-    (non-overlapping replace-count == str.count for 3-char grams)."""
-    def cnt(g: str) -> str:
-        return f"(length({col})-length(replace({col},'{g}','')))/3"
-
-    return ",\n                   ".join(
-        f"{' + '.join(cnt(g) for g in grams)} AS s_{lang}"
-        for lang, grams in _LANG_PROFILES.items()
-    )
-
-
-# first-wins argmax over (en, de, es, fr), kana/CJK short-circuit
-_LANG_CASE_SQL = """
-              CASE
-                WHEN {t} = '' THEN 'und'
-                WHEN regexp_matches({t}, '[぀-ヿ]') THEN 'jp'
-                WHEN regexp_matches({t}, '[一-鿿]') THEN 'zh'
-                WHEN greatest(s_en,s_de,s_es,s_fr) = 0 THEN 'und'
-                WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
-                WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
-                WHEN s_es >= s_fr THEN 'es'
-                ELSE 'fr' END"""
-
-# quality_score formula over the feature columns produced by
-# _quality_feature_sql (weights/thresholds per functions/text.py:76-89)
-# The quality score as an EXACT integer rational (mirror of
-# functions/text.py::quality_score): every term is a ratio of integer
-# counts, so base·damp = base_num·md / (2500·n_tokens·non_space) with
-#   base_num = 2·min(n,500)·nt + {500|250}·nt (shape) + {500|250}·nt
-#              (punct) + 500·min(5·stop, nt)
-#   md = min(2·alnum, non_space)
-# and the 6-dp output is integer half-up of that rational — no
-# round(double, 6) for the engines to split on at a tie.  int64 bound:
-# nt·ns ≤ ~3.6e9 (≈ multi-hundred-KB docs; curation length gates bound
-# inputs far below).
-_QUALITY_NUM_SQL = """(2 * least(n_chars, 500) * n_tokens
-                   + (CASE WHEN 2 * n_tokens <= sum_len
-                                AND sum_len <= 12 * n_tokens
-                           THEN 500 ELSE 250 END) * n_tokens
-                   + (CASE WHEN 5 * punct <= n_chars
-                           THEN 500 ELSE 250 END) * n_tokens
-                   + 500 * least(5 * stop, n_tokens))
-                  * least(2 * alnum, non_space)"""
-_QUALITY_DEN_SQL = "2500 * n_tokens * non_space"
-_QUALITY_CASE_SQL = f"""
-              CASE WHEN n_tokens = 0 OR non_space = 0 THEN 0.0 ELSE
-                {_halfup_ratio_sql(_QUALITY_NUM_SQL, _QUALITY_DEN_SQL, 6)}
-              END"""
-
-
-def _quality_feature_sql(t: str) -> str:
-    """Feature columns (n_chars, toks, punct, non_space, alnum) over a
-    text expression ``t``; the feature half of the exact integer
-    quality spec (functions/text.py::quality_score mirrors it)."""
-    return f"""
-                length({t}) AS n_chars,
-                regexp_extract_all({t}, '\\S+') AS toks,
-                length({t}) - length(regexp_replace({t}, '{_PUNCT_CLASS_SQL}', '', 'g')) AS punct,
-                length(regexp_replace({t}, '\\s', '', 'g')) AS non_space,
-                length({t}) - length(regexp_replace({t}, '[\\pL\\pN]', '', 'g')) AS alnum"""
-
-
-_TOKEN_STATS_SQL = f"""
-                len(toks) AS n_tokens,
-                CAST(coalesce(list_sum(list_transform(toks,
-                    x -> length(x))), 0) AS BIGINT) AS sum_len,
-                len(list_filter(toks, x -> list_contains([{_STOPLIST_SQL}],
-                    trim(lower(x), {_TRIM_CHARS_SQL})))) AS stop"""
 
 
 def _lang_id_oracle() -> str:

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from .scoring import WORDS_EXPR
+from .replayable import tokens_sql
 
 #: first private-use codepoint used for merge symbols
 PUA_BASE = 0xE000
@@ -56,7 +56,7 @@ def word_frequencies(
     """The one corpus-scale pass: ``(word, freq)`` dictionary."""
     return (
         docs.select(
-            F.explode(F.expr(WORDS_EXPR.format(col=text_col))).alias("word")
+            F.explode(F.expr(tokens_sql(text_col))).alias("word")
         )
         # private-use-area characters would alias merge symbols — drop
         # such words (a no-op on real text) rather than corrupt merges
@@ -143,7 +143,7 @@ def bpe_encode(
         # token count of a word = its post-merge character count
         return F.length(e)
 
-    words = F.expr(WORDS_EXPR.format(col=text_col))
+    words = F.expr(tokens_sql(text_col))
     return docs.withColumn(
         out_col,
         F.aggregate(

@@ -56,7 +56,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .scoring import WORDS_EXPR, train_unigram
+from .replayable import tokens_sql
+from .scoring import train_unigram
 
 # (octave, top-12-post-leading-bits) cell of the non-negative score:
 # code = bit_length(c)*4096 + (c >> max(bit_length(c)-12, 0)).
@@ -89,7 +90,7 @@ def perplexity_buckets(
         docs.select(
             F.col(id_col),
             F.col(lang_col),
-            F.explode(F.expr(WORDS_EXPR.format(col=text_col))).alias("word"),
+            F.explode(F.expr(tokens_sql(text_col))).alias("word"),
         )
         .join(F.broadcast(vocab), "word", "left")
         .select(

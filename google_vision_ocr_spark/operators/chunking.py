@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# tokens = whitespace-split, empties dropped (mirrors scoring.WORDS_EXPR
+# tokens = whitespace-split, empties dropped (mirrors replayable.tokens_sql
 # but WITHOUT lowercasing: chunk text must round-trip the original)
 # explicit RE2-whitespace class (Java \s adds \x0B; RE2's does not)
 _TOKENS_EXPR = r"filter(split({col}, '[ \\t\\n\\f\\r]+'), x -> x <> '')"

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .scoring import WORDS_EXPR
+from .replayable import tokens_sql
 
 #: Knuth multiplicative-hash constant (2^32 / phi) — the stand-in "model".
 WEIGHT_A = 2654435761
@@ -107,7 +107,7 @@ def score_hashed_linear(
     Output: ``(id, n_tokens, sum_w, mean_w, keep)`` with ``keep`` as
     int64 0/1 (booleans hash differently across engines; ints do not).
     """
-    words = F.expr(WORDS_EXPR.format(col=text_col))
+    words = F.expr(tokens_sql(text_col))
     if word_bigrams:
         words = F.concat(words, _word_bigrams(words))
     n_tok = F.size(words).cast("bigint")

@@ -457,9 +457,7 @@ def shingle_novelty(
     Documents with fewer than ``k`` words have no shingles and score
     novelty 1.0 (trivially novel).
     """
-    from .scoring import WORDS_EXPR
-
-    words = WORDS_EXPR.format(col=text_col)
+    words = tokens_sql(text_col)
     shingles = (
         f"CASE WHEN size({words}) < {k} THEN array() "
         f"ELSE array_distinct(transform(sequence(1, size({words}) - {k} + 1), "

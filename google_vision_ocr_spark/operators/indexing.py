@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .scoring import WORDS_EXPR
+from .replayable import tokens_sql
 
 
 def inverted_postings(
@@ -46,7 +46,7 @@ def inverted_postings(
     pairs = docs.select(
         F.col(id_col),
         F.explode(
-            F.array_distinct(F.expr(WORDS_EXPR.format(col=text_col)))
+            F.array_distinct(F.expr(tokens_sql(text_col)))
         ).alias("term"),
     )
     dfreq = pairs.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))

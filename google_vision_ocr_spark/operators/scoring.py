@@ -24,14 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# explicit RE2-whitespace class: Java's \s adds \x0B (vertical tab),
-# RE2's does not — the oracles' '\s+' is exactly [ \t\n\f\r]+
-WORDS_EXPR = r"filter(split(lower({col}), '[ \\t\\n\\f\\r]+'), x -> x <> '')"
+from .replayable import tokens_sql
 
 
 def _exploded_words(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return docs.select(
-        F.col(id_col), F.explode(F.expr(WORDS_EXPR.format(col=text_col))).alias("word")
+        F.col(id_col), F.explode(F.expr(tokens_sql(text_col))).alias("word")
     )
 
 
@@ -48,7 +46,7 @@ def train_unigram(docs: DataFrame, text_col: str = "text",
     the corpus aggregation — the persisted-vocab-table shape the
     docstring above describes, in miniature."""
     words = docs.select(
-        F.explode(F.expr(WORDS_EXPR.format(col=text_col))).alias("word")
+        F.explode(F.expr(tokens_sql(text_col))).alias("word")
     )
     counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     topk = (

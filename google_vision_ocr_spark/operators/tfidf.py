@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .scoring import WORDS_EXPR
+from .replayable import tokens_sql
 
 
 def bm25_search(
@@ -60,7 +60,7 @@ def bm25_search(
     sort)."""
     words = docs.select(
         F.col(id_col),
-        F.explode(F.expr(WORDS_EXPR.format(col=text_col))).alias("term"),
+        F.explode(F.expr(tokens_sql(text_col))).alias("term"),
     )
     dl = words.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
@@ -129,7 +129,7 @@ def tfidf_top_terms(
     (id, rank, term, tf, df, tfidf)."""
     words = docs.select(
         F.col(id_col),
-        F.explode(F.expr(WORDS_EXPR.format(col=text_col))).alias("term"),
+        F.explode(F.expr(tokens_sql(text_col))).alias("term"),
     )
     tf = words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

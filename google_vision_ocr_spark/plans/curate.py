@@ -8,8 +8,9 @@ removal → curated corpus + per-stage survival counters``
 Design notes at scale:
 
 - extraction is the fused single-scan plan (`plans/fused.py`);
-- metrics ride in ONE vectorized pandas stage appended to the
-  extraction output (no extra scan);
+- metrics are built-in Spark expressions (``functions/text.py``) in
+  the stage after extraction, so extraction's ``mapInArrow`` is the
+  only Python in the plan and the metrics need no extra scan;
 - exact dedup shuffles 16-byte digests, never text;
 - near-dup removal joins only inside LSH buckets and drops the
   *higher* id of each candidate pair (deterministic, order-free);
@@ -19,49 +20,13 @@ Design notes at scale:
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .. import cache
-from ..functions.text import lang_id_series, quality_score
-from ..operators.dedup import exact_dedup, minhash_lsh_pairs, minhash_signatures
+from ..functions.text import with_text_metrics
+from ..operators.dedup import minhash_lsh_pairs, minhash_signatures
 from .fused import extract_fused
-
-METRICS_SCHEMA = "quality double, lang_guess string, ws_tokens bigint"
-
-_FRAME_RE = re.compile(r"\n--- Page \d+ ---\n")
-
-
-def _make_metrics_udf():
-    # built lazily: @pandas_udf parses its DDL schema eagerly, which
-    # requires an active SparkSession — a module-level decorator would
-    # make `import plans.curate` fail in sessionless processes
-    @F.pandas_udf(METRICS_SCHEMA)
-    def _metrics_udf(texts: pd.Series) -> pd.DataFrame:
-        # metrics are about the CONTENT: drop the page-frame headers the
-        # byte-identity contract mandates in pdf outputs (ocr_service.py:120)
-        texts = texts.fillna("").map(lambda t: _FRAME_RE.sub("\n", t))
-        return pd.DataFrame({
-            "quality": texts.map(quality_score),
-            "lang_guess": lang_id_series(texts),
-            "ws_tokens": texts.map(lambda t: len(t.split())).astype("int64"),
-        })
-
-    return _metrics_udf
-
-
-def with_text_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    m = _make_metrics_udf()(F.col(text_col))
-    return (
-        docs.withColumn("__m", m)
-        .withColumn("quality", F.col("__m.quality"))
-        .withColumn("lang_guess", F.col("__m.lang_guess"))
-        .withColumn("ws_tokens", F.col("__m.ws_tokens"))
-        .drop("__m")
-    )
 
 
 def curate(
@@ -84,7 +49,7 @@ def curate(
     ``materialize=True`` (default) cuts the lineage three times with
     ``localCheckpoint(eager=True)``: once after the gates, where the
     survivors feed both sides of the exact-dedup semi-join, so
-    extraction and the metrics UDF run once and the funnel counters
+    extraction runs once and the funnel counters
     resolve on that action; once on the MinHash signatures, which the
     pair pipeline reads three times, so the signature fold runs once;
     and once on the returned corpus, so later plans start from its
@@ -97,7 +62,14 @@ def curate(
     """
     docs = extract_fused(pages, **extract_kwargs)
     docs = docs.filter(F.col("n_errors") == 0)
-    docs = with_text_metrics(docs)
+    # metrics are about the CONTENT: drop the page-frame headers the
+    # byte-identity contract mandates in pdf outputs
+    docs = with_text_metrics(
+        docs.withColumn(
+            "__mt", F.regexp_replace("text", "\n--- Page [0-9]+ ---\n", "\n")
+        ),
+        "__mt",
+    ).drop("__mt")
     if max_dup_line_frac is not None:
         # Gopher repetition gate: zero-shuffle, rides the same scan
         from ..operators.quality_rules import repetition_metrics

@@ -44,7 +44,8 @@ from ..functions.redact import redact_pii
 from ..operators.dedup import drop_repeated_paragraphs
 from ..operators.packing import shard_manifest
 from ..operators.sampling import deterministic_split
-from ..operators.scoring import WORDS_EXPR, unigram_logprob_scores
+from ..operators.replayable import tokens_sql
+from ..operators.scoring import unigram_logprob_scores
 from .curate import curate, curation_report
 
 
@@ -100,7 +101,7 @@ def run_corpus_pipeline(
 
     tokens = corpus.select(
         "url", "split",
-        F.size(F.expr(WORDS_EXPR.format(col="text"))).cast("bigint")
+        F.size(F.expr(tokens_sql("text"))).cast("bigint")
         .alias("ws_tokens_final"),
     )
     manifest = shard_manifest(

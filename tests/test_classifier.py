@@ -109,9 +109,9 @@ def test_bigram_features(spark):
     d = spark.createDataFrame(
         [(0, "a b c"), (1, "solo"), (2, "")], "doc_id bigint, text string"
     )
-    from google_vision_ocr_spark.operators.scoring import WORDS_EXPR
+    from google_vision_ocr_spark.operators.replayable import tokens_sql
 
-    words = F.expr(WORDS_EXPR.format(col="text"))
+    words = F.expr(tokens_sql("text"))
     out = {
         r.doc_id: r.bg
         for r in d.select("doc_id", _word_bigrams(words).alias("bg")).collect()

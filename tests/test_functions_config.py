@@ -1,41 +1,39 @@
-"""Pure-function units: lang-id, quality, tokens, fingerprints, config."""
+"""Units: text metrics, fingerprints, normalization, config."""
 
 import os
 
 from google_vision_ocr_spark.config import ExtractConfig
 from google_vision_ocr_spark.functions.text import (
-    count_tokens_bpe,
-    count_tokens_ws,
-    lang_id,
-    quality_score,
     rolling_fingerprint,
-    shingles,
+    with_text_metrics,
 )
 
 
-def test_lang_id_heuristic():
-    assert lang_id("the quick brown fox and the lazy dog went to the market") == "en"
-    assert lang_id("der hund und die katze gingen schnell nach hause und schliefen") == "de"
-    assert lang_id("el perro que corre en la casa de la playa") == "es"
-    assert lang_id("这是一个中文句子") == "zh"
-    assert lang_id("これは日本語の文です") == "jp"
-    assert lang_id("") == "und"
-    assert lang_id("xyzzy 12345 !!!") == "und"
+def _metrics(spark, texts: list[str], col: str) -> list:
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, text string")
+    return [r[col] for r in with_text_metrics(df).orderBy("i").collect()]
 
 
-def test_quality_score_ordering():
+def test_lang_id_heuristic(spark):
+    assert _metrics(spark, [
+        "the quick brown fox and the lazy dog went to the market",
+        "der hund und die katze gingen schnell nach hause und schliefen",
+        "el perro que corre en la casa de la playa",
+        "这是一个中文句子",
+        "これは日本語の文です",
+        "",
+        "xyzzy 12345 !!!",
+    ], "lang_guess") == ["en", "de", "es", "zh", "jp", "und", "und"]
+
+
+def test_quality_score_ordering(spark):
     good = ("The quick brown fox jumps over the lazy dog. " * 12).strip()
     junk = "@@@@ #### $$$$ %%%% ^^^^ &&&& **** (((( )))) !!!!"
-    assert quality_score(good) > quality_score(junk)
-    assert quality_score("") == 0.0
-    assert 0.0 <= quality_score(junk) <= 1.0
-
-
-def test_token_counts():
-    assert count_tokens_ws("one two  three\n four") == 4
-    assert count_tokens_ws("") == 0
-    assert count_tokens_bpe("hello, world 1234") == 5  # hello , world 123 4
-    assert count_tokens_bpe("") == 0
+    q_good, q_junk, q_empty = _metrics(spark, [good, junk, ""], "quality")
+    assert q_good > q_junk
+    assert q_empty == 0.0
+    assert 0.0 <= q_junk <= 1.0
 
 
 def test_fingerprint_deterministic_and_sensitive():
@@ -43,13 +41,6 @@ def test_fingerprint_deterministic_and_sensitive():
     assert a == rolling_fingerprint("some document text")
     assert a != rolling_fingerprint("some document text!")
     assert 0 <= a < 2**64
-
-
-def test_shingles():
-    s = shingles("a b c d", k=3)
-    assert s == {"a b c", "b c d"}
-    assert shingles("a b", k=3) == {"a b"}
-    assert shingles("", k=3) == set()
 
 
 def test_config_precedence(tmp_path):

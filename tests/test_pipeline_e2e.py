@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 PIPELINE_KWARGS = dict(min_quality=0.1, min_tokens=2, shard_token_budget=500,
                        chunk_size=32, chunk_stride=24)
-PYTHON_NODES = {"MapInArrow", "ArrowEvalPython"}
+PYTHON_NODES = {"MapInArrow", "ArrowEvalPython", "BatchEvalPython"}
 
 
 def _last_execution_id(store) -> int:
@@ -97,15 +97,38 @@ def test_corpus_pipeline_end_to_end(spark, pipeline_run):
 
 
 def test_each_python_stage_runs_once(pipeline_run):
-    """Extraction runs in exactly one SQL execution, and every Python
-    stage (extraction, the metrics UDF, the MinHash signatures) runs
-    inside one of at most two: later actions start from the lineage
-    cuts instead of re-running or re-planning the Python stages."""
+    """Extraction's ``mapInArrow`` is the only Python in the pipeline,
+    and it runs in exactly one SQL execution: no Python runs after
+    extraction, and later actions start from the lineage cuts instead
+    of re-running or re-planning it."""
     _, _, executions = pipeline_run
     extraction = [e for e, names in executions.items() if "MapInArrow" in names]
-    python = [e for e, names in executions.items() if names & PYTHON_NODES]
+    python = {e: names & PYTHON_NODES for e, names in executions.items()
+              if names & PYTHON_NODES}
     assert len(extraction) == 1, executions
-    assert len(python) <= 2, executions
+    assert python == {extraction[0]: {"MapInArrow"}}, executions
+
+
+def test_text_metrics_plans_have_no_python(spark, tmp_path):
+    """Quality, language guess and token count are JVM expressions:
+    no Python UDF in with_text_metrics or the entries that read it."""
+    import __spark_entry__ as entry_mod
+    from google_vision_ocr_spark.functions.text import with_text_metrics
+
+    docs = spark.createDataFrame(
+        [(0, "the cat and the dog", "en", "src1", 19)],
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    )
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    queries = entry_mod.queries()
+    for df in (
+        queries["lang_id_heuristic"](spark, str(tmp_path)),
+        queries["quality_scores"](spark, str(tmp_path)),
+        queries["tier_extraction"](spark, str(tmp_path)),
+        with_text_metrics(docs),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan[:2000]
 
 
 def test_pipeline_partitioning_invariant(spark, fixture_dir, pipeline_run, tmp_path):
