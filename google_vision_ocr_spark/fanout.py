@@ -13,9 +13,8 @@ the frame's current partitioning underparallelizes the cluster
 (``current < target``), so at 100 TB — where the scan already carries
 thousands of row-group splits — it is a no-op and never coalesces or
 adds a shuffle.  The target is ``sc.defaultParallelism`` (cluster-wide
-cores; 32 on the bench's ``local[32]``), overridable via
-``SPARK_GRAFT_FANOUT_PARTITIONS``; the explicit-``n`` repartition is
-deliberate — AQE's partition coalescing targets
+cores; 32 on the bench's ``local[32]``); the explicit-``n``
+repartition is deliberate — AQE's partition coalescing targets
 ``advisoryPartitionSizeInBytes`` (64 MB) and would collapse a
 few-MB-but-CPU-heavy shuffle right back to one partition.
 
@@ -26,8 +25,6 @@ to the multi-second single-core stage it prevents.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: partition-count memo keyed by (session JVM hash, plan semanticHash)
@@ -36,13 +33,6 @@ from pyspark.sql import DataFrame
 #: probe runs once per distinct source frame instead of once per
 #: rebuilt bench plan.  Never caches data or results.
 _PROBE_MEMO: dict[tuple[int, int], int] = {}
-
-
-def fanout_target(df: DataFrame) -> int:
-    env = os.environ.get("SPARK_GRAFT_FANOUT_PARTITIONS")
-    if env:
-        return int(env)
-    return df.sparkSession.sparkContext.defaultParallelism
 
 
 def _current_partitions(df: DataFrame) -> int:
@@ -65,7 +55,7 @@ def fanout(df: DataFrame, *cols: str) -> DataFrame:
     keyless ``repartition(n)`` locally sorts its input first
     (``sortBeforeRepartition``, guide §2.5) — measured 0.34 → 1.48 s on
     events_hourly's single scan task before its call site was keyed."""
-    target = fanout_target(df)
+    target = df.sparkSession.sparkContext.defaultParallelism
     if target <= 1:
         return df
     try:

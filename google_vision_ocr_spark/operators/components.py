@@ -5,19 +5,15 @@ Jaccard) emits candidate/confirmed *pairs*; the corpus operation that
 follows is "keep one document per duplicate CLUSTER", which is
 connected components over the pair graph.
 
-Two interchangeable implementations, equivalence-tested against each
-other and a union-find oracle:
-
-- :func:`connected_components` — iterative MIN-LABEL PROPAGATION:
-  each round every node adopts the minimum label in its closed
-  neighborhood, one hash-shuffled join + one map-side-combinable
-  ``groupBy().min()`` per round.  Rounds needed = graph diameter —
-  and dedup graphs are stars and near-cliques (diameter 2-3), which
-  makes this the default.
-- :func:`connected_components_star` — alternating large-star /
-  small-star edge contraction (Kiveris et al., "Connected Components
-  in MapReduce and Beyond", SoCC'14): O(log n) rounds on ANY graph,
-  the variant for adversarially long duplicate chains.
+:func:`connected_components` is iterative MIN-LABEL PROPAGATION,
+tested against a union-find oracle: each round every node adopts the
+minimum label in its closed neighborhood, one hash-shuffled join + one
+map-side-combinable ``groupBy().min()`` per round.  Rounds needed =
+graph diameter, and dedup graphs are stars and near-cliques (diameter
+2-3).  A long path needs one round per hop, and the loop runs until no
+label changes: it never returns unconverged labels.  It terminates
+because a label never increases and never drops below its component's
+minimum node id.
 
 Implementation notes:
 
@@ -36,7 +32,10 @@ Implementation notes:
   chain OOMs the driver on plan analysis long before any data is big.
   Checkpointing truncates the plan to a leaf each round (the classic
   Pregel-on-DataFrames requirement; a production run on preemptible
-  executors would use reliable ``checkpoint()`` to storage instead).
+  executors would use reliable ``checkpoint()`` to storage instead),
+  and the previous round's blocks are released once the change count
+  has read them, so a long run holds two label frames, not one per
+  round.
 
 The oracle (``dedup_clusters``) replays reachability with a recursive
 CTE over the same edge set, so the component ids — not just their
@@ -55,7 +54,6 @@ def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    max_rounds: int = 20,
 ) -> DataFrame:
     """``(node, component)`` for every node in ``edges``; the component
     id is the minimum node id in the component."""
@@ -75,7 +73,8 @@ def connected_components(
         .select("node", F.least("node", "label").alias("label"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    changed = 1
+    while changed:
         # propagate: every node adopts min(own label, neighbors' labels)
         nbr = (
             sym.join(labels.withColumnRenamed("node", "v"), "v")
@@ -92,93 +91,9 @@ def connected_components(
             .filter(F.col("label") != F.col("old"))
             .count()
         )
+        cache.release_cut(labels)
         labels = new_labels
-        if changed == 0:
-            break
     return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """(v, m) for every neighbor v > u, m = min of u's closed
-    neighborhood — hooks big nodes onto their neighborhood minimum."""
-    sym = edges.unionByName(
-        edges.select(F.col("a").alias("b"), F.col("b").alias("a"))
-    ).filter(F.col("a") != F.col("b"))
-    mins = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
-    return (
-        sym.join(mins, "a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient every edge larger→smaller, then hook each node and its
-    smaller neighbors onto the neighborhood minimum."""
-    o = edges.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).filter(F.col("a") != F.col("b")).distinct()
-    mins = o.groupBy("a").agg(F.min("b").alias("m"))
-    hooked = o.join(mins, "a").select(F.col("b").alias("a"), F.col("m").alias("b"))
-    self_edges = mins.select(F.col("a"), F.col("m").alias("b"))
-    return (
-        hooked.unionByName(self_edges)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_rounds: int = 40,
-) -> DataFrame:
-    """Alternating large-star / small-star edge contraction (Kiveris
-    et al., SoCC'14): converges in O(log n) rounds on ANY graph —
-    including adversarially long chains where plain label propagation
-    needs diameter rounds.  Same output contract as
-    :func:`connected_components` (min node id per component; the two
-    are equivalence-tested against each other and a union-find oracle).
-
-    Each round is two map-side-combinable aggregations + joins over
-    the shrinking edge list; the edge frame is lineage-truncated per
-    round.  Convergence = the oriented edge set stops changing (count
-    + order-insensitive hash, one tiny action per round)."""
-    nodes = (
-        edges.select(F.col(src_col).alias("n"))
-        .unionByName(edges.select(F.col(dst_col).alias("n")))
-        .distinct()
-    )
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig = None
-    for _ in range(max_rounds):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        sig_row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-insensitive and overflow-free (a sum of
-            # xxhash64 values trips ANSI long-overflow)
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # final edge set is a star forest: (node, root); roots and isolated
-    # nodes label themselves
-    return (
-        nodes.join(e, nodes["n"] == e["a"], "left")
-        .select(
-            F.col("n").alias("node"),
-            F.coalesce(F.col("b"), F.col("n")).alias("component"),
-        )
-    )
 
 
 def triangle_counts(

@@ -229,6 +229,11 @@ def make_ivf_cell_udf(cids: np.ndarray, cmat: np.ndarray):
     return cell_udf
 
 
+#: centroid count above which :func:`ivf_assign`'s ``auto`` mode
+#: switches from the broadcast crossjoin to the matmul UDF
+_MATMUL_THRESHOLD = 64
+
+
 def ivf_assign(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -237,8 +242,6 @@ def ivf_assign(
     cid_col: str = "cid",
     cvec_col: str = "cv",
     method: str = "auto",
-    matmul_threshold: int = 64,
-    n_centroids: int | None = None,
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest
     centroid by cosine (ties break on centroid id).
@@ -248,24 +251,23 @@ def ivf_assign(
     - ``crossjoin`` — broadcast the centroid frame, score every
       (vector, centroid) pair JVM-side, ``max_by`` argmax (map-side
       combinable).  Fully SQL-expressible (it IS the DuckDB oracle for
-      ``ann_ivf_cosine``), but the explode is a ``n_centroids``× row
+      ``ann_ivf_cosine``), but the explode is a centroid-count× row
       blowup — fine at tens of centroids, fatal at 2^16.
     - ``matmul`` — collect the (tiny) centroid frame to the driver,
       closure-broadcast the normalized matrix into a pandas UDF, and do
       one BLAS matmul + argmax per Arrow batch: O(batch × dim ×
-      n_centroids) FLOPs with no row blowup, the only sane shape at
+      centroids) FLOPs with no row blowup, the only sane shape at
       real centroid counts.
 
-    ``auto`` picks matmul above ``matmul_threshold`` centroids; pass
-    ``n_centroids`` when you know it to skip the count() action that
-    decides (callers who built the centroids know their k).  At 100 TB
-    assignment runs once at index-build time and the corpus is written
-    partitioned / clustered by ``cell`` so a query's probe touches only
-    its cells.
+    ``auto`` counts the centroids (one action) and picks matmul above
+    ``_MATMUL_THRESHOLD`` (64) of them.  At 100 TB assignment runs once
+    at index-build time and the corpus is written partitioned /
+    clustered by ``cell`` so a query's probe touches only its cells.
     """
     if method == "auto":
-        k = n_centroids if n_centroids is not None else centroids.count()
-        method = "matmul" if k > matmul_threshold else "crossjoin"
+        method = (
+            "matmul" if centroids.count() > _MATMUL_THRESHOLD else "crossjoin"
+        )
     if method == "matmul":
         rows = centroids.select(F.col(cid_col), F.col(cvec_col)).collect()
         cids = np.array([r[0] for r in rows], dtype=np.int64)
@@ -611,54 +613,6 @@ def ivf_topk_pruned(
     )
     return _rerank_topk(
         idx.filter(F.col(id_col) != query_id), qrow, k, id_col, vec_col
-    )
-
-
-def write_lsh_index(
-    embeddings: DataFrame,
-    path: str,
-    n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ONE hyperplane-LSH table (table 0 of the family, so it
-    equals :func:`write_lsh_multi_index`'s ``tbl=0``) hive-partitioned
-    by its ``code`` — the physical layout behind "the per-table code is
-    a partition key".  A radius-``r`` probe then enumerates the code's
-    Hamming-ball literals and scans only those directories."""
-    coded = embeddings.withColumn(
-        "code", _codes(embeddings, vec_col, n_planes, 1, dim)[0]
-    )
-    coded.write.mode(mode).partitionBy("code").parquet(path)
-
-
-def lsh_probe_pruned(
-    spark,
-    embeddings: DataFrame,
-    index_path: str,
-    query_id: int,
-    k: int = 10,
-    n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Radius-1 probe of a :func:`write_lsh_index` table: the query's
-    code plus its ``n_planes`` single-bit flips are ``1 + n_planes``
-    literal partition values — the scan reads only that Hamming ball's
-    directories, never the full table."""
-    (qc,) = _query_codes(
-        embeddings, query_id, id_col, vec_col, n_planes, 1, dim
-    )
-    idx = spark.read.parquet(index_path).filter(
-        F.col("code").isin(_hamming_ball(qc, n_planes, 1))
-    )
-    return _rerank_topk(
-        idx.filter(F.col(id_col) != query_id),
-        _query_row(embeddings, query_id, id_col, vec_col),
-        k, id_col, vec_col,
     )
 
 

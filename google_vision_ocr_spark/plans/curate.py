@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..functions.text import with_text_metrics
-from ..operators.dedup import minhash_lsh_pairs, minhash_signatures
+from ..operators.dedup import (
+    drop_exact_dups,
+    minhash_lsh_pairs,
+    minhash_signatures,
+)
 from .fused import extract_fused
 
 
@@ -35,7 +39,6 @@ def curate(
     min_tokens: int = 5,
     allowed_langs: tuple[str, ...] | None = None,
     near_dup_jaccard: float = 0.8,
-    materialize: bool = True,
     max_dup_line_frac: float | None = None,
     **extract_kwargs,
 ) -> tuple[DataFrame, Observation]:
@@ -46,19 +49,16 @@ def curate(
     survived all gates plus per-gate booleans summed (survivors at each
     gate), so one pass yields the whole funnel.
 
-    ``materialize=True`` (default) cuts the lineage three times with
-    ``localCheckpoint(eager=True)``: once after the gates, where the
-    survivors feed both sides of the exact-dedup semi-join, so
-    extraction runs once and the funnel counters
-    resolve on that action; once on the MinHash signatures, which the
-    pair pipeline reads three times, so the signature fold runs once;
-    and once on the returned corpus, so later plans start from its
-    stored blocks instead of re-deriving the near-dup step.  The first
-    two cuts' blocks are released once the last exists.  Cut blocks
-    live in executor storage: losing an executor fails the job instead
-    of recomputing (``docs/SCALE.md``).  Pass ``materialize=False`` for
-    a fully lazy plan (e.g. when composing into a larger job that does
-    its own checkpointing); the signature fold then runs three times.
+    The lineage is cut three times with ``localCheckpoint(eager=True)``:
+    once after the gates, where the survivors feed both sides of the
+    exact-dedup semi-join, so extraction runs once and the funnel
+    counters resolve on that action; once on the MinHash signatures,
+    which the pair pipeline reads three times, so the signature fold
+    runs once; and once on the returned corpus, so later plans start
+    from its stored blocks instead of re-deriving the near-dup step.
+    The first two cuts' blocks are released once the last exists.  Cut
+    blocks live in executor storage: losing an executor fails the job
+    instead of recomputing (``docs/SCALE.md``).
     """
     docs = extract_fused(pages, **extract_kwargs)
     docs = docs.filter(F.col("n_errors") == 0)
@@ -93,25 +93,19 @@ def curate(
         F.sum(F.col("__q_ok").cast("int")).alias("pass_quality"),
         F.sum((F.col("__q_ok") & F.col("__lang_ok")).cast("int")).alias("pass_lang"),
     )
-    kept = gated.filter(F.col("__q_ok") & F.col("__lang_ok")).drop("__q_ok", "__lang_ok")
-    if materialize:
-        kept = kept.localCheckpoint(eager=True)
+    kept = (
+        gated.filter(F.col("__q_ok") & F.col("__lang_ok"))
+        .drop("__q_ok", "__lang_ok")
+        .localCheckpoint(eager=True)
+    )
 
     # exact dedup: keep the lexicographically-min url per identical text
-    keepers = (
-        kept.select(F.md5(F.col("text").cast("binary")).alias("text_hash"), "url")
-        .groupBy("text_hash")
-        .agg(F.min("url").alias("url"))
-        .select("url")
-    )
-    deduped = kept.join(keepers, "url", "left_semi")
+    deduped = drop_exact_dups(kept, "url")
 
     # near-dup removal: drop the max-url side of each candidate pair.
     # The pair pipeline reads the signatures three times (banding and
     # both attaches), so they are cut once instead of folded thrice.
-    sigs = minhash_signatures(deduped, "url")
-    if materialize:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = minhash_signatures(deduped, "url").localCheckpoint(eager=True)
     pairs = minhash_lsh_pairs(
         deduped, id_col="url", text_col="text", signatures=sigs
     )
@@ -120,11 +114,11 @@ def curate(
         .select(F.greatest("id_a", "id_b").alias("url"))
         .dropDuplicates(["url"])
     )
-    curated = deduped.join(losers, "url", "left_anti")
-    if materialize:
-        curated = curated.localCheckpoint(eager=True)
-        cache.release_cut(kept)
-        cache.release_cut(sigs)
+    curated = deduped.join(losers, "url", "left_anti").localCheckpoint(
+        eager=True
+    )
+    cache.release_cut(kept)
+    cache.release_cut(sigs)
     return curated, obs
 
 

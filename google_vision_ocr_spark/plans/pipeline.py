@@ -85,8 +85,7 @@ def run_corpus_pipeline(
         .filter(F.octet_length("text") > 0)
     )
     corpus = cut_corpus = corpus.localCheckpoint(eager=True)
-    if curate_kwargs.get("materialize", True):
-        cache.release_cut(curated)  # the corpus cut no longer reads it
+    cache.release_cut(curated)  # the corpus cut no longer reads it
 
     scored = unigram_logprob_scores(
         corpus, id_col="url", text_col="text", vocab_size=lm_vocab

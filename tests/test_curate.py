@@ -83,28 +83,7 @@ def test_curate_repetition_gate(spark, tmp_path):
     pq.write_table(t, src)
     pages = spark.read.parquet(src)
     with_gate, _ = curate(pages, min_quality=0.0, min_tokens=1,
-                          max_dup_line_frac=0.3, materialize=False)
-    without, _ = curate(pages, min_quality=0.0, min_tokens=1, materialize=False)
+                          max_dup_line_frac=0.3)
+    without, _ = curate(pages, min_quality=0.0, min_tokens=1)
     assert {r["url"] for r in with_gate.collect()} == {"u/fresh"}
     assert {r["url"] for r in without.collect()} == {"u/spam", "u/fresh"}
-
-
-@pytest.mark.parametrize("source, kwargs", [
-    ("curation_input", dict(allowed_langs=("en",), near_dup_jaccard=0.5)),
-    ("fixture_dir", dict(min_quality=0.1, min_tokens=2)),
-])
-def test_lineage_cuts_change_no_result(spark, request, source, kwargs):
-    """``materialize=True`` (lineage cuts) and ``materialize=False``
-    (one lazy plan) give the same rows and the same funnel counters."""
-    from google_vision_ocr_spark.plans.curate import curate, curation_report
-
-    path = request.getfixturevalue(source)
-    pages = spark.read.parquet(path if source == "curation_input" else path["pages"])
-    cut, cut_obs = curate(pages, materialize=True, **kwargs)
-    lazy, lazy_obs = curate(pages, materialize=False, **kwargs)
-    assert cut.columns == lazy.columns
-    assert cut.exceptAll(lazy).count() == 0
-    assert lazy.exceptAll(cut).count() == 0
-    report = curation_report(cut, cut_obs)
-    assert report == curation_report(lazy, lazy_obs)
-    assert report["docs_out"] > 0

@@ -1,8 +1,5 @@
-"""Units: text metrics, fingerprints, normalization, config."""
+"""Units: text metrics, fingerprints, normalization."""
 
-import os
-
-from google_vision_ocr_spark.config import ExtractConfig
 from google_vision_ocr_spark.functions.text import (
     rolling_fingerprint,
     with_text_metrics,
@@ -41,23 +38,6 @@ def test_fingerprint_deterministic_and_sensitive():
     assert a == rolling_fingerprint("some document text")
     assert a != rolling_fingerprint("some document text!")
     assert 0 <= a < 2**64
-
-
-def test_config_precedence(tmp_path):
-    p = tmp_path / "config.json"
-    p.write_text('{"recognizer": "flaky-stub", "max_retries": 7, "unknown_key": 1}')
-    cfg = ExtractConfig.load(json_path=str(p))
-    assert cfg.recognizer == "flaky-stub" and cfg.max_retries == 7
-    os.environ["GVOS_MAX_RETRIES"] = "9"
-    os.environ["GVOS_OTSU"] = "true"
-    try:
-        cfg = ExtractConfig.load(json_path=str(p), max_retries=11)
-        assert cfg.max_retries == 11  # explicit override wins over env
-        assert cfg.otsu is True       # env wins over defaults
-    finally:
-        del os.environ["GVOS_MAX_RETRIES"], os.environ["GVOS_OTSU"]
-    kw = cfg.extract_kwargs()
-    assert kw["rate_limit_qps"] is None and kw["otsu"] is True
 
 
 def test_parse_illustration_pages():

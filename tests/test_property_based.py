@@ -174,27 +174,6 @@ def test_paragraph_dedup_matches_sequential_replay(spark, docs):
 
 @SETTINGS
 @given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)).filter(
-            lambda e: e[0] != e[1]
-        ),
-        min_size=1,
-        max_size=25,
-    )
-)
-def test_star_contraction_matches_union_find(spark, edges):
-    from google_vision_ocr_spark.operators.components import (
-        connected_components_star,
-    )
-
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {r["node"]: r["component"]
-           for r in connected_components_star(df).collect()}
-    assert got == _union_find(edges)
-
-
-@SETTINGS
-@given(
     n_tokens=st.integers(0, 40),
     size=st.integers(1, 10),
     stride=st.integers(1, 10),

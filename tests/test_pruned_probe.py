@@ -17,9 +17,9 @@ from google_vision_ocr_spark.operators.similarity import (
     hyperplane_lsh_topk,
     ivf_topk,
     ivf_topk_pruned,
-    lsh_probe_pruned,
+    lsh_multiprobe_pruned,
     write_ivf_index,
-    write_lsh_index,
+    write_lsh_multi_index,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -88,102 +88,100 @@ def test_ivf_pruned_probe_matches_in_memory_operator(spark, emb, ivf_index):
     assert [tuple(r) for r in pruned] == [tuple(r) for r in mem]
 
 
-def test_lsh_pruned_probe_reads_only_hamming_ball(spark, emb, tmp_path):
-    path = str(tmp_path / "lsh")
-    write_lsh_index(emb, path, n_planes=8, dim=64)
-    out = lsh_probe_pruned(
-        spark, emb, path, query_id=0, k=10, n_planes=8, dim=64
-    )
-    import os
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[code#\d+L? IN \(([\d,]+)\)\]", plan)
-    assert m, plan
-    probed = {int(c) for c in m.group(1).split(",")}
-    # the probe filter is exactly the query code's radius-1 Hamming ball
-    (qc,) = _query_codes(emb, 1)
-    ball = {qc} | {qc ^ (1 << b) for b in range(8)}
-    assert probed == ball
-    # and the table genuinely holds codes OUTSIDE the ball (pruned away)
-    on_disk = {
-        int(d.split("=")[1])
-        for d in os.listdir(path)
-        if d.startswith("code=")
-    }
-    assert not (on_disk <= ball), "index too small to demonstrate pruning"
-
-
-def test_lsh_pruned_probe_is_subset_of_radius1_inmemory(spark, emb, tmp_path):
-    """Radius-1 pruned probe == in-memory single-table radius-1 LSH."""
-    path = str(tmp_path / "lsh2")
-    write_lsh_index(emb, path, n_planes=8, dim=64)
-    pruned = lsh_probe_pruned(
-        spark, emb, path, query_id=0, k=10, n_planes=8, dim=64
-    ).collect()
-    mem = hyperplane_lsh_topk(
-        emb,
-        query_id=0,
-        k=10,
-        n_planes=8,
-        n_tables=1,
-        hamming_radius=1,
-        dim=64,
-    ).collect()
-    assert [tuple(r) for r in pruned] == [tuple(r) for r in mem]
-
-
-def test_lsh_multiprobe_prunes_every_table_branch(spark, emb, tmp_path):
-    """The multi-table probe (VERDICT r4 #4): the (tbl, code)-
-    partitioned index scan must carry one statically-pruned branch per
-    hash table — OR of (tbl = t AND code IN ball_t) in
-    PartitionFilters — and its results must equal the in-memory
-    OR-amplified operator exactly (identical candidate-set semantics:
-    by-row OR == deduped union of per-table balls)."""
-    from google_vision_ocr_spark.operators.similarity import (
-        lsh_multiprobe_pruned,
-        write_lsh_multi_index,
-    )
-
-    path = str(tmp_path / "lshm")
-    write_lsh_multi_index(emb, path, n_tables=2, n_planes=8, dim=64)
-    # scan metadata truncates at 100 chars by default — the two
-    # 9-literal balls need more to be asserted exactly
+def _multiprobe(spark, emb, path, n_tables):
+    """Write an ``n_tables`` (tbl, code)-partitioned index at ``path``
+    and probe it for query 0 at radius 1; return the probe and its
+    scan's PartitionFilters."""
+    write_lsh_multi_index(emb, path, n_tables=n_tables, n_planes=8, dim=64)
+    # scan metadata truncates at 100 chars by default — the 9-literal
+    # balls need more to be asserted exactly
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try:
         out = lsh_multiprobe_pruned(
-            spark, emb, path, query_id=0, k=10, n_tables=2, n_planes=8,
-            radius=1, dim=64,
+            spark, emb, path, query_id=0, k=10, n_tables=n_tables,
+            n_planes=8, radius=1, dim=64,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.unset("spark.sql.maxMetadataStringLength")
     i = plan.find("PartitionFilters: [")
     assert i >= 0, plan
-    pf = plan[i : plan.find("]", i) + 1]
-    # one pruned branch per table, each with its own literal ball
-    for t in range(2):
-        assert re.search(rf"tbl#\d+ = {t}\)", pf), pf
-    assert pf.count("INSET") + pf.count(" IN (") >= 2, pf
-    # every per-table ball literal is the query code's radius-1
-    # neighborhood under that table's planes
-    for t, qc in enumerate(_query_codes(emb, 2)):
+    return out, plan[i : plan.find("]", i) + 1]
+
+
+def _assert_ball_literals(emb, pf, n_tables):
+    """One pruned branch per table, and every per-table ball literal is
+    the query code's radius-1 neighborhood under that table's planes
+    (one table prints its conjuncts comma-separated, several print an
+    OR of ANDs).  Returns the balls."""
+    assert pf.count("INSET") + pf.count(" IN (") == n_tables, pf
+    balls = []
+    for t, qc in enumerate(_query_codes(emb, n_tables)):
         ball = {qc} | {qc ^ (1 << b) for b in range(8)}
-        nums = None
-        for mm in re.finditer(rf"tbl#\d+ = {t}\) AND code#\d+L? (?:INSET|IN \()([\d, .]+?)(?:\)|\))", pf):
-            cand = {int(x) for x in re.findall(r"\d+", mm.group(1))}
-            if cand == ball:
-                nums = cand
-                break
-        assert nums == ball, (t, pf)
+        m = re.search(
+            rf"tbl#\d+ = {t}\)(?: AND |, )code#\d+L? (?:INSET |IN \()([\d, ]+)",
+            pf,
+        )
+        assert m, (t, pf)
+        assert {int(x) for x in re.findall(r"\d+", m.group(1))} == ball, (t, pf)
+        balls.append(ball)
+    return balls
+
+
+def _assert_table0_prunes(path, ball):
+    """Table 0 genuinely holds codes OUTSIDE its ball (pruned away)."""
+    import os
+
+    on_disk = {
+        int(d.split("=")[1])
+        for d in os.listdir(os.path.join(path, "tbl=0"))
+        if d.startswith("code=")
+    }
+    assert not (on_disk <= ball), "index too small to demonstrate pruning"
+
+
+def _assert_matches_in_memory(emb, out, n_tables):
+    """The pruned probe equals the in-memory OR-amplified operator
+    exactly (by-row OR == deduped union of per-table balls)."""
     got = [tuple(r) for r in out.collect()]
     mem = [
         tuple(r)
         for r in hyperplane_lsh_topk(
-            emb, query_id=0, k=10, n_planes=8, n_tables=2,
+            emb, query_id=0, k=10, n_planes=8, n_tables=n_tables,
             hamming_radius=1, dim=64,
         ).collect()
     ]
     assert got == mem
+
+
+def test_lsh_pruned_probe_reads_only_hamming_ball(spark, emb, tmp_path):
+    """A single-table index probed at radius 1 filters on exactly the
+    query code's Hamming ball, and the index holds codes outside it."""
+    path = str(tmp_path / "lsh")
+    _, pf = _multiprobe(spark, emb, path, n_tables=1)
+    (ball,) = _assert_ball_literals(emb, pf, 1)
+    _assert_table0_prunes(path, ball)
+
+
+def test_lsh_pruned_probe_is_subset_of_radius1_inmemory(spark, emb, tmp_path):
+    """Radius-1 single-table pruned probe == in-memory single-table
+    radius-1 LSH."""
+    out, _ = _multiprobe(spark, emb, str(tmp_path / "lsh2"), n_tables=1)
+    _assert_matches_in_memory(emb, out, 1)
+
+
+def test_lsh_multiprobe_prunes_every_table_branch(spark, emb, tmp_path):
+    """The multi-table probe (VERDICT r4 #4): the (tbl, code)-
+    partitioned index scan must carry one statically-pruned branch per
+    hash table — (tbl = t AND code IN ball_t), OR-ed over the tables,
+    in PartitionFilters — whose literals are exactly each query code's
+    radius-1 Hamming ball; the index must hold codes outside the ball;
+    and its results must equal the in-memory operator exactly."""
+    path = str(tmp_path / "lshm")
+    out, pf = _multiprobe(spark, emb, path, n_tables=2)
+    balls = _assert_ball_literals(emb, pf, 2)
+    _assert_table0_prunes(path, balls[0])
+    _assert_matches_in_memory(emb, out, 2)
 
 
 def test_pruned_probes_missing_query_id_raises(spark, emb, tmp_path):
@@ -191,21 +189,8 @@ def test_pruned_probes_missing_query_id_raises(spark, emb, tmp_path):
     not an opaque NoneType crash.  With ``dim`` given, the query's
     codes come from ONE driver action (the ``first()`` that finds the
     row missing); without it, a width probe runs first."""
-    import pytest
-
-    from google_vision_ocr_spark.operators.similarity import (
-        lsh_multiprobe_pruned,
-        lsh_probe_pruned,
-        write_lsh_index,
-        write_lsh_multi_index,
-    )
-
-    p1 = str(tmp_path / "lsh1")
     pm = str(tmp_path / "lshm")
-    write_lsh_index(emb, p1, n_planes=8, dim=64)
     write_lsh_multi_index(emb, pm, n_tables=2, n_planes=8, dim=64)
-    with pytest.raises(ValueError, match="query_id"):
-        lsh_probe_pruned(spark, emb, p1, query_id=10**9, n_planes=8, dim=64)
     with pytest.raises(ValueError, match="query_id"):
         lsh_multiprobe_pruned(
             spark, emb, pm, query_id=10**9, n_tables=2, n_planes=8, dim=64

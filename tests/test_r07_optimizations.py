@@ -6,7 +6,6 @@ these tests pin (a) the equivalences the optimizations rely on and
 """
 
 import itertools
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,14 +29,6 @@ def test_fanout_repartitions_single_partition_input(spark):
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     # values untouched
     assert sorted(r.id for r in out.collect()) == list(range(100))
-
-
-def test_fanout_env_override(spark, monkeypatch):
-    from google_vision_ocr_spark.fanout import fanout
-
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_PARTITIONS", "7")
-    df = spark.range(0, 50).coalesce(1)
-    assert fanout(df, "id").rdd.getNumPartitions() == 7
 
 
 # ------------------------------------------- minhash bucket pair-gen

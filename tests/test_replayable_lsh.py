@@ -143,8 +143,7 @@ def test_replayable_pipelines_have_no_python_udf(
     bench = docs.filter(F.col("doc_id") % 50 == 0).select(
         F.substring("text", 1, 120).alias("text")
     )
-    p1, pm = str(tmp_path / "lsh1"), str(tmp_path / "lshm")
-    S.write_lsh_index(emb, p1, dim=64)
+    pm = str(tmp_path / "lshm")
     S.write_lsh_multi_index(emb, pm, dim=64)
     for df in (
         D.minhash_lsh_pairs(docs),
@@ -155,7 +154,6 @@ def test_replayable_pipelines_have_no_python_udf(
         S.hyperplane_lsh_topk(emb, query_id=0, dim=64),
         S.lsh_bucket_histogram(emb, dim=64),
         S.embedding_near_dup_pairs(emb, dim=64),
-        S.lsh_probe_pruned(spark, emb, p1, query_id=0, dim=64),
         S.lsh_multiprobe_pruned(spark, emb, pm, query_id=0, dim=64),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
