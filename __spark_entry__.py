@@ -119,7 +119,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r7: payload synthesis fused into the recognition stage — one
     # Python boundary instead of two (ArrowEvalPython + MapInArrow),
-    # same per-row logic via the shared process_row body; identical
+    # same doc_rows projection and the same extraction kernel; identical
     # output (exceptAll-verified vs the staged documents_to_pages →
     # extract_fused path, which remains the default elsewhere)
     out = extract_documents_fused(_t(spark, sf_dir, "documents"))

@@ -13,7 +13,7 @@ Order matters: emails first (their local parts contain digits an
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Java-regex and RE2 compatible (no lookarounds, no backrefs)
@@ -38,9 +38,3 @@ def clean_whitespace(col: Column) -> Column:
     """Collapse runs of whitespace to single spaces and trim."""
     # explicit RE2-whitespace class (Java \s adds \x0B; RE2's does not)
     return F.trim(F.regexp_replace(col, r"[ \t\n\f\r]+", " "))
-
-
-def with_redacted_text(
-    df: DataFrame, text_col: str = "text", out_col: str = "text_redacted"
-) -> DataFrame:
-    return df.withColumn(out_col, redact_pii(F.col(text_col)))

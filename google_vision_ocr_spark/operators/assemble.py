@@ -7,7 +7,8 @@
   group, never a global ``orderBy``) → higher-order ``transform`` /
   ``aggregate`` for the framing and byte-span offsets.  Everything
   stays in whole-stage codegen; no Python.
-- :func:`route_illustrations` — F2/F3 broadcast semi/anti routing
+- :func:`tag_kind` — F2/F3 illustration routing as one broadcast join
+  that tags each page ``text`` or ``image`` with the reference's ids
   (``epub_processor.py:95-111``).
 - :func:`chapter_islands` — W1 gaps-and-islands run grouping
   (``epub_processor.py:221-236``) + A2 merged-chapter aggregation
@@ -42,10 +43,6 @@ SPANS_FROM_FRAMED = f"""
 """
 
 
-def frame_col(page_col: str, text_col: str):
-    return F.expr(FRAME_SQL.format(page=page_col, text=text_col))
-
-
 def framed_concat(df: DataFrame, doc_col: str = "url", page_col: str = "page",
                   text_col: str = "text", error_col: str | None = "ocr_error") -> DataFrame:
     """GroupBy document → ordered framed concat + byte spans.
@@ -76,25 +73,15 @@ def framed_concat(df: DataFrame, doc_col: str = "url", page_col: str = "page",
     )
 
 
-def route_illustrations(pages: DataFrame, designations: DataFrame,
-                        keys: tuple[str, ...] = ("url", "page")) -> tuple[DataFrame, DataFrame]:
-    """Split page rows into (ocr_targets, illustration_items).
-
-    The designation side is tiny (user-entered page/path lists,
-    ``epub_processor.py:29-30``), so both splits are **broadcast**
-    semi/anti joins — no shuffle of the big side.
-    """
-    d = F.broadcast(designations.select(*keys).dropDuplicates(list(keys)))
-    ocr_targets = pages.join(d, list(keys), "left_anti")
-    illustrations = pages.join(d, list(keys), "left_semi")
-    return ocr_targets, illustrations
-
-
 def tag_kind(pages: DataFrame, designations: DataFrame,
              keys: tuple[str, ...] = ("url", "page")) -> DataFrame:
-    """Single-frame variant of routing: add ``kind ∈ {text, image}``
-    and the reference's id scheme (``epub_processor.py:95-106``:
-    ``page_{n}`` / ``img_pdf_{n}``)."""
+    """Route pages against the illustration designations: add
+    ``kind ∈ {text, image}`` and the reference's id scheme
+    (``epub_processor.py:95-106``: ``page_{n}`` / ``img_pdf_{n}``).
+
+    The designation side is tiny (user-entered page/path lists,
+    ``epub_processor.py:29-30``), so it is a **broadcast** join — no
+    shuffle of the big side."""
     d = F.broadcast(
         designations.select(*keys).dropDuplicates(list(keys)).withColumn("__illust", F.lit(True))
     )

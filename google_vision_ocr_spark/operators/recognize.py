@@ -44,13 +44,14 @@ class TokenBucket:
 
 
 def make_recognize(
-    recognizer: str = "stub",
-    rate_limit_qps: float | None = None,
-    max_retries: int = 3,
-    backoff_base_s: float = 0.05,
+    recognizer: str,
+    rate_limit_qps: float | None,
+    max_retries: int,
+    backoff_base_s: float,
 ) -> Callable[[bytes, object], tuple[str, bool]]:
     """Per-task ``recognize(payload, item_id) -> (text, is_error)`` with
-    the error-as-data message format of ``ocr_service.py:228``."""
+    the error-as-data message format of ``ocr_service.py:228``.  The
+    options' defaults live in ``plans/fused.make_recognize_item``."""
     engine = get_recognizer(recognizer)
     bucket = TokenBucket(rate_limit_qps) if rate_limit_qps else None
 

@@ -41,18 +41,6 @@ def cms_hash(col: Column, row: Column | int, width: int) -> Column:
     )
 
 
-def cms_hash_sql(expr: str, row_expr: str, width: int) -> str:
-    """DuckDB twin of :func:`cms_hash` (md5 of the same UTF-8 bytes,
-    same 8-hex-digit fold)."""
-    payload = f"CAST({row_expr} AS VARCHAR) || ':' || CAST({expr} AS VARCHAR)"
-    return (
-        f"(list_reduce(list_transform(generate_series(1, 8), "
-        f"i -> strpos('0123456789abcdef', "
-        f"substr(md5({payload}), i, 1)) - 1), "
-        f"(a, b) -> a * 16 + b) % {width})"
-    )
-
-
 def count_min_build(
     df: DataFrame, key_col: str, depth: int = 4, width: int = 256
 ) -> DataFrame:

@@ -8,8 +8,9 @@ scratch); this is the batch-job equivalent of its tempdir spool
 The **unit of commit** is a bucket; the **unit of execution** is a
 batch of buckets.
 
-- The input is cut into deterministic buckets of the url space
-  (``pmod(xxhash64(url), n_buckets)``), the stand-in for Iceberg
+- The input is cut into deterministic buckets of the url space by
+  ``sources/catalog.url_bucket`` (``pmod(xxhash64(url), n_buckets)``),
+  the pages table's own url-bucket rule and the stand-in for Iceberg
   partitions (``days(warc_ts)`` + url bucket) in this parquet-only
   sandbox.
 - Pending buckets are grouped into batches of as many buckets as fit in
@@ -50,16 +51,13 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import url_bucket
 from .fused import extract_fused
 
 MANIFEST_DIR = "manifest"
 DATA_DIR = "data"
 PART_COL = "part"
 COUNTERS = ("docs", "pages", "ocr_calls", "bytes_extracted", "errors")
-
-
-def _bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
 
 
 def completed_buckets(output_path: str) -> dict[int, dict]:
@@ -106,7 +104,7 @@ def run_checkpointed_extract(
     spark: SparkSession,
     input_df: DataFrame,
     output_path: str,
-    n_buckets: int = 8,
+    n_buckets: int,
     fail_after_bucket: int | None = None,
     **extract_kwargs,
 ) -> dict:
@@ -125,7 +123,7 @@ def run_checkpointed_extract(
             f"{output_path} was begun with n_buckets={begun_with[0]} but is "
             f"resumed with n_buckets={n_buckets}; resume with the same count"
         )
-    bucketed = input_df.withColumn(PART_COL, _bucket_col(n_buckets))
+    bucketed = input_df.withColumn(PART_COL, url_bucket(n_buckets))
     pending = [b for b in range(n_buckets) if b not in done]
     size = batch_size(input_df, n_buckets)
     batches = [pending[i:i + size] for i in range(0, len(pending), size)]
@@ -139,7 +137,7 @@ def run_checkpointed_extract(
     for batch in batches:
         part = bucketed.filter(F.col(PART_COL).isin(batch)).drop(PART_COL)
         result = extract_fused(part, **extract_kwargs).withColumn(
-            PART_COL, _bucket_col(n_buckets))
+            PART_COL, url_bucket(n_buckets))
         obs = Observation(f"extract-b{batch[0]}-{batch[-1]}")
         observed = result.observe(obs, *(_bucket_counters(k) for k in batch))
         (observed.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")

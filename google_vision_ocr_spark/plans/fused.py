@@ -12,6 +12,15 @@ The kernel has two halves:
   rasters only (the reference's folder path skips preprocessing,
   ``ocr_service.py:173-174``), then recognition with rate limiting,
   retries and error-as-data (``operators/recognize.make_recognize``).
+  Its signature is the only declaration of the kernel's seven options
+  (recognizer, rate limit, retries, backoff, Otsu, deskew, DPI) and
+  their defaults; every plan takes them as ``**kernel`` and binds them
+  to that signature while the plan is built, so a misspelt option fails
+  there, not in a Spark task.
+
+Every Python stage is one ``mapInArrow`` built by ``_stage``; the
+recognizing ones go through ``_recognize_stage``, which maps a task's
+page items through one per-task ``make_recognize_item(**kernel)``.
 
 Default shape (``extract_fused``): ``process_items`` — ONE
 ``mapInArrow`` stage composing both halves, the raster handed across
@@ -36,6 +45,7 @@ byte-identical to the oracle for every payload kind (asserted in tests).
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
@@ -105,17 +115,18 @@ def explode(url: str, payload: bytes | None, text: str | None) -> Iterator[tuple
 
 
 def make_recognize_item(
-    recognizer: str,
-    rate_limit_qps: float | None,
-    max_retries: int,
-    backoff_base_s: float,
-    otsu: bool,
-    do_deskew: bool,
-    dpi: bool,
+    recognizer: str = "stub",
+    rate_limit_qps: float | None = None,
+    max_retries: int = 3,
+    backoff_base_s: float = 0.05,
+    otsu: bool = False,
+    do_deskew: bool = False,
+    dpi: bool = False,
 ) -> Callable[[tuple], tuple]:
     """Recognize half: per-task state plus ``recognize_item``, which maps
     one page item to its recognized row
-    ``(url, page, kind, text, ocr_error)``."""
+    ``(url, page, kind, text, ocr_error)``.  The only declaration of the
+    kernel's options and their defaults."""
     recognize = make_recognize(recognizer, rate_limit_qps, max_retries, backoff_base_s)
 
     def recognize_item(item: tuple) -> tuple:
@@ -169,6 +180,37 @@ def _batched(rows: Iterable[tuple], schema: pa.Schema) -> Iterator[pa.RecordBatc
         yield to_batch(buf)
 
 
+def _stage(df: DataFrame, cols: list[str], rows_out: Callable[[Iterator[tuple]], Iterable[tuple]],
+           schema: str, schema_pa: pa.Schema) -> DataFrame:
+    """Every Python stage of the plans below: a ``mapInArrow`` over ``df``'s
+    ``cols`` that maps each task's rows through ``rows_out`` and emits
+    bounded record batches of ``schema``."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield from _batched(rows_out(_rows(batches)), schema_pa)
+
+    return df.select(*cols).mapInArrow(run, schema)
+
+
+def _recognize_stage(df: DataFrame, cols: list[str],
+                     items: Callable[[Iterator[tuple]], Iterable[tuple]],
+                     kernel: dict) -> DataFrame:
+    """A :func:`_stage` whose task maps its page items, ``items(rows)``,
+    through one per-task ``make_recognize_item(**kernel)``.  The options
+    are bound to that signature here, before any task runs, so a
+    misspelt one raises ``TypeError`` while the plan is built."""
+    inspect.signature(make_recognize_item).bind(**kernel)
+
+    def rows_out(rows: Iterator[tuple]) -> Iterator[tuple]:
+        return map(make_recognize_item(**kernel), items(rows))
+
+    return _stage(df, cols, rows_out, RECOGNIZED_SCHEMA, _RECOGNIZED_SCHEMA_PA)
+
+
+def _exploded(rows: Iterator[tuple]) -> Iterator[tuple]:
+    return (item for row in rows for item in explode(*row))
+
+
 # --- plans -------------------------------------------------------------------
 
 
@@ -176,48 +218,26 @@ def scan_items(df: DataFrame, payload_col: str = "html") -> DataFrame:
     """The explode half as its own ``mapInArrow``: input rows → page
     items, PDF rasters serialized as SIMG for the exchange that follows."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def items() -> Iterator[tuple]:
-            for row in _rows(batches):
-                for url, page, kind, image, text in explode(*row):
-                    if kind == "pdf" and image is not None:
-                        image = formats.encode_simg(image)
-                    yield url, page, kind, image, text
+    def items(rows: Iterator[tuple]) -> Iterator[tuple]:
+        for url, page, kind, image, text in _exploded(rows):
+            if kind == "pdf" and image is not None:
+                image = formats.encode_simg(image)
+            yield url, page, kind, image, text
 
-        yield from _batched(items(), _ITEM_SCHEMA_PA)
-
-    return df.select("url", payload_col, "text").mapInArrow(run, ITEM_SCHEMA)
+    return _stage(df, ["url", payload_col, "text"], items, ITEM_SCHEMA, _ITEM_SCHEMA_PA)
 
 
-def recognize_items(
-    items: DataFrame,
-    recognizer: str = "stub",
-    rate_limit_qps: float | None = None,
-    max_retries: int = 3,
-    backoff_base_s: float = 0.05,
-    otsu: bool = False,
-    do_deskew: bool = False,
-    dpi: bool = False,
-) -> DataFrame:
+def recognize_items(items: DataFrame, **kernel) -> DataFrame:
     """The recognize half as its own ``mapInArrow``: page items (SIMG
     rasters) → recognized rows."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        recognize_item = make_recognize_item(
-            recognizer, rate_limit_qps, max_retries, backoff_base_s, otsu, do_deskew, dpi,
-        )
+    def decoded(rows: Iterator[tuple]) -> Iterator[tuple]:
+        for url, page, kind, image, text in rows:
+            if kind == "pdf" and image is not None:
+                image = formats.decode_simg(image)
+            yield url, page, kind, image, text
 
-        def decoded() -> Iterator[tuple]:
-            for url, page, kind, image, text in _rows(batches):
-                if kind == "pdf" and image is not None:
-                    image = formats.decode_simg(image)
-                yield url, page, kind, image, text
-
-        yield from _batched(map(recognize_item, decoded()), _RECOGNIZED_SCHEMA_PA)
-
-    return items.select("url", "page", "kind", "image", "text").mapInArrow(
-        run, RECOGNIZED_SCHEMA
-    )
+    return _recognize_stage(items, ["url", "page", "kind", "image", "text"], decoded, kernel)
 
 
 def assemble_docs(recognized: DataFrame) -> DataFrame:
@@ -252,17 +272,7 @@ def assemble_docs(recognized: DataFrame) -> DataFrame:
     )
 
 
-def process_items(
-    df: DataFrame,
-    payload_col: str = "html",
-    recognizer: str = "stub",
-    rate_limit_qps: float | None = None,
-    max_retries: int = 3,
-    backoff_base_s: float = 0.05,
-    otsu: bool = False,
-    do_deskew: bool = False,
-    dpi: bool = False,
-) -> DataFrame:
+def process_items(df: DataFrame, payload_col: str = "html", **kernel) -> DataFrame:
     """Single Python stage: both kernel halves, input row → recognized
     page items.
 
@@ -278,77 +288,40 @@ def process_items(
     (measured: 26.1s vs 7.5s passthrough at 32 cores on a 4.5 GB
     input), so record batches are consumed directly.
     """
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        recognize_item = make_recognize_item(
-            recognizer, rate_limit_qps, max_retries, backoff_base_s, otsu, do_deskew, dpi,
-        )
-        items = (item for row in _rows(batches) for item in explode(*row))
-        yield from _batched(map(recognize_item, items), _RECOGNIZED_SCHEMA_PA)
-
-    return df.select("url", payload_col, "text").mapInArrow(run, RECOGNIZED_SCHEMA)
+    return _recognize_stage(df, ["url", payload_col, "text"], _exploded, kernel)
 
 
-def extract_documents_fused(
-    documents: DataFrame,
-    recognizer: str = "stub",
-    rate_limit_qps: float | None = None,
-    max_retries: int = 3,
-    backoff_base_s: float = 0.05,
-    otsu: bool = False,
-    do_deskew: bool = False,
-    dpi: bool = False,
-) -> DataFrame:
+def extract_documents_fused(documents: DataFrame, **kernel) -> DataFrame:
     """The flagship's end-to-end plan with payload synthesis fused into
     the recognition stage: ``documents`` → one Python stage (per-doc
     SPDF payload build → both kernel halves) → ``groupBy(url)``
     assembly.
 
     Logically identical to ``documents_to_pages(df)`` piped through
-    :func:`process_items` — the SPDF payload is still encoded per
-    document and classified by magic bytes through the SAME kernel —
-    but the payload bytes stay inside one Python worker instead of
-    crossing JVM→Python→JVM→Python across an ArrowEvalPython +
-    MapInArrow pair (guide §4.1: you can't remove the boundary cost,
-    but you control how many times it is paid).  Byte-identical output
-    verified by ``exceptAll`` both ways vs the staged path at sf0.1/sf1.0
-    and by the DuckDB hash gate."""
-    from ..fanout import fanout
-    from ..sources.documents import chunk_text
+    :func:`process_items` — the same :func:`~..sources.documents.doc_rows`
+    projection, the SPDF payload still encoded per document and
+    classified by magic bytes through the SAME kernel — but the payload
+    bytes stay inside one Python worker instead of crossing
+    JVM→Python→JVM→Python across an ArrowEvalPython + MapInArrow pair
+    (guide §4.1: you can't remove the boundary cost, but you control
+    how many times it is paid).  Byte-identical output verified by
+    ``exceptAll`` both ways vs the staged path at sf0.1/sf1.0 and by
+    the DuckDB hash gate."""
+    from ..sources.documents import chunk_text, doc_rows
 
-    src = fanout(documents, "doc_id").select(
-        F.concat(F.lit("doc://"), F.col("source"), F.lit("/"),
-                 F.col("doc_id")).alias("url"),
-        F.col("text"),
-    )
+    def items(rows: Iterator[tuple]) -> Iterator[tuple]:
+        for url, text in rows:
+            yield from explode(url, formats.encode_spdf(chunk_text(text)), None)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        recognize_item = make_recognize_item(
-            recognizer, rate_limit_qps, max_retries, backoff_base_s, otsu, do_deskew, dpi,
-        )
-        items = (
-            item
-            for url, text in _rows(batches)
-            for item in explode(url, formats.encode_spdf(chunk_text(text)), None)
-        )
-        yield from _batched(map(recognize_item, items), _RECOGNIZED_SCHEMA_PA)
-
-    recognized = src.mapInArrow(run, RECOGNIZED_SCHEMA)
-    return assemble_docs(recognized)
+    return assemble_docs(_recognize_stage(doc_rows(documents), ["url", "text"], items, kernel))
 
 
 def extract_fused(
     df: DataFrame,
     payload_col: str = "html",
-    recognizer: str = "stub",
     salt_partitions: int | None = None,
-    rate_limit_qps: float | None = None,
-    otsu: bool = False,
-    do_deskew: bool = False,
-    dpi: bool = False,
     page_level_salt: bool = False,
-    max_retries: int = 3,
-    backoff_base_s: float = 0.05,
+    **kernel,
 ) -> DataFrame:
     """The scale-default extraction plan: 1 scan + ≤2 shuffles.
 
@@ -364,12 +337,9 @@ def extract_fused(
     per-(url, page) shuffle (explode → exchange → recognize) for
     pathological page-count skew — many-thousand-page documents whose
     *single-document* work would otherwise straggle one task.
+
+    ``kernel`` holds :func:`make_recognize_item`'s options.
     """
-    kernel = dict(
-        recognizer=recognizer, rate_limit_qps=rate_limit_qps,
-        max_retries=max_retries, backoff_base_s=backoff_base_s,
-        otsu=otsu, do_deskew=do_deskew, dpi=dpi,
-    )
     if page_level_salt:
         items = scan_items(df, payload_col)
         if salt_partitions:

@@ -2,59 +2,39 @@
 
 North rule targets **Iceberg** tables partitioned for pruning
 (SURVEY.md §4: ``days(warc_ts)`` + url bucket).  This sandbox has no
-Iceberg runtime jars, so the layout is expressed once here and bound
-to whichever catalog is available:
+Iceberg runtime jars, so the layout is hive-style partitioned parquet,
+``warc_day=YYYY-MM-DD/url_bucket=K/`` — the same partition spec as
+Iceberg's ``days(warc_ts), bucket(N, url)``.  Partition pruning works
+through Spark's file-source partition discovery — asserted in tests by
+checking the scan's partition filters.
 
-- With Iceberg on the classpath (real cluster), ``create_pages_table``
-  emits the DDL with the identical partition spec
-  (``days(warc_ts), bucket(N, url)``) and readers/writers go through
-  the catalog.
-- Without it, the same layout is hive-style partitioned parquet:
-  ``warc_day=YYYY-MM-DD/url_bucket=K/``.  Partition pruning then works
-  through Spark's file-source partition discovery — asserted in tests
-  by checking the scan's partition filters.
+The url-bucket rule, :func:`url_bucket`, is written once here: the
+checkpointed extraction (``plans/checkpoint.py``) cuts its work and
+commit units with the same rule.
 
-Either way the query-side contract is the same: filters on
-``warc_ts``-derived days and on url buckets prune I/O *before* any
-payload byte is read — the 100 TB version of the reference's
-filter-before-load discipline (``main_gui.py:276-278``).
+The query-side contract: filters on ``warc_ts``-derived days and on url
+buckets prune I/O *before* any payload byte is read — the 100 TB
+version of the reference's filter-before-load discipline
+(``main_gui.py:276-278``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-ICEBERG_DDL = """
-CREATE TABLE {table} (
-    url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING
-)
-USING iceberg
-PARTITIONED BY (days(warc_ts), bucket({n_buckets}, url))
-"""
 
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def _with_partition_cols(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "warc_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
-    ).withColumn(
-        "url_bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-    )
+def url_bucket(n_buckets: int) -> Column:
+    """Bucket ``pmod(xxhash64(url), n_buckets)`` of each row's url."""
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
 
 
 def write_pages_partitioned(df: DataFrame, path: str, n_buckets: int = 16,
                             mode: str = "overwrite") -> None:
-    """Parquet fallback with the Iceberg-equivalent partition layout."""
+    """Write ``df`` in the Iceberg-equivalent partition layout."""
     (
-        _with_partition_cols(df, n_buckets)
+        df.withColumn("warc_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd"))
+        .withColumn("url_bucket", url_bucket(n_buckets))
         .repartition("warc_day", "url_bucket")  # one writer wave per partition dir
         .write.mode(mode)
         .partitionBy("warc_day", "url_bucket")

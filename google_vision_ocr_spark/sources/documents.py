@@ -35,6 +35,19 @@ def _spdf_from_text_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: formats.encode_spdf(chunk_text(t)))
 
 
+def doc_rows(documents: DataFrame) -> DataFrame:
+    """``documents`` fanned out on ``doc_id``, plus each document's
+    ``url = doc://<source>/<doc_id>``: the projection both the staged
+    (:func:`documents_to_pages`) and the fused
+    (``plans/fused.extract_documents_fused``) flagship plans start from.
+    Selects nothing else, so frames of only ``doc_id``, ``source`` and
+    ``text`` qualify."""
+    from ..fanout import fanout
+
+    return fanout(documents, "doc_id").withColumn(
+        "url", F.concat(F.lit("doc://"), F.col("source"), F.lit("/"), F.col("doc_id")))
+
+
 def documents_to_pages(documents: DataFrame) -> DataFrame:
     """``documents`` → ``(url, warc_ts, html, text, lang)`` input table.
 
@@ -48,11 +61,8 @@ def documents_to_pages(documents: DataFrame) -> DataFrame:
     enough partitions (real-scale inputs), so this never *adds* a
     shuffle at 100 TB.
     """
-    from ..fanout import fanout
-
-    documents = fanout(documents, "doc_id")
-    return documents.select(
-        F.concat(F.lit("doc://"), F.col("source"), F.lit("/"), F.col("doc_id")).alias("url"),
+    return doc_rows(documents).select(
+        "url",
         (F.lit("2024-01-01 00:00:00").cast("timestamp")
          + F.make_interval(mins=F.col("doc_id").cast("int"))).alias("warc_ts"),
         _spdf_from_text_udf(F.col("text")).alias("html"),

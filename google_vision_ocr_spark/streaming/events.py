@@ -9,9 +9,10 @@ streaming twins of the batch operators, built on Structured Streaming:
   schema (streams cannot infer).
 - :func:`windowed_counts` — watermarked tumbling-window aggregation
   (late data dropped deterministically past the watermark).
-- :func:`streaming_extract_items` — the extraction pipeline's scan
-  stage over a stream of page rows: ``mapInPandas`` works unchanged on
-  streaming DataFrames, so the same fused stage-1 code serves both.
+- :func:`read_pages_stream` — a stream of page rows, which the
+  extraction kernel's scan stage (``plans/fused.scan_items``) takes
+  unchanged: its ``mapInArrow`` works on streaming DataFrames too, so
+  the same stage code serves batch and stream.
 - :func:`run_available_now` — drain whatever is present and stop
   (used by tests; semantically equals the batch run on the same files).
 """
@@ -123,14 +124,6 @@ def purchases_with_recent_views(
             "AND view_ts <= p_ts"
         ),
     ).select("event_id", "user_id", "p_ts", "view_ts", "view_value")
-
-
-def streaming_extract_items(pages_stream: DataFrame) -> DataFrame:
-    """The extraction kernel's explode half over a stream — identical
-    code path (mapInArrow is streaming-compatible)."""
-    from ..plans.fused import scan_items
-
-    return scan_items(pages_stream)
 
 
 def run_available_now(stream_df: DataFrame, checkpoint_dir: str,

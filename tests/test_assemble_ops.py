@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from google_vision_ocr_spark import oracle
 from google_vision_ocr_spark.operators.assemble import (
     chapter_islands,
-    route_illustrations,
     tag_kind,
 )
 
@@ -18,14 +17,6 @@ def _pages_df(spark, n=9):
 
 def _illust_df(spark, pages):
     return spark.createDataFrame([("doc", p) for p in pages], ["url", "page"])
-
-
-def test_route_illustrations_semi_anti(spark):
-    pages = _pages_df(spark)
-    illust = _illust_df(spark, [3, 4, 6])
-    ocr, img = route_illustrations(pages, illust)
-    assert {r["page"] for r in ocr.collect()} == {1, 2, 5, 7, 8, 9}
-    assert {r["page"] for r in img.collect()} == {3, 4, 6}
 
 
 def test_tag_kind_matches_oracle_ids(spark):

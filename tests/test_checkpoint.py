@@ -17,13 +17,13 @@ from pyspark.sql import functions as F
 from google_vision_ocr_spark import oracle
 from google_vision_ocr_spark.plans.checkpoint import (
     COUNTERS,
-    _bucket_col,
     batch_size,
     completed_buckets,
     read_checkpointed_output,
     run_checkpointed_extract,
 )
 from google_vision_ocr_spark.plans.fused import extract_fused
+from google_vision_ocr_spark.sources.catalog import url_bucket
 
 SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 
@@ -131,7 +131,7 @@ def test_reader_skips_uncommitted_buckets(spark, fixture_dir, tmp_path):
     written = {d for d in os.listdir(os.path.join(out, "data")) if d.startswith("part=")}
     assert {"part=3", "part=4", "part=5"} <= written  # on disk, uncommitted
 
-    committed_urls = {r["url"] for r in df.withColumn("b", _bucket_col(6))
+    committed_urls = {r["url"] for r in df.withColumn("b", url_bucket(6))
                       .filter(F.col("b") <= 2).select("url").distinct().collect()}
     got = [r["url"] for r in read_checkpointed_output(spark, out).select("url").collect()]
     assert sorted(got) == sorted(committed_urls)

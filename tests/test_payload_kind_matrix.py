@@ -80,10 +80,16 @@ def test_shapes_emit_one_row_per_url(outputs):
         assert set(outputs[shape]) == urls, shape
 
 
-def test_salted_shape_honours_retry_settings(spark):
-    """``max_retries`` / ``backoff_base_s`` reach the salted shape's
-    recognize half: with the flaky recognizer and no retries both shapes
-    report the same injected errors per url; one retry clears them all."""
+def test_kernel_options_reach_both_shapes(spark, outputs):
+    """``make_recognize_item``'s options reach the recognize half of
+    both shapes, and a misspelt one fails the plan build.
+
+    With the flaky recognizer and no retries both shapes report the
+    same injected errors per url; one retry clears them all.  Otsu
+    binarization reads as ``''`` on every PDF page of the stub
+    recognizer, framing kept; deskew and DPI normalization leave the
+    unsheared renders' text as is; image, HTML and text rows are
+    untouched by all three."""
     df = spark.createDataFrame([tuple(r.values()) for r in _rows()], _SCHEMA).coalesce(1)
 
     def errors(max_retries, **shape):
@@ -96,3 +102,19 @@ def test_salted_shape_honours_retry_settings(spark):
     assert errors(0, page_level_salt=True) == no_retry
     assert sum(no_retry.values()) > sum(expected.values())
     assert errors(1) == errors(1, page_level_salt=True) == expected
+
+    blank = "".join(oracle.frame_page(p, "") for p in (1, 2, 3))
+    for shape, kwargs in SHAPES.items():
+        got = {r["url"]: (r["kind"], r["text"], r["n_pages"], r["n_errors"])
+               for r in extract_fused(df, otsu=True, do_deskew=True, dpi=True,
+                                      **kwargs).collect()}
+        want = {url: (kind, text, n_pages, n_errors)
+                for url, (kind, text, _, n_pages, n_errors) in outputs[shape].items()}
+        assert want["u:spdf"][1] != blank
+        want["u:spdf"] = ("pdf", blank, 3, 0)
+        assert got == want, shape
+
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+    with pytest.raises(TypeError, match="deskew"):
+        extract_fused(df, deskew=True)
+    assert set(spark.sparkContext.statusTracker().getJobIdsForGroup()) == jobs

@@ -29,14 +29,12 @@ def test_filter_pushdown_reaches_parquet_scan(spark):
 
 
 def test_illustration_routing_uses_broadcast_join(spark):
-    from google_vision_ocr_spark.operators.assemble import route_illustrations
+    from google_vision_ocr_spark.operators.assemble import tag_kind
 
     pages = spark.createDataFrame([("u", p, "t") for p in range(10)],
                                   ["url", "page", "text"])
     illust = spark.createDataFrame([("u", 3)], ["url", "page"])
-    ocr, img = route_illustrations(pages, illust)
-    assert "BroadcastHashJoin" in _plan(ocr)
-    assert "BroadcastHashJoin" in _plan(img)
+    assert "BroadcastHashJoin" in _plan(tag_kind(pages, illust))
 
 
 def test_framed_concat_uses_partial_aggregation(spark):

@@ -8,7 +8,6 @@ from google_vision_ocr_spark.streaming.events import (
     read_event_stream,
     read_pages_stream,
     run_available_now,
-    streaming_extract_items,
     windowed_counts,
 )
 
@@ -43,7 +42,7 @@ def test_streaming_extraction_stage_matches_batch(spark, fixture_dir, tmp_path):
 
     stream = read_pages_stream(spark, os.path.dirname(fixture_dir["pages"]), max_files_per_trigger=1)
     got = run_available_now(
-        streaming_extract_items(stream), str(tmp_path / "ckpt2"), query_name="items"
+        scan_items(stream), str(tmp_path / "ckpt2"), query_name="items"
     )
     batch = scan_items(spark.read.parquet(fixture_dir["pages"]))
     g = {(r["url"], r["page"]): r["kind"] for r in got.collect()}
