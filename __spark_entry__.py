@@ -1725,7 +1725,8 @@ def _curate_documents(spark, sf_dir):
     from google_vision_ocr_spark.sources.documents import documents_to_pages
 
     pages = documents_to_pages(_t(spark, sf_dir, "documents"))
-    curated, _obs = curate(pages, min_quality=0.2, min_tokens=5)
+    curated, _obs = curate(pages, min_quality=0.2, min_tokens=5,
+                           max_dup_line_frac=None)
     # quality rides at its native 6-decimal quantization (the exact
     # half-up of functions/text.py, one spec in both engines, checked
     # by the quality_scores gate entry at every SF).  Re-rounding to 4

@@ -39,7 +39,7 @@ def curate(
     min_tokens: int = 5,
     allowed_langs: tuple[str, ...] | None = None,
     near_dup_jaccard: float = 0.8,
-    max_dup_line_frac: float | None = None,
+    max_dup_line_frac: float | None = 0.5,
     **extract_kwargs,
 ) -> tuple[DataFrame, Observation]:
     """Returns (curated corpus, observation with per-stage counters).
@@ -121,15 +121,3 @@ def curate(
     cache.release_cut(sigs)
     return curated, obs
 
-
-def curation_report(curated: DataFrame, obs: Observation) -> dict:
-    """Materialize the corpus stats + funnel counters in one action."""
-    stats = curated.agg(
-        F.count(F.lit(1)).alias("docs_out"),
-        F.sum("ws_tokens").alias("tokens_out"),
-        F.sum(F.octet_length("text")).alias("bytes_out"),
-    ).collect()[0]
-    funnel = {k: int(v) for k, v in obs.get.items()}
-    return {**funnel, "docs_out": int(stats["docs_out"]),
-            "tokens_out": int(stats["tokens_out"] or 0),
-            "bytes_out": int(stats["bytes_out"] or 0)}

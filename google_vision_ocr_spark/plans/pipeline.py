@@ -13,22 +13,19 @@ from the operators this package already ships:
 5. deterministic md5 train/val/test split;
 6. token-budget shard packing (two-pass distributed prefix sum) within
    each split;
-7. sharded ``*.json.gz`` corpus + a parquet shard manifest + a JSON
-   report with every funnel counter;
-8. optionally (``chunk_size``): fixed-size token-window training
-   sequences written as a parquet table alongside the corpus —
-   scan-side generate over the corpus frame, no extra shuffle.
+7. a parquet shard manifest, then the gzip JSONL corpus, each written
+   once; the JSON report takes its counters from ``df.observe`` on
+   those two writes and on curate's gates, so no job runs after the
+   corpus is written.
 
 Each stage is the scale-shape variant documented in ``docs/PLANS.md``;
 the pipeline adds no new shuffle beyond its stages' own.  The lineage
 is cut (``localCheckpoint(eager=True)``) at its four reuse points:
 curate's gate survivors, MinHash signatures and curated corpus (see
 :func:`..plans.curate.curate`), and the corpus after paragraph dedup
-and redaction, which the LM-training pass, the packing pass, the
-writes and the report all read.
+and redaction, which the LM-training pass and both writes read.
 Each Python stage therefore runs once per pipeline, and later actions
 plan from the cut instead of the whole lineage (``docs/SCALE.md``).
-The report counts the manifest and chunks from the files just written.
 """
 
 from __future__ import annotations
@@ -36,7 +33,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .. import cache
@@ -46,33 +43,22 @@ from ..operators.packing import shard_manifest
 from ..operators.sampling import deterministic_split
 from ..operators.replayable import tokens_sql
 from ..operators.scoring import unigram_logprob_scores
-from .curate import curate, curation_report
+from .curate import curate
 
 
 def run_corpus_pipeline(
     pages: DataFrame,
     out_dir: str,
-    min_quality: float = 0.3,
-    min_tokens: int = 5,
-    allowed_langs: tuple[str, ...] | None = None,
-    max_dup_line_frac: float | None = 0.5,
     lm_vocab: int = 1000,
     max_avg_neg_logprob: float | None = None,
     shard_token_budget: int = 2000,
-    chunk_size: int | None = None,
-    chunk_stride: int | None = None,
-    **curate_kwargs,
+    **curate_options,
 ) -> dict:
     """Run the full pipeline; returns the report dict (also written to
-    ``out_dir/report.json``)."""
-    curated, obs = curate(
-        pages,
-        min_quality=min_quality,
-        min_tokens=min_tokens,
-        allowed_langs=allowed_langs,
-        max_dup_line_frac=max_dup_line_frac,
-        **curate_kwargs,
-    )
+    ``out_dir/report.json``).  ``curate_options`` go to
+    :func:`..plans.curate.curate`, whose signature declares the gate
+    options and their defaults."""
+    curated, funnel = curate(pages, **curate_options)
     # global paragraph dedup on the curated text, then redact
     paras = drop_repeated_paragraphs(
         curated.select(F.col("url").alias("doc_id"), "text"),
@@ -96,43 +82,32 @@ def run_corpus_pipeline(
             F.coalesce(F.col("avg_neg_logprob"), F.lit(float("inf")))
             <= max_avg_neg_logprob
         )
-    corpus = deterministic_split(corpus, id_col="url")
-
-    tokens = corpus.select(
-        "url", "split",
-        F.size(F.expr(tokens_sql("text"))).cast("bigint")
-        .alias("ws_tokens_final"),
+    # the token count of the text as written, read by the manifest and
+    # the report
+    corpus = deterministic_split(corpus, id_col="url").withColumn(
+        "tokens", F.size(F.expr(tokens_sql("text"))).cast("bigint")
     )
+
+    shards, written = Observation("manifest"), Observation("corpus")
     manifest = shard_manifest(
-        tokens, budget=shard_token_budget, part_col="split",
-        id_col="url", tokens_col="ws_tokens_final",
+        corpus.select("url", "split", "tokens"), budget=shard_token_budget,
+        part_col="split", id_col="url", tokens_col="tokens",
     )
-    manifest_dir = os.path.join(out_dir, "manifest")
-    manifest.write.mode("overwrite").parquet(manifest_dir)
-
-    from ..sources.jsonl import write_jsonl_corpus
-
-    n_written = write_jsonl_corpus(
-        corpus.select("url", "lang_guess", "quality", "avg_neg_logprob",
-                      "split", "text"),
-        os.path.join(out_dir, "corpus"),
+    (manifest.observe(shards, F.count(F.lit(1)).alias("n_shards"))
+     .write.mode("overwrite").parquet(os.path.join(out_dir, "manifest")))
+    (corpus.observe(
+        written,
+        F.count(F.lit(1)).alias("docs_out"),
+        F.sum("tokens").alias("tokens_out"),
+        F.sum(F.octet_length("text")).alias("bytes_out"),
     )
-    report = curation_report(corpus, obs)
-    report["docs_written"] = n_written
-    # count what was written: recounting the frames would re-run them
-    spark = pages.sparkSession
-    report["n_shards"] = spark.read.schema(manifest.schema).parquet(manifest_dir).count()
-    if chunk_size is not None:
-        from ..operators.chunking import token_chunks
+     .select("url", "lang_guess", "quality", "avg_neg_logprob", "split", "text")
+     .write.mode("overwrite").option("compression", "gzip")
+     .json(os.path.join(out_dir, "corpus")))
 
-        chunks = token_chunks(
-            corpus.select(F.col("url"), "split", "text"),
-            id_col="url", size=chunk_size, stride=chunk_stride,
-            passthrough_cols=("split",),
-        )
-        chunks_dir = os.path.join(out_dir, "chunks")
-        chunks.write.mode("overwrite").partitionBy("split").parquet(chunks_dir)
-        report["n_chunks"] = spark.read.schema(chunks.schema).parquet(chunks_dir).count()
+    report = {k: int(v or 0) for obs in (funnel, shards, written)
+              for k, v in obs.get.items()}
+    report["docs_written"] = report["docs_out"]
     with open(os.path.join(out_dir, "report.json"), "w") as f:
         json.dump(report, f, indent=2, sort_keys=True)
     # every output is materialized by now; free the cut and the tracked

@@ -1,27 +1,19 @@
-"""JSONL corpus sink — the lingua franca of LLM training data.
+"""JSONL corpus source — the lingua franca of LLM training data.
 
-Writes a curated corpus as sharded ``*.json.gz`` (one JSON object per
-line), the format downstream tokenizer/training jobs consume.  Thin on
-purpose: Spark's JSON datasource already does distributed sharded
-writes with compression; this wrapper pins the conventions that matter
-at scale —
-
-- **shard sizing** via ``records_per_shard`` → ``repartition(n)``
-  computed from a count (a corpus written as 3 giant or 90k tiny files
-  is equally painful to consume);
-- **stable column subset + order** (schema drift in JSONL corpora is a
-  silent downstream breaker);
-- gzip by default (splittability doesn't matter for write-once shards
-  consumed whole).
+Reads a third-party JSONL drop with an explicit schema and splits it
+into parsed rows and quarantined malformed lines.  Writing needs no
+wrapper: the corpus pipeline (``plans/pipeline.py``) writes its gzip
+JSONL with Spark's JSON datasource in one pass, a fixed column subset
+and order, and lets AQE size the files.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from .. import cache
 
 
 def read_jsonl_corpus(
@@ -54,34 +46,11 @@ def read_jsonl_corpus(
         .json(path)
     )
     # Spark requires a materialization barrier (cache) before a
-    # corrupt-record-only projection; checkpoint-free local cut
-    df = df.cache()
+    # corrupt-record-only projection; cache.release_all() frees it
+    df = cache.track(df.cache())
     good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
     bad = df.filter(F.col(corrupt_col).isNotNull()).select(
         F.col(corrupt_col).alias("raw_line")
     )
     return good, bad
 
-
-def write_jsonl_corpus(
-    df: DataFrame,
-    path: str,
-    columns: list[str] | None = None,
-    records_per_shard: int | None = None,
-    compression: str = "gzip",
-    mode: str = "overwrite",
-) -> int:
-    """Write ``df`` as sharded JSONL; returns the row count written.
-
-    The frame is persisted around the count + write so an expensive
-    upstream plan (a curate output, say) executes once, not twice."""
-    base = (df.select(*columns) if columns else df).persist()
-    try:
-        n = base.count()
-        out = base
-        if records_per_shard:
-            out = base.repartition(max(1, math.ceil(n / records_per_shard)))
-        out.write.mode(mode).option("compression", compression).json(path)
-    finally:
-        base.unpersist()
-    return n

@@ -11,6 +11,10 @@ Stages: extract → quality/lang/repetition gates → exact + MinHash near
 dedup → global paragraph dedup → PII redaction → unigram-LM scoring →
 deterministic split → token-budget shard packing → sharded JSONL +
 manifest + JSON report.  See ``plans/pipeline.py``.
+
+Each flag maps to one keyword of ``run_corpus_pipeline`` and is passed
+only when given, so the defaults are the library's: those of
+``run_corpus_pipeline`` and, for the gates, of ``plans.curate.curate``.
 """
 
 from __future__ import annotations
@@ -22,18 +26,22 @@ from pyspark.sql import SparkSession
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(argument_default=argparse.SUPPRESS)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--min-quality", type=float, default=0.3)
-    ap.add_argument("--min-tokens", type=int, default=5)
-    ap.add_argument("--langs", nargs="*", default=None)
-    ap.add_argument("--max-dup-line-frac", type=float, default=0.5)
-    ap.add_argument("--lm-vocab", type=int, default=1000)
-    ap.add_argument("--max-avg-neg-logprob", type=float, default=None)
-    ap.add_argument("--budget", type=int, default=100000,
+    ap.add_argument("--min-quality", dest="min_quality", type=float)
+    ap.add_argument("--min-tokens", dest="min_tokens", type=int)
+    ap.add_argument("--langs", dest="allowed_langs", nargs="*")
+    ap.add_argument("--max-dup-line-frac", dest="max_dup_line_frac", type=float)
+    ap.add_argument("--lm-vocab", dest="lm_vocab", type=int)
+    ap.add_argument("--max-avg-neg-logprob", dest="max_avg_neg_logprob",
+                    type=float)
+    ap.add_argument("--budget", dest="shard_token_budget", type=int,
                     help="tokens per training shard")
-    args = ap.parse_args()
+    options = vars(ap.parse_args())
+    input_dir, output_dir = options.pop("input"), options.pop("output")
+    if "allowed_langs" in options:
+        options["allowed_langs"] = tuple(options["allowed_langs"]) or None
 
     spark = (
         SparkSession.builder.appName("curate-corpus")
@@ -43,18 +51,8 @@ def main() -> None:
     )
     from google_vision_ocr_spark.plans.pipeline import run_corpus_pipeline
 
-    pages = spark.read.parquet(args.input)
-    report = run_corpus_pipeline(
-        pages,
-        args.output,
-        min_quality=args.min_quality,
-        min_tokens=args.min_tokens,
-        allowed_langs=tuple(args.langs) if args.langs else None,
-        max_dup_line_frac=args.max_dup_line_frac,
-        lm_vocab=args.lm_vocab,
-        max_avg_neg_logprob=args.max_avg_neg_logprob,
-        shard_token_budget=args.budget,
-    )
+    report = run_corpus_pipeline(spark.read.parquet(input_dir), output_dir,
+                                 **options)
     print(json.dumps(report, sort_keys=True))
 
 

@@ -9,8 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-PIPELINE_KWARGS = dict(min_quality=0.1, min_tokens=2, shard_token_budget=500,
-                       chunk_size=32, chunk_stride=24)
+PIPELINE_KWARGS = dict(min_quality=0.1, min_tokens=2, shard_token_budget=500)
 PYTHON_NODES = {"MapInArrow", "ArrowEvalPython", "BatchEvalPython"}
 
 
@@ -21,7 +20,8 @@ def _last_execution_id(store) -> int:
 
 def _plan_nodes_since(spark, store, after_id: int) -> dict[int, set[str]]:
     """Plan node names of every SQL execution with an id above
-    ``after_id``, read from the session's SQL status store."""
+    ``after_id``, read from the session's SQL status store (so the
+    listener has caught up for :func:`_plan_text` too)."""
     # the status store is filled by an asynchronous listener
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     rows = store.executionsList()
@@ -34,11 +34,15 @@ def _plan_nodes_since(spark, store, after_id: int) -> dict[int, set[str]]:
     return out
 
 
-def _run(spark, pages, out: str) -> dict:
+def _plan_text(store, execution_id: int) -> str:
+    return store.execution(execution_id).get().physicalPlanDescription()
+
+
+def _run(spark, pages, out: str, **options) -> dict:
     from google_vision_ocr_spark.plans.pipeline import run_corpus_pipeline
 
     os.makedirs(out, exist_ok=True)
-    return run_corpus_pipeline(pages, out, **PIPELINE_KWARGS)
+    return run_corpus_pipeline(pages, out, **{**PIPELINE_KWARGS, **options})
 
 
 def _corpus_lines(out: str) -> list[str]:
@@ -52,16 +56,17 @@ def _corpus_lines(out: str) -> list[str]:
 @pytest.fixture(scope="module")
 def pipeline_run(spark, fixture_dir, tmp_path_factory):
     """One pipeline run on the fixture: (out dir, report, plan node
-    names of each SQL execution it ran)."""
+    names of each SQL execution it ran, plan text of the last one)."""
     store = spark._jsparkSession.sharedState().statusStore()
     mark = _last_execution_id(store)
     out = str(tmp_path_factory.mktemp("pipeline") / "corpus_out")
     report = _run(spark, spark.read.parquet(fixture_dir["pages"]), out)
-    return out, report, _plan_nodes_since(spark, store, mark)
+    executions = _plan_nodes_since(spark, store, mark)
+    return out, report, executions, _plan_text(store, max(executions))
 
 
 def test_corpus_pipeline_end_to_end(spark, pipeline_run):
-    out, report, _ = pipeline_run
+    out, report, *_ = pipeline_run
     # report sanity: the funnel only narrows
     assert report["docs_in"] >= report["pass_quality"] >= report["pass_lang"]
     assert report["docs_out"] == report["docs_written"] > 0
@@ -85,15 +90,42 @@ def test_corpus_pipeline_end_to_end(spark, pipeline_run):
     assert worst < 500 + biggest_doc
     assert man.count() == report["n_shards"]
 
-    # training-sequence chunks: split-partitioned parquet, windows of
-    # at most 32 tokens, every written doc represented
-    chunks = spark.read.parquet(os.path.join(out, "chunks"))
-    assert chunks.count() == report["n_chunks"] > 0
-    assert chunks.agg(F.max("n_tokens")).collect()[0][0] <= 32
-    assert chunks.select("url").distinct().count() == report["docs_written"]
-    assert {r.split for r in chunks.select("split").distinct().collect()} <= {
-        "train", "val", "test"
-    }
+
+def test_nothing_runs_after_the_corpus_write(pipeline_run):
+    """The report's counters come from the writes themselves: the run
+    ends with the JSONL corpus write, which reads no persisted frame."""
+    out, _, executions, last_plan = pipeline_run
+    last = executions[max(executions)]
+    assert "Execute InsertIntoHadoopFsRelationCommand" in last, last
+    assert f"{os.path.join(out, 'corpus')}, false, JSON" in last_plan, last_plan[:2000]
+    assert "InMemoryTableScan" not in last and "InMemoryTableScan" not in last_plan
+
+
+def test_tokens_out_counts_the_written_text(spark, tmp_path):
+    """``tokens_out`` counts the text after paragraph dedup, as the
+    manifest does: two documents sharing one 11-token paragraph keep
+    it once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shared = "this shared paragraph has exactly eleven tokens in every single document"
+    texts = [
+        f"alpha bravo charlie delta echo foxtrot golf hotel\n\n{shared}",
+        f"{shared}\n\nindia juliet kilo lima mike november oscar papa quebec",
+    ]
+    pq.write_table(pa.table({
+        "url": pa.array(["u/a", "u/b"]),
+        "warc_ts": pa.array([None, None], pa.timestamp("us", tz="UTC")),
+        "html": pa.array([None, None], pa.binary()),
+        "text": pa.array(texts),
+        "lang": pa.array(["en", "en"]),
+    }), str(tmp_path / "pages.parquet"))
+    out = str(tmp_path / "corpus_out")
+    report = _run(spark, spark.read.parquet(str(tmp_path / "pages.parquet")), out,
+                  min_quality=0.0, min_tokens=1)
+    man = spark.read.parquet(os.path.join(out, "manifest"))
+    assert report["docs_written"] == 2
+    assert report["tokens_out"] == man.agg(F.sum("sum_tokens")).collect()[0][0]
 
 
 def test_each_python_stage_runs_once(pipeline_run):
@@ -101,7 +133,7 @@ def test_each_python_stage_runs_once(pipeline_run):
     and it runs in exactly one SQL execution: no Python runs after
     extraction, and later actions start from the lineage cuts instead
     of re-running or re-planning it."""
-    _, _, executions = pipeline_run
+    _, _, executions, _ = pipeline_run
     extraction = [e for e, names in executions.items() if "MapInArrow" in names]
     python = {e: names & PYTHON_NODES for e, names in executions.items()
               if names & PYTHON_NODES}
@@ -132,7 +164,7 @@ def test_text_metrics_plans_have_no_python(spark, tmp_path):
 
 
 def test_pipeline_partitioning_invariant(spark, fixture_dir, pipeline_run, tmp_path):
-    out, report, _ = pipeline_run
+    out, report, *_ = pipeline_run
     pages = spark.read.parquet(fixture_dir["pages"]).repartition(5)
     out5 = str(tmp_path / "corpus_out")
     assert _run(spark, pages, out5) == report

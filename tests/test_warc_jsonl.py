@@ -1,8 +1,5 @@
-"""WARC source (Common-Crawl container) + JSONL corpus sink."""
+"""WARC source (Common-Crawl container) + JSONL corpus source."""
 
-import glob
-import gzip
-import json
 from datetime import datetime, timezone
 
 import pytest
@@ -70,30 +67,6 @@ def test_read_warc_to_extraction_byte_identity(spark, tmp_path):
         assert out[exp.url]["kind"] == exp.kind
 
 
-def test_write_jsonl_corpus(spark, tmp_path):
-    from google_vision_ocr_spark.sources.jsonl import write_jsonl_corpus
-
-    df = spark.createDataFrame(
-        [(f"u{i}", f"text {i}", "en") for i in range(100)], ["url", "text", "lang"]
-    )
-    dest = str(tmp_path / "corpus")
-    n = write_jsonl_corpus(df, dest, columns=["url", "text"], records_per_shard=25)
-    assert n == 100
-    shards = sorted(glob.glob(f"{dest}/part-*.json.gz"))
-    assert len(shards) == 4
-    seen = []
-    for s in shards:
-        with gzip.open(s, "rt") as f:
-            for line in f:
-                obj = json.loads(line)
-                assert set(obj) == {"url", "text"}
-                seen.append(obj["url"])
-    assert sorted(seen) == sorted(f"u{i}" for i in range(100))
-    # round-trips through spark.read.json
-    back = spark.read.json(dest)
-    assert back.count() == 100 and set(back.columns) == {"url", "text"}
-
-
 def test_warc_malformed_content_length_raises_descriptive():
     import pytest
     from google_vision_ocr_spark.sources.warc import iter_warc_records
@@ -119,6 +92,7 @@ def test_jsonl_read_quarantines_corrupt_lines(spark, tmp_path):
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from google_vision_ocr_spark import cache
     from google_vision_ocr_spark.sources.jsonl import read_jsonl_corpus
 
     p = tmp_path / "drop"
@@ -136,3 +110,7 @@ def test_jsonl_read_quarantines_corrupt_lines(spark, tmp_path):
     assert sorted(r.doc_id for r in good.collect()) == [0, 1, 2, 3, 4]
     bad_lines = sorted(r.raw_line for r in bad.collect())
     assert bad_lines == ["not json at all", '{"doc_id": 99, "text": "unterminated']
+    # the read's cache is tracked: releasing the session's tracked
+    # frames leaves nothing cached
+    cache.release_all()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
