@@ -45,9 +45,11 @@ def curate(
     """Returns (curated corpus, observation with per-stage counters).
 
     The observation resolves after the first action on the returned
-    DataFrame; counters: docs_extracted is measured on the corpus that
-    survived all gates plus per-gate booleans summed (survivors at each
-    gate), so one pass yields the whole funnel.
+    DataFrame.  It is taken once, on the extraction output before any
+    gate: ``docs_in`` counts every extracted document, and
+    ``pass_extract`` (no recognition error), ``pass_repetition``,
+    ``pass_quality`` and ``pass_lang`` count the documents that pass
+    that gate and all before it, so one pass yields the whole funnel.
 
     The lineage is cut three times with ``localCheckpoint(eager=True)``:
     once after the gates, where the survivors feed both sides of the
@@ -61,7 +63,6 @@ def curate(
     instead of recomputing (``docs/SCALE.md``).
     """
     docs = extract_fused(pages, **extract_kwargs)
-    docs = docs.filter(F.col("n_errors") == 0)
     # metrics are about the CONTENT: drop the page-frame headers the
     # byte-identity contract mandates in pdf outputs
     docs = with_text_metrics(
@@ -70,32 +71,32 @@ def curate(
         ),
         "__mt",
     ).drop("__mt")
+    repetition_ok = F.lit(True)
     if max_dup_line_frac is not None:
         # Gopher repetition gate: zero-shuffle, rides the same scan
         from ..operators.quality_rules import repetition_metrics
 
-        docs = (
-            repetition_metrics(docs)
-            .filter(F.col("dup_line_frac") <= max_dup_line_frac)
-            .drop("n_lines", "dup_line_frac", "dup_line_char_frac")
-        )
+        docs = repetition_metrics(docs).drop("n_lines", "dup_line_char_frac")
+        repetition_ok = F.col("dup_line_frac") <= max_dup_line_frac
+    gates = {
+        "pass_extract": F.col("n_errors") == 0,
+        "pass_repetition": repetition_ok,
+        "pass_quality": (F.col("quality") >= min_quality) & (F.col("ws_tokens") >= min_tokens),
+        "pass_lang": F.col("lang_guess").isin(*allowed_langs) if allowed_langs else F.lit(True),
+    }
 
-    q_ok = (F.col("quality") >= min_quality) & (F.col("ws_tokens") >= min_tokens)
-    lang_ok = (
-        F.col("lang_guess").isin(*allowed_langs) if allowed_langs else F.lit(True)
-    )
-    gated = docs.withColumn("__q_ok", q_ok).withColumn("__lang_ok", lang_ok)
-
+    # one observation on the extraction output, before any gate: each
+    # counter is the number of documents that passed it and every gate
+    # before it, so the funnel never widens
     obs = Observation("curation-funnel")
-    gated = gated.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum(F.col("__q_ok").cast("int")).alias("pass_quality"),
-        F.sum((F.col("__q_ok") & F.col("__lang_ok")).cast("int")).alias("pass_lang"),
-    )
+    passed, counters = F.lit(True), [F.count(F.lit(1)).alias("docs_in")]
+    for name, ok in gates.items():
+        passed = passed & ok
+        counters.append(F.sum(passed.cast("int")).alias(name))
+    gated = docs.withColumn("__kept", passed).observe(obs, *counters)
     kept = (
-        gated.filter(F.col("__q_ok") & F.col("__lang_ok"))
-        .drop("__q_ok", "__lang_ok")
+        gated.filter(F.col("__kept"))
+        .drop("__kept", "dup_line_frac")
         .localCheckpoint(eager=True)
     )
 

@@ -1,5 +1,5 @@
-"""Scale-optimal extraction plan: ONE scan + at most TWO shuffles, over
-ONE per-row kernel.
+"""Scale-optimal extraction plan: ONE scan, over ONE per-row kernel,
+and no shuffle unless page-level salting asks for one.
 
 The kernel has two halves:
 
@@ -19,13 +19,15 @@ The kernel has two halves:
   there, not in a Spark task.
 
 Every Python stage is one ``mapInArrow`` built by ``_stage``; the
-recognizing ones go through ``_recognize_stage``, which maps a task's
-page items through one per-task ``make_recognize_item(**kernel)``.
+recognizing ones go through ``_recognize_stage``, which maps each input
+row's page items through one per-task ``make_recognize_item(**kernel)``.
 
-Default shape (``extract_fused``): ``process_items`` — ONE
-``mapInArrow`` stage composing both halves, the raster handed across
-in-process — followed by the ``groupBy(url)`` assembly: 1 scan,
-1 shuffle (of extracted text only).
+Default shape (``extract_fused``): ONE ``mapInArrow`` stage composing
+both halves, the raster handed across in-process, that folds each input
+row's recognized pages into one document row ``(url, kind, ps,
+n_errors)`` — the reference extracts a PDF whole in one worker and puts
+its pages back in order (``ocr_service.py:109-123``).  1 scan, no
+shuffle, no aggregate.
 
 Staged shape (``page_level_salt=True``) for pathological page-count
 skew: the same two halves split around a ``(url, page)`` exchange.
@@ -36,11 +38,13 @@ skew: the same two halves split around a ``(url, page)`` exchange.
    pages across the cluster (BASELINE.json north_star), at the cost of
    shuffling raster bytes.
 3. ``recognize_items`` — ``mapInArrow`` over the recognize half.
+4. ``groupBy(url)`` — gathers each document's pages back into the same
+   ``(url, kind, ps, n_errors)`` row.
 
-Both shapes end in ``assemble_docs`` — one ``groupBy(url)``: PDF docs
-get the ordered framed concat + byte spans (``ocr_service.py:116,
-119-122``), single-item kinds pass their text through.  Both are
-byte-identical to the oracle for every payload kind (asserted in tests).
+Both shapes end in ``finish_docs``, one select: PDF docs get the ordered
+framed concat + byte spans (``ocr_service.py:116, 119-122``),
+single-item kinds pass their text through.  Both are byte-identical to
+the oracle for every payload kind (asserted in tests).
 """
 
 from __future__ import annotations
@@ -68,6 +72,12 @@ _ITEM_SCHEMA_PA = pa.schema([
 _RECOGNIZED_SCHEMA_PA = pa.schema([
     ("url", pa.string()), ("page", pa.int32()), ("kind", pa.string()),
     ("text", pa.string()), ("ocr_error", pa.bool_()),
+])
+DOC_SCHEMA = "url string, kind string, ps array<struct<page:int,text:string>>, n_errors int"
+_DOC_SCHEMA_PA = pa.schema([
+    ("url", pa.string()), ("kind", pa.string()),
+    ("ps", pa.list_(pa.struct([("page", pa.int32()), ("text", pa.string())]))),
+    ("n_errors", pa.int32()),
 ])
 _CHUNK_ROWS = 256
 # keep-format rule (ocr_service.py:177): PNG/JPEG/BMP/TIFF pass through
@@ -193,22 +203,41 @@ def _stage(df: DataFrame, cols: list[str], rows_out: Callable[[Iterator[tuple]],
 
 
 def _recognize_stage(df: DataFrame, cols: list[str],
-                     items: Callable[[Iterator[tuple]], Iterable[tuple]],
-                     kernel: dict) -> DataFrame:
-    """A :func:`_stage` whose task maps its page items, ``items(rows)``,
-    through one per-task ``make_recognize_item(**kernel)``.  The options
-    are bound to that signature here, before any task runs, so a
-    misspelt one raises ``TypeError`` while the plan is built."""
+                     items_of: Callable[..., Iterable[tuple]],
+                     kernel: dict, per_document: bool = False) -> DataFrame:
+    """A :func:`_stage` whose task maps each row's page items,
+    ``items_of(*row)``, through one per-task
+    ``make_recognize_item(**kernel)``: one recognized row per page item
+    or, ``per_document``, one :func:`_document` row per input row.  The
+    options are bound to that signature here, before any task runs, so
+    a misspelt one raises ``TypeError`` while the plan is built."""
     inspect.signature(make_recognize_item).bind(**kernel)
 
     def rows_out(rows: Iterator[tuple]) -> Iterator[tuple]:
-        return map(make_recognize_item(**kernel), items(rows))
+        recognize_item = make_recognize_item(**kernel)
+        for row in rows:
+            recognized = map(recognize_item, items_of(*row))
+            if per_document:
+                yield _document(recognized)
+            else:
+                yield from recognized
 
+    if per_document:
+        return _stage(df, cols, rows_out, DOC_SCHEMA, _DOC_SCHEMA_PA)
     return _stage(df, cols, rows_out, RECOGNIZED_SCHEMA, _RECOGNIZED_SCHEMA_PA)
 
 
-def _exploded(rows: Iterator[tuple]) -> Iterator[tuple]:
-    return (item for row in rows for item in explode(*row))
+def _document(recognized: Iterator[tuple]) -> tuple:
+    """Fold one input row's recognized page items into its document row
+    ``(url, kind, ps, n_errors)``, the row :func:`gather_docs` builds in
+    the salted shape.  :func:`explode` yields a row's pages in order and
+    renders each raster only when it is recognized, so only the page
+    texts are held."""
+    ps, n_errors = [], 0
+    for url, page, kind, text, ocr_error in recognized:
+        ps.append((page, text))
+        n_errors += ocr_error
+    return url, kind, ps, n_errors
 
 
 # --- plans -------------------------------------------------------------------
@@ -219,10 +248,11 @@ def scan_items(df: DataFrame, payload_col: str = "html") -> DataFrame:
     items, PDF rasters serialized as SIMG for the exchange that follows."""
 
     def items(rows: Iterator[tuple]) -> Iterator[tuple]:
-        for url, page, kind, image, text in _exploded(rows):
-            if kind == "pdf" and image is not None:
-                image = formats.encode_simg(image)
-            yield url, page, kind, image, text
+        for row in rows:
+            for url, page, kind, image, text in explode(*row):
+                if kind == "pdf" and image is not None:
+                    image = formats.encode_simg(image)
+                yield url, page, kind, image, text
 
     return _stage(df, ["url", payload_col, "text"], items, ITEM_SCHEMA, _ITEM_SCHEMA_PA)
 
@@ -231,29 +261,32 @@ def recognize_items(items: DataFrame, **kernel) -> DataFrame:
     """The recognize half as its own ``mapInArrow``: page items (SIMG
     rasters) → recognized rows."""
 
-    def decoded(rows: Iterator[tuple]) -> Iterator[tuple]:
-        for url, page, kind, image, text in rows:
-            if kind == "pdf" and image is not None:
-                image = formats.decode_simg(image)
-            yield url, page, kind, image, text
+    def decoded(url, page, kind, image, text) -> tuple[tuple]:
+        if kind == "pdf" and image is not None:
+            image = formats.decode_simg(image)
+        return ((url, page, kind, image, text),)
 
     return _recognize_stage(items, ["url", "page", "kind", "image", "text"], decoded, kernel)
 
 
-def assemble_docs(recognized: DataFrame) -> DataFrame:
-    """One groupBy(url): per-kind finishing to the output contract."""
-    grouped = recognized.groupBy("url").agg(
+def gather_docs(recognized: DataFrame) -> DataFrame:
+    """The salted shape's one ``groupBy(url)``: recognized page items,
+    spread across tasks, → document rows ``(url, kind, ps, n_errors)``."""
+    return recognized.groupBy("url").agg(
         # max() not first(): every url emits one kind by construction, but
         # max is deterministic under shuffle order if that ever changes
         F.max("kind").alias("kind"),
-        F.array_sort(
-            F.collect_list(F.struct(F.col("page").alias("page"), F.col("text").alias("text")))
-        ).alias("ps"),
-        F.count(F.lit(1)).alias("n_rows"),
+        F.array_sort(F.collect_list(F.struct("page", "text"))).alias("ps"),
         F.sum(F.col("ocr_error").cast("int")).alias("n_errors"),
     )
+
+
+def finish_docs(docs: DataFrame) -> DataFrame:
+    """Both shapes' one finishing select: document rows ``(url, kind,
+    ps, n_errors)`` → the output contract ``(url, kind, text, spans,
+    n_pages, n_errors)``."""
     # frame only pdf docs; others reuse their single row's text as-is
-    with_framed = grouped.withColumn(
+    with_framed = docs.withColumn(
         "framed",
         F.when(F.col("kind") == "pdf", F.expr(FRAMED_FROM_PS))
         .otherwise(F.expr("cast(array() as array<string>)")),
@@ -265,7 +298,7 @@ def assemble_docs(recognized: DataFrame) -> DataFrame:
         .otherwise(F.element_at(F.col("ps"), 1)["text"]).alias("text"),
         F.when(F.col("kind") == "pdf", F.expr(SPANS_FROM_FRAMED))
         .otherwise(F.expr(f"cast(array() as {SPANS_TYPE})")).alias("spans"),
-        F.when(F.col("kind") == "pdf", F.col("n_rows"))
+        F.when(F.col("kind") == "pdf", F.size("ps"))
         .when(F.col("kind").isin("image", "html"), F.lit(1))
         .otherwise(F.lit(0)).cast("int").alias("n_pages"),
         F.col("n_errors").cast("int").alias("n_errors"),
@@ -274,7 +307,8 @@ def assemble_docs(recognized: DataFrame) -> DataFrame:
 
 def process_items(df: DataFrame, payload_col: str = "html", **kernel) -> DataFrame:
     """Single Python stage: both kernel halves, input row → recognized
-    page items.
+    page items, one row per page.  The default shape's stage is the
+    same, folding each input row's items into its document row.
 
     Composing the halves in one stage keeps the raster intermediate
     (the largest byte stream in the job — decompressed page images)
@@ -288,32 +322,32 @@ def process_items(df: DataFrame, payload_col: str = "html", **kernel) -> DataFra
     (measured: 26.1s vs 7.5s passthrough at 32 cores on a 4.5 GB
     input), so record batches are consumed directly.
     """
-    return _recognize_stage(df, ["url", payload_col, "text"], _exploded, kernel)
+    return _recognize_stage(df, ["url", payload_col, "text"], explode, kernel)
 
 
 def extract_documents_fused(documents: DataFrame, **kernel) -> DataFrame:
     """The flagship's end-to-end plan with payload synthesis fused into
     the recognition stage: ``documents`` → one Python stage (per-doc
-    SPDF payload build → both kernel halves) → ``groupBy(url)``
-    assembly.
+    SPDF payload build → both kernel halves → one document row per
+    document) → the finishing select.  No shuffle after the stage.
 
     Logically identical to ``documents_to_pages(df)`` piped through
-    :func:`process_items` — the same :func:`~..sources.documents.doc_rows`
+    :func:`extract_fused` — the same :func:`~..sources.documents.doc_rows`
     projection, the SPDF payload still encoded per document and
     classified by magic bytes through the SAME kernel — but the payload
     bytes stay inside one Python worker instead of crossing
     JVM→Python→JVM→Python across an ArrowEvalPython + MapInArrow pair
     (guide §4.1: you can't remove the boundary cost, but you control
     how many times it is paid).  Byte-identical output verified by
-    ``exceptAll`` both ways vs the staged path at sf0.1/sf1.0 and by
-    the DuckDB hash gate."""
+    ``exceptAll`` both ways vs the staged path and by the DuckDB hash
+    gate."""
     from ..sources.documents import chunk_text, doc_rows
 
-    def items(rows: Iterator[tuple]) -> Iterator[tuple]:
-        for url, text in rows:
-            yield from explode(url, formats.encode_spdf(chunk_text(text)), None)
+    def items_of(url: str, text: str) -> Iterator[tuple]:
+        return explode(url, formats.encode_spdf(chunk_text(text)), None)
 
-    return assemble_docs(_recognize_stage(doc_rows(documents), ["url", "text"], items, kernel))
+    return finish_docs(_recognize_stage(doc_rows(documents), ["url", "text"], items_of,
+                                        kernel, per_document=True))
 
 
 def extract_fused(
@@ -323,20 +357,27 @@ def extract_fused(
     page_level_salt: bool = False,
     **kernel,
 ) -> DataFrame:
-    """The scale-default extraction plan: 1 scan + ≤2 shuffles.
+    """The scale-default extraction plan: 1 scan, no shuffle by default.
 
-    Default shape: [optional input-row repartition] → fused
-    explode/recognize Python stage → ``groupBy(url)`` assembly.  The
-    optional repartition salts on the *compressed input payloads*
-    (cheap) rather than on exploded rasters (expensive); documents are
-    the unit of work, which is the right granularity while page counts
-    are bounded (1-8 typical, hundreds worst-case ⇒ sub-second per
-    task).
+    ``url`` is the input's key (as ``sources/catalog.url_bucket`` and
+    the checkpoint assume): the output has one row per input row, as
+    ``oracle.extract_table`` does.
+
+    Default shape: [optional input-row repartition] → one fused
+    explode/recognize Python stage that emits each input row's document
+    row → the finishing select.  A document's pages never leave the
+    task that extracted them, so there is no assembly shuffle or
+    aggregate.  The optional repartition salts on the *compressed input
+    payloads* (cheap) rather than on exploded rasters (expensive);
+    documents are the unit of work, which is the right granularity
+    while page counts are bounded (1-8 typical, hundreds worst-case ⇒
+    sub-second per task).
 
     ``page_level_salt=True`` splits the same kernel around a
     per-(url, page) shuffle (explode → exchange → recognize) for
     pathological page-count skew — many-thousand-page documents whose
-    *single-document* work would otherwise straggle one task.
+    *single-document* work would otherwise straggle one task — and
+    gathers each document's pages back with one ``groupBy(url)``.
 
     ``kernel`` holds :func:`make_recognize_item`'s options.
     """
@@ -344,8 +385,9 @@ def extract_fused(
         items = scan_items(df, payload_col)
         if salt_partitions:
             items = items.repartition(salt_partitions, "url", "page")
-        return assemble_docs(recognize_items(items, **kernel))
+        return finish_docs(gather_docs(recognize_items(items, **kernel)))
     src = df
     if salt_partitions:
         src = src.repartition(salt_partitions, "url")
-    return assemble_docs(process_items(src, payload_col, **kernel))
+    return finish_docs(_recognize_stage(src, ["url", payload_col, "text"], explode, kernel,
+                                        per_document=True))

@@ -93,3 +93,29 @@ def test_curate_repetition_gate(spark, tmp_path):
                         max_dup_line_frac=None)
     assert {r["url"] for r in with_gate.collect()} == {"u/fresh"}
     assert {r["url"] for r in without.collect()} == {"u/spam", "u/fresh"}
+
+
+def test_funnel_counts_documents_every_gate_drops(spark, tmp_path):
+    """The funnel is observed on the extraction output before any gate:
+    a corrupt PDF (dropped by the extraction gate) and a repetitive text
+    (dropped by the repetition gate) are counted in ``docs_in``, and
+    each gate's counter is no larger than the one before it."""
+    from google_vision_ocr_spark.plans.curate import curate
+
+    spam = "repeat me\n" * 30
+    fresh = "\n".join(f"unique line number {i} with content words" for i in range(30))
+    t = pa.table({
+        "url": pa.array(["u/spam", "u/fresh", "u/corrupt"]),
+        "warc_ts": pa.array([None] * 3, pa.timestamp("us", tz="UTC")),
+        "html": pa.array([None, None, b"%SPDF" + b"\xff\xff\xff\x7f"], pa.binary()),
+        "text": pa.array([spam, fresh, None]),
+        "lang": pa.array(["en"] * 3),
+    })
+    src = str(tmp_path / "pages.parquet")
+    pq.write_table(t, src)
+    curated, obs = curate(spark.read.parquet(src), min_quality=0.0, min_tokens=1)
+    assert {r["url"] for r in curated.collect()} == {"u/fresh"}
+    funnel = obs.get
+    assert funnel["docs_in"] == 3
+    order = ["docs_in", "pass_extract", "pass_repetition", "pass_quality", "pass_lang"]
+    assert [funnel[k] for k in order] == [3, 2, 1, 1, 1]

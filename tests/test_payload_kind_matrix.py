@@ -5,17 +5,22 @@ the default fused stage and the ``page_level_salt`` split around its
 Images are built with the real ``formats`` encoders, so the keep-format
 rule (``ocr_service.py:177``), GIF normalization, the corrupt / zero-page
 SPDF fault paths and the unknown-format error row are all covered in
-one small frame."""
+one small frame.  A 240-page SPDF (the length of the long documents of
+the ``extract_pdf`` benchmark workload) pins page order, ``n_pages``
+and the byte spans of a document folded in one task (default shape) or
+gathered from four (salted shape)."""
 
 import pytest
 
 from google_vision_ocr_spark import formats, oracle
 from google_vision_ocr_spark.plans.fused import extract_fused
+from google_vision_ocr_spark.recognizers import FlakyStubRecognizer
 
 _GRAY = formats.rgb_to_gray(formats.render_page_rgb("matrix page 7"))
 
 PAYLOADS = {
     "spdf": formats.encode_spdf(["first page", "second page", "third page"]),
+    "spdf_240_pages": formats.encode_spdf([f"book page {i}" for i in range(1, 241)]),
     "spdf_zero_pages": formats.encode_spdf([]),
     "spdf_corrupt": b"%SPDF" + b"\xff\xff\xff\x7f",
     "png": formats.encode_png(_GRAY),
@@ -103,18 +108,41 @@ def test_kernel_options_reach_both_shapes(spark, outputs):
     assert sum(no_retry.values()) > sum(expected.values())
     assert errors(1) == errors(1, page_level_salt=True) == expected
 
-    blank = "".join(oracle.frame_page(p, "") for p in (1, 2, 3))
     for shape, kwargs in SHAPES.items():
         got = {r["url"]: (r["kind"], r["text"], r["n_pages"], r["n_errors"])
                for r in extract_fused(df, otsu=True, do_deskew=True, dpi=True,
                                       **kwargs).collect()}
         want = {url: (kind, text, n_pages, n_errors)
                 for url, (kind, text, _, n_pages, n_errors) in outputs[shape].items()}
-        assert want["u:spdf"][1] != blank
-        want["u:spdf"] = ("pdf", blank, 3, 0)
+        for url, n_pages in (("u:spdf", 3), ("u:spdf_240_pages", 240)):
+            blank = "".join(oracle.frame_page(p, "") for p in range(1, n_pages + 1))
+            assert want[url][1] != blank
+            want[url] = ("pdf", blank, n_pages, 0)
         assert got == want, shape
 
     jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup())
     with pytest.raises(TypeError, match="deskew"):
         extract_fused(df, deskew=True)
     assert set(spark.sparkContext.statusTracker().getJobIdsForGroup()) == jobs
+
+
+def test_partly_failed_document_matches_oracle(spark):
+    """A multi-page document some of whose pages fail recognition.  The
+    flaky recognizer with no retries fails the first sight of each
+    distinct page image in a task, so pages 1, 2 and 5 fail and the
+    repeats on pages 3 and 4 recognize.  The salted shape runs one
+    reduce task over one map output, so it too sees the pages in order;
+    both shapes equal the oracle over a fresh recognizer."""
+    row = {"url": "u:partly_failed",
+           "html": formats.encode_spdf(["alpha", "beta", "alpha", "beta", "gamma"]),
+           "text": None}
+    exp = oracle.extract_row(row, FlakyStubRecognizer())
+    assert (exp.n_pages, exp.n_errors) == (5, 3)
+    want = _project(exp.kind, exp.text, [(s.page, s.start, s.end) for s in exp.spans],
+                    exp.n_pages, exp.n_errors)
+    df = spark.createDataFrame([tuple(row.values())], _SCHEMA).coalesce(1)
+    for shape in ({}, {"page_level_salt": True, "salt_partitions": 1}):
+        (r,) = extract_fused(df, recognizer="flaky-stub", max_retries=0, **shape).collect()
+        got = _project(r["kind"], r["text"], [(s["page"], s["start"], s["end"]) for s in r["spans"]],
+                       r["n_pages"], r["n_errors"])
+        assert got == want, shape

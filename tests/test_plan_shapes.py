@@ -58,19 +58,33 @@ def test_cosine_topk_broadcasts_query_side(spark):
 
 
 def test_fused_extract_has_single_source_scan(spark, fixture_dir):
+    """Both shapes scan once.  The default shape and the flagship's
+    ``extract_documents_fused`` assemble each document in the task that
+    extracted it: no exchange, no aggregate.  Only the salted shape,
+    which spreads a document's pages across tasks, shuffles on
+    ``(url, page)`` and gathers the pages back with a ``groupBy(url)``."""
     import re
 
-    from google_vision_ocr_spark.plans.fused import extract_fused
+    from google_vision_ocr_spark.plans.fused import extract_documents_fused, extract_fused
 
     df = spark.read.parquet(fixture_dir["pages"])
     fused_plan = _plan(extract_fused(df))
     salted_plan = _plan(extract_fused(df, page_level_salt=True, salt_partitions=8))
+    # as many partitions as cores, so the flagship's fan-out adds nothing
+    docs = spark.createDataFrame([(1, "s", "hello world"), (2, "s", "x" * 1200)],
+                                 "doc_id long, source string, text string")
+    flagship_plan = _plan(extract_documents_fused(docs))
     assert fused_plan.count("Scan parquet") == 1
+    for plan in (fused_plan, flagship_plan):
+        assert plan.count("MapInArrow") == 1, plan
+        assert "Exchange" not in plan and "Aggregate" not in plan, plan
     # the salted shape is the same kernel split around the (url, page)
     # exchange: still one scan, exactly two Arrow-native Python stages
     assert salted_plan.count("Scan parquet") == 1
     assert salted_plan.count("MapInArrow") == 2
     assert re.search(r"Exchange hashpartitioning\(url#\d+, page#\d+", salted_plan), salted_plan
+    assert re.search(r"Exchange hashpartitioning\(url#\d+, \d+\)", salted_plan), salted_plan
+    assert re.search(r"ObjectHashAggregate\(keys=\[url#\d+\]", salted_plan), salted_plan
     assert "MapInPandas" not in salted_plan and "ArrowEvalPython" not in salted_plan
 
 
